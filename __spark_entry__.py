@@ -868,10 +868,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _run_lineage(spark, sf_dir):
         """The north rule's checkpoint/lineage/resume channel in the
         driver gate (previously pytest-only): run r0 extracts the EVEN
-        doc_ids through the versioned checkpoint sink, run r1 submits
-        ALL pages with resume=True — the anti-join must route exactly
-        the odd half through extraction — and the returned rollup
-        aggregates the per-partition lineage rows per run: totals,
+        doc_ids through the checkpoint sink (committed by its lineage
+        rows in ``{work}/lineage``), run r1 submits ALL pages with
+        resume=True — the anti-join against r0's committed rows must
+        route exactly the odd half through extraction — and the returned
+        rollup aggregates the per-partition lineage rows per run: totals,
         ok/error split, url range.  Partition-count and per-partition
         splits are parallelism-dependent and deliberately NOT in the
         output; the SUMS are exact and provably lossless against the
@@ -890,16 +891,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             run_batch(
                 pages.where(F.col("doc_id") % 2 == 0).drop("doc_id"),
-                work, run_ts=RUN_TS, run_id="r0", versioned=True,
+                work, run_ts=RUN_TS, run_id="r0",
             )
             run_batch(
                 pages.drop("doc_id"), work, run_ts=RUN_TS, run_id="r1",
-                resume=True, versioned=True,
+                resume=True,
             )
-            from pdf_parser_spark.sources import tableformat as tf
-
             out = (
-                tf.read_table(spark, f"{work}/lineage_tbl")
+                spark.read.parquet(f"{work}/lineage")
                 .groupBy("run_id")
                 .agg(
                     F.sum("n_rows").cast("long").alias("n_rows"),
@@ -2230,7 +2229,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # --- full extraction pipeline (non-SQL-expressible; rows-only) ---
         "extract_pipeline": extract_pipeline,
-        # versioned checkpoint + lineage + resume (north rule): two-run
+        # checkpoint + lineage + resume (north rule): two-run
         # rollup of the per-partition lineage sink; run r1's resume
         # anti-join must extract exactly the odd half
         "p_run_lineage": _run_lineage,
@@ -6884,7 +6883,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # dot segments: the SAME ''-seeded fold via list_reduce; the
         # synthesis flavors re-derived
-        "u_dot_segments": f"""
+        "u_dot_segments": rf"""
             WITH syn AS (
                 SELECT doc_id,
                        CASE doc_id % 6
@@ -7382,7 +7381,7 @@ def oracle_sql() -> dict[str, str]:
         # change magnitude: both-present docs, per-term full-outer counts,
         # |c_old - c_new| folded to exact bp; both revision flavors
         # re-derived
-        "d_change_magnitude": f"""
+        "d_change_magnitude": rf"""
             WITH oldt AS (
                 SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
             ), newt AS (
@@ -9522,7 +9521,7 @@ def oracle_sql() -> dict[str, str]:
         # BM25F: the t_bm25 chain with the anchor field merged in —
         # weighted tf / dl BEFORE saturation, either-field df, anchors
         # re-derived from the 2nd/3rd-token echo formula
-        "t_bm25f": f"""
+        "t_bm25f": rf"""
             WITH btoks AS (
                 SELECT doc_id, term FROM (
                     SELECT doc_id,
@@ -9977,7 +9976,7 @@ def oracle_sql() -> dict[str, str]:
         # global per-row sort exists in either engine
         # dup-by-tier: the shared tier map + the synthesis rule (a base
         # doc is dup iff it has an injected copy or a base fp twin)
-        "c_dup_by_tier": f"""
+        "c_dup_by_tier": rf"""
             WITH {_tiers_ctes},
             fpb AS (
                 SELECT doc_id,

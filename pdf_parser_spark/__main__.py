@@ -13,13 +13,16 @@ Reads the pages table (parquet dir or synthesizes a corpus with
 --synthesize N), runs the full batch pipeline (Arrow extraction ->
 checkpointed sink + lineage -> consistency sink), prints the fleet summary
 (reference cli.py:127-138) and the structural quality pass-rates.  --resume
-anti-joins already-extracted urls (failed/killed runs recompute nothing that
-reached the sink)."""
+anti-joins the urls of committed runs: a run is committed once its lineage
+rows exist, so a killed run's urls are extracted again and counted once.
+Each invocation gets a new run id (a UTC timestamp) unless --run-id names
+one; a run id already in the output dir is refused."""
 
 from __future__ import annotations
 
 import argparse
 import sys
+from datetime import datetime, timezone
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -28,10 +31,14 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--synthesize", type=int, default=0,
                    help="generate N synthetic pages instead of --input")
     p.add_argument("--output", required=True, help="output dir (extracted/lineage/consistency)")
-    p.add_argument("--run-id", default="r0")
+    p.add_argument("--run-id",
+                   default=datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S%fZ"),
+                   help="id of this run in the lineage sink; must be new to "
+                        "--output (default: the UTC start time)")
     p.add_argument("--run-ts", default="", help="run-scoped parsed_at literal (determinism)")
     p.add_argument("--resume", action="store_true",
-                   help="skip urls already in the extracted sink")
+                   help="skip urls of runs already committed to the "
+                        "extracted sink")
     p.add_argument("--master", default=None,
                    help="override master (default: whatever spark-submit set)")
     p.add_argument("--quality-report", action="store_true",
@@ -40,10 +47,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="collapse byte-identical pages (min-url keeper) "
                         "before extraction — crawl mirrors never reach the "
                         "Python stage")
-    p.add_argument("--versioned", action="store_true",
-                   help="commit the extracted/lineage sinks through the "
-                        "snapshot/manifest table format: one atomic version "
-                        "per run; resume sees only committed work")
     p.add_argument("--xbrl-dim", default=None, metavar="PATH|synth",
                    help="XBRL facts dimension: parquet path, or 'synth' for "
                         "the corpus-issuer synthetic dim; enables the V8 "
@@ -79,18 +82,14 @@ def main(argv: list[str] | None = None) -> int:
         final = run_batch(
             pages, args.output, run_ts=args.run_ts,
             run_id=args.run_id, resume=args.resume, xbrl_facts=xbrl_facts,
-            dedup=args.dedup, versioned=args.versioned,
+            dedup=args.dedup,
         )
         n = final.count()
 
+        from pdf_parser_spark.operators.checkpoint import committed_rows
         from pdf_parser_spark.operators.metrics import status_summary
 
-        if args.versioned:
-            from pdf_parser_spark.sources.tableformat import read_table
-
-            extracted = read_table(spark, f"{args.output}/extracted_tbl")
-        else:
-            extracted = spark.read.parquet(f"{args.output}/extracted")
+        extracted = committed_rows(spark, args.output)
         print(f"== batch complete: {n} documents -> {args.output}")
         for row in status_summary(extracted).collect():
             print(f"   {row['status']:>10}: {row['n_docs']}")

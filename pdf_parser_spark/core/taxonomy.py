@@ -52,21 +52,6 @@ def canonical_names() -> list[str]:
     return list(seen)
 
 
-def taxonomy_rows() -> list[tuple[str, str, str, int]]:
-    """Flatten to (section, canonical, alias, alias_rank) rows — the broadcast
-    dimension-table shape used by the relational normalization query (the
-    alias_rank column freezes YAML order for deterministic joins)."""
-    out: list[tuple[str, str, str, int]] = []
-    rank = 0
-    for section, _key, canonical, aliases in TAXONOMY_ROWS:
-        out.append((section, canonical, canonical, rank))
-        rank += 1
-        for alias in aliases:
-            out.append((section, canonical, alias, rank))
-            rank += 1
-    return out
-
-
 @lru_cache(maxsize=1)
 def _alias_scan_cache() -> list[tuple[str, str, int, dict[str, int]]]:
     """Per-alias precomputed (alias, canonical, len, char-multiset) for the

@@ -143,11 +143,3 @@ def extract_stage(
         narrow = salted_repartition(narrow, num_partitions)
     return narrow.mapInPandas(_extract_batches(run_ts), schema=RESULT_SCHEMA)
 
-
-def extracted_with_time(pages: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Re-attach warc_ts/lang to extraction results by url equi-join.
-
-    At cluster scale this is a shuffle join on the url key both sides already
-    hash by; AQE handles residual skew."""
-    side = pages.select("url", "warc_ts", "lang")
-    return extracted.join(side, on="url", how="left")

@@ -12,20 +12,6 @@ def status_summary(extracted: DataFrame) -> DataFrame:
     return extracted.groupBy("status").agg(F.count("*").alias("n_docs")).orderBy("status")
 
 
-def report_type_summary(extracted: DataFrame) -> DataFrame:
-    return (
-        extracted.where(F.col("status") == "ok")
-        .groupBy("report_type")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.avg("n_pages").alias("avg_pages"),
-            F.avg("n_sections").alias("avg_sections"),
-            F.avg("avg_confidence").alias("avg_confidence"),
-        )
-        .orderBy("report_type")
-    )
-
-
 def validation_rollup(extracted: DataFrame) -> DataFrame:
     """Fleet-level PASS/WARN/FAIL totals — the quality dashboard aggregation."""
     return (

@@ -73,14 +73,16 @@ def run_batch(
     resume: bool = False,
     xbrl_facts: DataFrame | None = None,
     dedup: bool = False,
-    versioned: bool = False,
 ) -> DataFrame:
     """Full batch run. Writes ``{out_dir}/extracted`` (+ ``lineage``) and
     ``{out_dir}/consistency``; returns the final consistency DataFrame.
 
-    With ``resume=True``, pages already present in the extracted sink are
+    With ``resume=True``, pages already committed to the extracted sink are
     anti-joined away first (north-rule resumability) and the relational
-    stages run over the union of old + new results.
+    stages run over the union of old + new committed results.  A run is
+    committed once its lineage rows exist (checkpoint.committed_rows), so
+    the urls of a run killed after its data write are extracted again, and
+    counted once.  `run_id` must be new to `out_dir`: a reused id raises.
 
     With ``xbrl_facts`` (the pre-materialized EDGAR-shaped dimension, the
     engine's stand-in for the reference's per-document HTTP fetch,
@@ -92,29 +94,15 @@ def run_batch(
     With ``dedup=True``, byte-identical pages (html+text fingerprint) are
     collapsed to their min-url representative BEFORE extraction — the mirror
     fraction of a web crawl never reaches the Python stage.
-
-    With ``versioned=True``, the extracted/lineage sinks commit through the
-    snapshot/manifest table format (checkpoint.write_checkpoint_versioned):
-    each run is one atomic snapshot, and resume sees only COMMITTED work —
-    a crashed run's partial files stay invisible instead of silently
-    marking urls done.
     """
-    from pdf_parser_spark.operators.checkpoint import (
-        pending_urls_versioned, write_checkpoint_versioned,
-    )
-
     spark = pages.sparkSession
-    pend = pending_urls_versioned if versioned else pending_urls
-    todo = pend(spark, pages, out_dir) if resume else pages
+    todo = pending_urls(spark, pages, out_dir) if resume else pages
     if dedup:
         todo = dedup_pages(todo)
     extracted = extract_stage(todo, run_ts=run_ts)
     # Relational stages read the materialized, column-pruned sink returned by
-    # the checkpoint writer (single listing/schema-inference pass).
-    if versioned:
-        materialized = write_checkpoint_versioned(extracted, out_dir, run_id=run_id)
-    else:
-        materialized = write_checkpoint(extracted, out_dir, run_id=run_id)
+    # the checkpoint writer (committed runs only).
+    materialized = write_checkpoint(extracted, out_dir, run_id=run_id)
     if xbrl_facts is not None:
         from pdf_parser_spark.operators.xbrl import fleet_cross_validate
 

@@ -3,6 +3,7 @@ metrics, streaming.  Runs on local[4]; marked slow-ish but still seconds."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -342,6 +343,11 @@ def test_run_batch_and_resume(spark):
             for r in lineage.groupBy("run_id").agg(F.sum("n_rows").alias("n")).collect()
         }
         assert by_run == {"r1": 6, "r2": 6}
+        # each run's lineage is one file, so its commit is one rename
+        lineage_files = [
+            f for f in os.listdir(f"{out_dir}/lineage") if f.endswith(".parquet")
+        ]
+        assert len(lineage_files) == 2
         # consistency table covers every url exactly once
         assert final2.select("url").distinct().count() == 12
         # filing_sequence is 1..n per company over the union
@@ -716,6 +722,17 @@ def test_job_cli_smoke(spark, monkeypatch, capsys):
         assert "batch complete" in printed and "structural quality" in printed
         assert spark.read.parquet(f"{out}/extracted").count() == 20
         assert spark.read.parquet(f"{out}/consistency").count() > 0
+        # a second call with --resume and the default (per-call) run id
+        # extracts nothing again: each url once, lineage sums equal rows
+        rc = job.main([
+            "--synthesize", "20", "--output", out,
+            "--run-ts", RUN_TS, "--resume",
+        ])
+        assert rc == 0
+        extracted = spark.read.parquet(f"{out}/extracted")
+        assert extracted.count() == extracted.select("url").distinct().count() == 20
+        lineage = spark.read.parquet(f"{out}/lineage")
+        assert lineage.agg(F.sum("n_rows")).first()[0] == 20
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -2373,39 +2390,58 @@ def test_merge_snapshot_null_keys_insert_and_never_prune(spark, tmp_path):
     assert sorted(vals) == ["NULLKEY", "NULLKEY2"]
 
 
-def test_versioned_checkpoint_crashed_run_invisible(spark, tmp_path):
-    """The resume property the manifest buys: a crashed run's orphan data
-    files do NOT mark urls done; a committed run's do."""
-    import shutil
-
-    from pdf_parser_spark.operators.checkpoint import (
-        pending_urls_versioned, write_checkpoint_versioned,
-    )
-    from pdf_parser_spark.operators.extract import extract_stage
-    from pdf_parser_spark.sources import tableformat as tf
-    from pdf_parser_spark.sources.pages import synthetic_pages
+def test_crash_after_data_write_resumes_exactly_once(spark, tmp_path, monkeypatch):
+    """Commit rule: a run killed after its data write but before its lineage
+    write is not done.  Resume extracts its urls again under a new run id;
+    the committed view, the lineage sums and the consistency sink each hold
+    every url once, and the killed run's id cannot be reused."""
+    from pdf_parser_spark.operators import checkpoint
+    from pdf_parser_spark.operators.pipeline import run_batch
 
     out = str(tmp_path / "out")
-    pages = synthetic_pages(spark, n_docs=12)
-    first = pages.where("xxhash64(url) % 2 = 0")
-    ext = extract_stage(first, run_ts="t")
-    mat = write_checkpoint_versioned(ext, out, "run1")
-    n_first = mat.count()
-    assert n_first == first.count()
-    # committed run's urls are no longer pending
-    pend = pending_urls_versioned(spark, pages, out)
-    assert pend.count() == 12 - n_first
-    # simulate a CRASHED second run: data files land, no version commit
-    committed = tf.snapshots(f"{out}/extracted_tbl")[-1]
-    orphan_dir = f"{out}/extracted_tbl/data/crashed"
-    shutil.copytree(
-        committed["added_files"][0].rsplit("/", 1)[0], orphan_dir
-    )
-    pend2 = pending_urls_versioned(spark, pages, out)
-    assert pend2.count() == 12 - n_first  # orphans invisible, urls still pending
-    # lineage snapshot committed alongside
-    lin = tf.read_table(spark, f"{out}/lineage_tbl")
-    assert lin.where("run_id = 'run1'").count() >= 1
+    pages = synthetic_pages(spark, 12)
+    half = pages.where("xxhash64(url) % 2 = 0")
+    n_half = half.count()
+
+    def killed(*_a, **_k):
+        raise RuntimeError("killed before the lineage write")
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "lineage_rows", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_batch(half, out, run_ts=RUN_TS, run_id="crashed")
+    # the killed attempt's data files are committed to the directory
+    on_disk = spark.read.parquet(f"{out}/extracted")
+    assert on_disk.where("run_id = 'crashed'").count() == n_half
+
+    final = run_batch(pages, out, run_ts=RUN_TS, run_id="r2", resume=True)
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.agg(F.sum("n_rows")).first()[0] == 12
+    assert {r["run_id"] for r in lineage.select("run_id").collect()} == {"r2"}
+
+    committed = [r["url"] for r in checkpoint.committed_rows(spark, out).collect()]
+    all_urls = [r["url"] for r in pages.select("url").collect()]
+    assert sorted(committed) == sorted(all_urls)
+    consistency = [r["url"] for r in final.select("url").collect()]
+    assert sorted(consistency) == sorted(all_urls)
+    assert pending_urls(spark, pages, out).count() == 0
+
+    with pytest.raises(ValueError, match="crashed"):
+        run_batch(pages, out, run_ts=RUN_TS, run_id="crashed", resume=True)
+
+
+def test_pending_urls_raises_on_unreadable_sink(spark, tmp_path):
+    """Only an absent sink means nothing is done: a sink that cannot be read
+    raises instead of silently sending every page back through extraction."""
+    sink = tmp_path / "out" / "extracted" / "status=ok"
+    sink.mkdir(parents=True)
+    (sink / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        pending_urls(spark, synthetic_pages(spark, 4), str(tmp_path / "out"))
+    # a missing sink, or one holding only a killed write's _temporary, is empty
+    (tmp_path / "fresh" / "extracted" / "_temporary").mkdir(parents=True)
+    for out in ("absent", "fresh"):
+        assert pending_urls(spark, synthetic_pages(spark, 4), str(tmp_path / out)).count() == 4
 
 
 def test_scan_table_zone_map_pruning(spark, tmp_path):
@@ -2466,31 +2502,6 @@ def test_expire_snapshots_gc(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "metadata", "v1.json"))
     for f in tf.snapshots(path)[-1]["all_files"]:
         assert os.path.exists(f)  # nothing reachable was deleted
-
-
-def test_run_batch_versioned_and_resume(spark, tmp_path):
-    """run_batch(versioned=True): extracted/lineage commit as manifest
-    snapshots; a resumed run extracts only the pending half and the final
-    consistency output covers the full corpus."""
-    from pdf_parser_spark.operators.pipeline import run_batch
-    from pdf_parser_spark.sources import tableformat as tf
-
-    out = str(tmp_path / "vout")
-    pages = synthetic_pages(spark, 12)
-    half = pages.where("xxhash64(url) % 2 = 0")
-    run_batch(half, out, run_ts=RUN_TS, run_id="r1", versioned=True)
-    v1 = tf.current_version(f"{out}/extracted_tbl")
-    n_half = tf.read_table(spark, f"{out}/extracted_tbl").count()
-    assert n_half == half.count()
-    final = run_batch(
-        pages, out, run_ts=RUN_TS, run_id="r2", resume=True, versioned=True
-    )
-    assert final.count() == 12
-    # second run appended exactly the pending half as a NEW snapshot
-    assert tf.current_version(f"{out}/extracted_tbl") == v1 + 1
-    added = tf.snapshots(f"{out}/extracted_tbl")[-1]["added_rows"]
-    assert added == 12 - n_half
-    assert tf.read_table(spark, f"{out}/extracted_tbl").count() == 12
 
 
 def test_review_fixes_media_robustness():

@@ -13,11 +13,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 
 def profile(master: str, n_docs: int) -> dict[str, float]:
-    from pdf_parser_spark.operators.checkpoint import lineage_rows
+    from pdf_parser_spark.operators.checkpoint import write_checkpoint
     from pdf_parser_spark.operators.consistency import finalize
     from pdf_parser_spark.operators.extract import extract_stage
     from pdf_parser_spark.operators.pipeline import CONSISTENCY_COLS
@@ -39,28 +37,17 @@ def profile(master: str, n_docs: int) -> dict[str, float]:
         try:
             t0 = time.perf_counter()
             extracted = extract_stage(pages, run_ts="2026-08-16T00:00:00Z")
-            extracted.withColumn("run_id", F.lit("p")).write.mode(
-                "append").partitionBy("status").parquet(f"{out_dir}/extracted")
-            times["1_extract_write"] = time.perf_counter() - t0
+            materialized = write_checkpoint(extracted, out_dir, run_id="p")
+            times["1_extract_sink"] = time.perf_counter() - t0
 
             t0 = time.perf_counter()
-            written = (
-                spark.read.parquet(f"{out_dir}/extracted")
-                .where(F.col("run_id") == "p").select("url", "status")
-            )
-            lineage_rows(written, "p").write.mode("append").parquet(
-                f"{out_dir}/lineage")
-            times["2_lineage"] = time.perf_counter() - t0
-
-            t0 = time.perf_counter()
-            materialized = spark.read.parquet(f"{out_dir}/extracted")
             final = finalize(materialized).select(*CONSISTENCY_COLS)
             final.write.mode("overwrite").parquet(f"{out_dir}/consistency")
-            times["3_finalize_write"] = time.perf_counter() - t0
+            times["2_finalize_write"] = time.perf_counter() - t0
 
             t0 = time.perf_counter()
             spark.read.parquet(f"{out_dir}/consistency").count()
-            times["4_readback"] = time.perf_counter() - t0
+            times["3_readback"] = time.perf_counter() - t0
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
         times["total"] = sum(times.values())
