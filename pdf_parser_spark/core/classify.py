@@ -111,18 +111,15 @@ def find_filing_start_page(page_texts: Sequence[str]) -> int:
 
 # --- scanned-document rejection (ref pdf_extract.py:253-266) ---
 
-def scanned_fraction(page_texts: Sequence[str], min_chars: int = 50) -> float:
-    """Fraction of pages with fewer than min_chars of stripped text."""
-    if not page_texts:
-        return 0.0
-    sparse = sum(1 for t in page_texts if len(t.strip()) < min_chars)
-    return sparse / len(page_texts)
+SCAN_MIN_CHARS = 50       # a page with fewer text chars smells image-only
+SCAN_THRESHOLD_BP = 8000  # STRICTLY > 80% sparse pages -> scanned (ref rule)
 
 
-def is_scanned(page_texts: Sequence[str], threshold: float = 0.8, min_chars: int = 50) -> bool:
-    """True when the document looks image-based.  Unlike the reference (which
-    raises — pdf_extract.py:262), the engine routes these rows to the error
-    sink via a status column (fail-soft per row)."""
-    if not page_texts:
-        return False
-    return scanned_fraction(page_texts, min_chars) > threshold
+def is_scanned(page_texts: Sequence[str]) -> bool:
+    """True when STRICTLY more than SCAN_THRESHOLD_BP basis points of the
+    pages have fewer than SCAN_MIN_CHARS of stripped text, compared exactly in integers (4 sparse pages of 5
+    is not scanned).  Unlike the reference (which raises —
+    pdf_extract.py:262), the engine routes these rows to the error sink
+    via a status column (fail-soft per row)."""
+    sparse = sum(1 for t in page_texts if len(t.strip()) < SCAN_MIN_CHARS)
+    return 10000 * sparse > SCAN_THRESHOLD_BP * len(page_texts)

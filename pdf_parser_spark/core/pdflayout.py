@@ -153,29 +153,37 @@ def _load_objects(data: bytes) -> dict[int, tuple[bytes, bytes | None]]:
     return objs
 
 
-def _page_streams(data: bytes) -> list[bytes]:
-    """Content-stream bytes in PAGE ORDER: trailer /Root -> catalog
-    /Pages -> /Kids order -> each page's /Contents, inflating
-    /FlateDecode.  Unknown filters / missing pieces fail soft to []."""
+def _catalog(data: bytes) -> tuple[dict, bytes | None, list[int]]:
+    """(objects, catalog dict bytes or None, page object numbers in /Kids
+    order): the one trailer /Root -> catalog /Pages -> /Kids walk.  A kid
+    number may be dangling (no such object); callers decide whether it
+    still takes a page number.  Missing pieces fail soft to no catalog
+    and no kids."""
     objs = _load_objects(data)
     tm = re.search(rb"/Root\s+(\d+)\s+0\s+R", data[data.rfind(b"trailer"):])
-    if not tm:
-        return []
-    root = objs.get(int(tm.group(1)))
-    pages_ref = _ref(root[0], rb"/Pages") if root else None
-    pages = objs.get(pages_ref) if pages_ref is not None else None
-    if pages is None:
-        return []
-    km = re.search(rb"/Kids\s*\[([^\]]*)\]", pages[0])
-    if not km:
-        return []
+    root = objs.get(int(tm.group(1))) if tm else None
+    if root is None:
+        return objs, None, []
+    pages = objs.get(_ref(root[0], rb"/Pages"))
+    km = re.search(rb"/Kids\s*\[([^\]]*)\]", pages[0]) if pages else None
+    if km is None:
+        return objs, root[0], []
+    kids = [int(k.group(1))
+            for k in re.finditer(rb"(\d+)\s+0\s+R", km.group(1))]
+    return objs, root[0], kids
+
+
+def _page_streams(data: bytes) -> list[bytes]:
+    """Content-stream bytes in PAGE ORDER: each existing /Kids page's
+    /Contents (dangling kids are skipped), inflating /FlateDecode.
+    Unknown filters / missing pieces fail soft to []."""
+    objs, _, kids = _catalog(data)
     out = []
-    for kid in re.finditer(rb"(\d+)\s+0\s+R", km.group(1)):
-        page = objs.get(int(kid.group(1)))
+    for num in kids:
+        page = objs.get(num)
         if page is None:
             continue
-        cref = _ref(page[0], rb"/Contents")
-        content = objs.get(cref) if cref is not None else None
+        content = objs.get(_ref(page[0], rb"/Contents"))
         if content is None or content[1] is None:
             out.append(b"")
             continue
@@ -259,22 +267,32 @@ def _runs(stream: bytes) -> list[tuple[float, float, float, str]]:
     return runs
 
 
+def _line_runs(
+    runs: list[tuple[float, float, float, str]],
+) -> list[list[tuple[float, float, float, str]]]:
+    """Runs -> lines of runs in reading order — the one place the
+    run->line rule lives: runs sorted top-down then left-right, and a
+    run joins the current line when its y is within LINE_TOL of the
+    line's first run (parse_layout, page_char_counts and both table
+    strategies see the same lines)."""
+    lines: list[list[tuple[float, float, float, str]]] = []
+    for r in sorted(runs, key=lambda r: (-r[1], r[0])):
+        if lines and abs(lines[-1][0][1] - r[1]) <= LINE_TOL:
+            lines[-1].append(r)
+        else:
+            lines.append([r])
+    return lines
+
+
 def _group_lines(
     runs: list[tuple[float, float, float, str]],
 ) -> list[tuple[float, float, str]]:
-    """Runs -> (y, size, text) lines: grouped by y within LINE_TOL,
-    x-sorted within a line, joined with single spaces — the one place
-    the run->line rule lives (parse_layout and page_char_counts must
-    count the same characters)."""
-    runs = sorted(runs, key=lambda r: (-r[1], r[0]))
-    lines: list[tuple[float, float, str]] = []
-    for rx, ry, rsize, rtext in runs:
-        if lines and abs(lines[-1][0] - ry) <= LINE_TOL:
-            py, psize, ptext = lines[-1]
-            lines[-1] = (py, max(psize, rsize), ptext + " " + rtext)
-        else:
-            lines.append((ry, rsize, rtext))
-    return lines
+    """Runs -> (y, size, text) lines over _line_runs: the first run's y,
+    the largest run size, run texts joined with single spaces."""
+    return [
+        (line[0][1], max(r[2] for r in line), " ".join(r[3] for r in line))
+        for line in _line_runs(runs)
+    ]
 
 
 def page_char_counts(data: bytes) -> list[int]:
@@ -380,8 +398,8 @@ _RULE_OP = re.compile(
     rb"\((?:[^()\\]|\\.)*\)"
     rb"|(?P<mx>-?[0-9.]+)\s+(?P<my>-?[0-9.]+)\s+m(?![\w*])"
     rb"|(?P<lx>-?[0-9.]+)\s+(?P<ly>-?[0-9.]+)\s+l(?![\w*])"
-    rb"|(?P<rx>-?[0-9.]+)\s+(?P<ry>-?[0-9.]+)\s+(?P<rw>[0-9.]+)\s+"
-    rb"(?P<rh>[0-9.]+)\s+re(?![\w*])"
+    rb"|(?P<rx>-?[0-9.]+)\s+(?P<ry>-?[0-9.]+)\s+(?P<rw>-?[0-9.]+)\s+"
+    rb"(?P<rh>-?[0-9.]+)\s+re(?![\w*])"
     rb"|(?<![\w*)])(?P<paint>[SsBbFfn]\*?)(?![\w*])"
 )
 
@@ -470,14 +488,13 @@ def _ruled_cells(
             rx, ry = r[0], r[1]
             if not (bot <= ry <= top and xs[0] <= rx <= xs[-1]):
                 continue
-            row = next(
-                (i for i in range(len(gys) - 1)
-                 if gys[i + 1] < ry <= gys[i]), None)
-            col = next(
-                (j for j in range(len(xs) - 1)
-                 if xs[j] <= rx < xs[j + 1]), None)
-            if row is not None and col is not None:
-                cells.setdefault((row, col), []).append(r)
+            # a run ON the bottom h-ruling or the rightmost v-ruling
+            # belongs to the band it borders, not to no band at all
+            row = next((i for i in range(len(gys) - 2)
+                        if ry > gys[i + 1]), len(gys) - 2)
+            col = next((j for j in range(len(xs) - 2)
+                        if rx < xs[j + 1]), len(xs) - 2)
+            cells.setdefault((row, col), []).append(r)
         if not cells:
             continue
         table_id += 1
@@ -537,17 +554,12 @@ def _page_tables(stream: bytes, page_no: int) -> tuple[str, list[dict]]:
     ruled = _ruled_cells(runs, *_rulings(stream), page_no)
     if ruled:
         return "ruled", ruled
-    if not FINANCIAL_HINT_RE.search(" ".join(r[3] for r in runs)):
+    lines = _line_runs(runs)
+    # the hint reads the page in reading order, not content-stream order
+    if not FINANCIAL_HINT_RE.search(
+            " ".join(r[3] for line in lines for r in line)):
         return "none", []
     out: list[dict] = []
-    runs.sort(key=lambda r: (-r[1], r[0]))
-    # group into lines by y tolerance (same rule as parse_layout)
-    lines: list[list[tuple[float, float, float, str]]] = []
-    for r in runs:
-        if lines and abs(lines[-1][0][1] - r[1]) <= LINE_TOL:
-            lines[-1].append(r)
-        else:
-            lines.append([r])
     table_id = -1
     band: list[list[tuple[float, float, float, str]]] = []
 
@@ -600,15 +612,8 @@ def parse_outline(data: bytes) -> list[dict]:
     """bytes -> pre-order outline records ``{ord, level, title}`` — a
     depth-first walk over /First (child) before /Next (sibling), titles
     unescaped; cycles and dangling refs terminate fail-soft."""
-    objs = _load_objects(data)
-    tm = re.search(rb"/Root\s+(\d+)\s+0\s+R", data[data.rfind(b"trailer"):])
-    if not tm:
-        return []
-    root = objs.get(int(tm.group(1)))
-    if root is None:
-        return []
-    ol_ref = _ref(root[0], rb"/Outlines")
-    ol = objs.get(ol_ref) if ol_ref is not None else None
+    objs, root, _ = _catalog(data)
+    ol = objs.get(_ref(root, rb"/Outlines")) if root is not None else None
     if ol is None:
         return []
     out: list[dict] = []
@@ -623,10 +628,7 @@ def parse_outline(data: bytes) -> list[dict]:
         if item is None:
             continue
         m = re.search(rb"/Title\s*\(((?:[^()\\]|\\.)*)\)", item[0])
-        title = (
-            _UNESCAPE.sub(rb"\1", m.group(1)).decode("latin-1", "replace")
-            if m else ""
-        )
+        title = _decode_str(m.group(1)) if m else ""
         out.append({"ord": len(out), "level": level, "title": title})
         # push sibling FIRST so the child (pushed last) pops next:
         # pre-order, /First before /Next
@@ -642,22 +644,10 @@ def parse_links(data: bytes) -> list[dict]:
     ingress (a crawler that only parses <a href> never sees the links
     inside the web's PDFs).  Non-link annots and non-URI actions are
     skipped; dangling refs fail soft."""
-    objs = _load_objects(data)
-    tm = re.search(rb"/Root\s+(\d+)\s+0\s+R", data[data.rfind(b"trailer"):])
-    if not tm:
-        return []
-    root = objs.get(int(tm.group(1)))
-    pages_ref = _ref(root[0], rb"/Pages") if root else None
-    pages = objs.get(pages_ref) if pages_ref is not None else None
-    if pages is None:
-        return []
-    km = re.search(rb"/Kids\s*\[([^\]]*)\]", pages[0])
-    if not km:
-        return []
+    objs, _, kids = _catalog(data)
     out = []
-    for page_no, kid in enumerate(re.finditer(rb"(\d+)\s+0\s+R",
-                                              km.group(1))):
-        page = objs.get(int(kid.group(1)))
+    for page_no, num in enumerate(kids):  # a dangling kid keeps its number
+        page = objs.get(num)
         if page is None:
             continue
         am = re.search(rb"/Annots\s*\[([^\]]*)\]", page[0])
@@ -671,8 +661,7 @@ def parse_links(data: bytes) -> list[dict]:
             um = re.search(rb"/URI\s*\(((?:[^()\\]|\\.)*)\)", annot[0])
             if um is None:
                 continue
-            uri = _UNESCAPE.sub(rb"\1", um.group(1)).decode(
-                "latin-1", "replace")
-            out.append({"page_no": page_no, "ord": ord_, "uri": uri})
+            out.append({"page_no": page_no, "ord": ord_,
+                        "uri": _decode_str(um.group(1))})
             ord_ += 1
     return out

@@ -51,14 +51,6 @@ def _char_runs(line: str) -> list[tuple[str, int]]:
     return runs
 
 
-def _collapse_with_factor(line: str, factor: int) -> str | None:
-    """Collapse assuming each glyph repeats `factor` times; None when the run
-    structure doesn't fit (ref pdf_extract.py:82-130)."""
-    if not line:
-        return None
-    return _collapse_runs(_char_runs(line), factor)
-
-
 def _collapse_runs(runs: list[tuple[str, int]], factor: int) -> str | None:
     collapsed: list[str] = []
     matches = 0

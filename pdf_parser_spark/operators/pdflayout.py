@@ -1,15 +1,24 @@
 """PDF layout extraction over a corpus: deterministic PDF synthesis +
-the Arrow stage that runs `core.pdflayout.parse_layout` per document.
+the Arrow stage that runs the `core.pdflayout` parsers per document.
 
 This is the byte-level half of the north rule's "PDF layout parsing
 (page/block/line segmentation, font-size and position heuristics)": the
 reference delegates bytes->runs to pdfplumber (SURVEY §2.1 S2,
 `pdf_extract.py:217-250`) and owns everything after; here the engine
 owns the bytes too — xref-driven object walk, FlateDecode inflation,
-text-operator interpretation — inside ONE mapInPandas stage, so at
+text-operator interpretation — inside ONE Arrow stage, so at
 10^12 documents the whole parse rides the scan with no shuffle and no
 per-row Python (one Arrow batch = many documents, the same shape as the
 extraction pipeline's stage).
+
+The module has one of each piece: one PDF writer (`_write_pdf` over
+numbered object bodies, `_stream` for content streams) behind every
+`make_*` synthesizer, one synthesis stage (`_synthesize`) behind every
+`synthetic_*` face, and one per-document parse stage (`_parse_stage`)
+behind every `pdf_*` face — each face differs only in the payload
+function or the `core.pdflayout` parser it plugs in.  No face fuses
+several parsers over one frame: every caller runs one face per media
+frame, so a fused kernel would only add work.
 
 Synthesis doctrine: every structural knob (page count, paragraph line
 counts, Flate vs plain, parenthesis escapes) is doc_id arithmetic the
@@ -27,9 +36,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.core.pdflayout import parse_layout
+from pdf_parser_spark.core.classify import SCAN_MIN_CHARS, SCAN_THRESHOLD_BP
+from pdf_parser_spark.core.pdflayout import (
+    page_char_counts, parse_layout, parse_links, parse_outline, parse_tables,
+    table_strategy,
+)
 
 PDF_CORRUPT_MOD = 13   # doc_id % 13 == 0 -> no parseable xref: zero rows
+_NO_XREF = b"%PDF-1.4\nno xref"  # the corrupt payload of every face but one
 
 # layout geometry shared by synthesis and the SQL oracle (tenths = x10)
 HEAD_Y, HEAD_SIZE = 720, 18
@@ -90,45 +104,59 @@ def _content_stream(doc_id: int, p: int) -> bytes:
     return b"\n".join(parts)
 
 
+def _write_pdf(bodies: list[bytes]) -> bytes:
+    """The one PDF writer: `bodies[i]` is object i + 1, written in number
+    order after the header, then a correct xref table, a trailer whose
+    /Root is object 1, and startxref."""
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, body in enumerate(bodies, start=1):
+        offsets.append(len(out))
+        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
+    xref_at = len(out)
+    out.extend(b"xref\n0 %d\n" % (len(bodies) + 1))
+    out.extend(b"0000000000 65535 f \n")
+    for off in offsets:
+        out.extend(b"%010d 00000 n \n" % off)
+    out.extend(
+        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
+        % (len(bodies) + 1, xref_at)
+    )
+    return bytes(out)
+
+
+def _stream(content: bytes, flate: bool) -> bytes:
+    """A content-stream object body, FlateDecode-compressed when `flate`."""
+    filt = b""
+    if flate:
+        content, filt = zlib.compress(content), b" /Filter /FlateDecode"
+    return (b"<< /Length %d%s >>\nstream\n" % (len(content), filt)
+            + content + b"\nendstream")
+
+
+def _page_tree(pages: list[bytes], flate: bool = False) -> list[bytes]:
+    """Object bodies of catalog (1) -> pages (2) -> one page/contents
+    pair per content stream (3 + 2p, 4 + 2p)."""
+    kids = b" ".join(b"%d 0 R" % (3 + 2 * p) for p in range(len(pages)))
+    bodies = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % len(pages),
+    ]
+    for p, content in enumerate(pages):
+        bodies.append(b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
+                      % (4 + 2 * p))
+        bodies.append(_stream(content, flate))
+    return bodies
+
+
 def make_pdf(doc_id: int) -> bytes:
     """A real (minimal) PDF 1.4: catalog, pages tree, one page object +
     content stream per page (FlateDecode for even doc_ids, plain
     otherwise), a correct xref table, trailer, startxref."""
     n_pages = 1 if doc_id % 4 == 3 else 2
-    flate = doc_id % 2 == 0
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-
-    def obj(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
-
-    page_nums = [3 + 2 * p for p in range(n_pages)]
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages)
-    for p, num in enumerate(page_nums):
-        obj(num, b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
-            % (num + 1))
-        stream = _content_stream(doc_id, p)
-        filt = b""
-        if flate:
-            stream = zlib.compress(stream)
-            filt = b" /Filter /FlateDecode"
-        obj(num + 1,
-            b"<< /Length %d%s >>\nstream\n" % (len(stream), filt)
-            + stream + b"\nendstream")
-    n_objs = 2 + 2 * n_pages
-    xref_at = len(out)
-    out.extend(b"xref\n0 %d\n" % (n_objs + 1))
-    out.extend(b"0000000000 65535 f \n")
-    for num in range(1, n_objs + 1):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (n_objs + 1, xref_at)
-    )
-    return bytes(out)
+    return _write_pdf(_page_tree(
+        [_content_stream(doc_id, p) for p in range(n_pages)],
+        flate=doc_id % 2 == 0))
 
 
 def synthetic_pdf_payload(doc_id: int) -> bytes:
@@ -137,16 +165,54 @@ def synthetic_pdf_payload(doc_id: int) -> bytes:
     return make_pdf(doc_id)
 
 
-def synthetic_pdfs(df: DataFrame) -> DataFrame:
+def _synthesize(df: DataFrame, payload_fn) -> DataFrame:
+    """(doc_id, payload) with payload_fn(doc_id) -> bytes — the one
+    synthesis stage: one Arrow batch of doc ids in, their PDFs out."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
-                "payload": [synthetic_pdf_payload(int(d))
-                            for d in pdf["doc_id"]],
+                "payload": [payload_fn(int(d)) for d in pdf["doc_id"]],
             })
 
     return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+
+
+def _no_xref_or(make):
+    """payload_fn: the corrupt _NO_XREF bytes for doc_id % PDF_CORRUPT_MOD
+    == 0, make(doc_id) otherwise."""
+    return lambda d: _NO_XREF if d % PDF_CORRUPT_MOD == 0 else make(d)
+
+
+def _parse_stage(media: DataFrame, payload_col: str, parse, schema: str,
+                 order: list[str]) -> DataFrame:
+    """The one per-document parse stage: ONE Arrow stage over (doc_id,
+    payload) in which parse(bytes) -> records runs per document, each
+    record becoming a row keyed by its doc_id; the columns after doc_id
+    are the schema's own.  Corrupt documents yield whatever their parser
+    makes of them — zero rows for the row parsers (fail-soft, the
+    scanned-doc doctrine)."""
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: dict[str, list] = {c: [] for c in cols}
+            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+                for rec in parse(bytes(payload)):
+                    out["doc_id"].append(int(doc_id))
+                    for c in cols[1:]:
+                        out[c].append(rec[c])
+            yield pd.DataFrame(out)
+
+    return (
+        media.select("doc_id", payload_col)
+        .mapInPandas(fn, schema)
+        .orderBy(*order)
+    )
+
+
+def synthetic_pdfs(df: DataFrame) -> DataFrame:
+    return _synthesize(df, synthetic_pdf_payload)
 
 
 LAYOUT_SCHEMA = (
@@ -162,25 +228,8 @@ def pdf_layout(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     inflate -> text runs -> line/block segmentation -> heading flags,
     all inside `core.pdflayout.parse_layout`; corrupt documents yield
     zero rows (fail-soft, the scanned-doc doctrine)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["page_no", "block_id", "line_id", "font_tenths",
-                "y_tenths", "is_heading", "text"]
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": []}
-            out.update({c: [] for c in cols})
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse_layout(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    for c in cols:
-                        out[c].append(rec[c])
-            yield pd.DataFrame(out)
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, LAYOUT_SCHEMA)
-        .orderBy("doc_id", "page_no", "block_id", "line_id")
-    )
+    return _parse_stage(media, payload_col, parse_layout, LAYOUT_SCHEMA,
+                        ["doc_id", "page_no", "block_id", "line_id"])
 
 
 def pdf_text(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -196,7 +245,6 @@ def pdf_text(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     block -> page -> document — not a second Python pass, with in-group
     order made explicit everywhere (array_sort on (line/block/page) key
     structs, never a shuffle-order accident)."""
-    from pyspark.sql import functions as F
 
     def _joined(key_col, text_col, sep):
         return F.concat_ws(
@@ -300,47 +348,12 @@ def make_table_pdf(doc_id: int) -> bytes:
         parts.append(b"BT /F1 10 Tf 72 60 Td ("
                      + _esc(f"Statements of operations {doc_id}")
                      + b") Tj ET")
-    content = b"\n".join(parts)
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-
-    def obj(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
-
-    flate = doc_id % 2 == 0
-    body, filt = content, b""
-    if flate:
-        body, filt = zlib.compress(content), b" /Filter /FlateDecode"
-    obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>")
-    obj(4, b"<< /Length %d%s >>\nstream\n" % (len(body), filt)
-        + body + b"\nendstream")
-    xref_at = len(out)
-    out.extend(b"xref\n0 5\n0000000000 65535 f \n")
-    for num in range(1, 5):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(b"trailer\n<< /Size 5 /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-               % xref_at)
-    return bytes(out)
+    return _write_pdf(_page_tree([b"\n".join(parts)],
+                                 flate=doc_id % 2 == 0))
 
 
 def synthetic_table_pdfs(df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    (b"%PDF-1.4\nno xref"
-                     if int(d) % PDF_CORRUPT_MOD == 0
-                     else make_table_pdf(int(d)))
-                    for d in pdf["doc_id"]
-                ],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return _synthesize(df, _no_xref_or(make_table_pdf))
 
 
 TABLES_SCHEMA = (
@@ -358,32 +371,15 @@ def pdf_tables(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     3-level nesting is exactly what the reference's table-collapse
     operators (core/tables.py T1+) consume.  Same one-Arrow-stage shape
     as pdf_layout; corrupt documents yield zero rows."""
-    from pdf_parser_spark.core.pdflayout import parse_tables
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["page_no", "table_id", "row", "col", "x_tenths",
-                "y_tenths", "text"]
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": []}
-            out.update({c: [] for c in cols})
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse_tables(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    for c in cols:
-                        out[c].append(rec[c])
-            yield pd.DataFrame(out)
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, TABLES_SCHEMA)
-        .orderBy("doc_id", "page_no", "table_id", "row", "col")
-    )
+    return _parse_stage(media, payload_col, parse_tables, TABLES_SCHEMA,
+                        ["doc_id", "page_no", "table_id", "row", "col"])
 
 
 # --- scanned-document rejection from raw bytes (reference S3) ------------
 
-SCAN_MIN_CHARS = 50    # a page with fewer text chars smells image-only
-SCAN_THRESHOLD_BP = 8000  # STRICTLY > 80% sparse pages -> scanned (ref rule)
+# SCAN_MIN_CHARS / SCAN_THRESHOLD_BP are imported from core.classify, the
+# rule's one home (the flagship's is_scanned reads the same two numbers),
+# and stay importable from here for the p_pdf_scanned oracle
 
 
 def make_scan_pdf(doc_id: int) -> bytes:
@@ -411,50 +407,22 @@ def assemble_pdf(pages: list[bytes]) -> bytes:
     — the synthesis backbone behind make_scan_pdf, exposed so tests can
     build arbitrary page mixes (boundary sparse ratios, zero-run
     pages)."""
-    n_pages = len(pages)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-
-    def obj(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
-
-    page_nums = [3 + 2 * p for p in range(n_pages)]
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages)
-    for p, num in enumerate(page_nums):
-        obj(num, b"<< /Type /Page /Parent 2 0 R /Contents %d 0 R >>"
-            % (num + 1))
-        obj(num + 1, b"<< /Length %d >>\nstream\n" % len(pages[p])
-            + pages[p] + b"\nendstream")
-    n_objs = 2 + 2 * n_pages
-    xref_at = len(out)
-    out.extend(b"xref\n0 %d\n" % (n_objs + 1))
-    out.extend(b"0000000000 65535 f \n")
-    for num in range(1, n_objs + 1):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (n_objs + 1, xref_at)
-    )
-    return bytes(out)
+    return _write_pdf(_page_tree(pages))
 
 
 def synthetic_scan_pdfs(df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    (b"%PDF-1.4\nno xref"
-                     if int(d) % PDF_CORRUPT_MOD == 0
-                     else make_scan_pdf(int(d)))
-                    for d in pdf["doc_id"]
-                ],
-            })
+    return _synthesize(df, _no_xref_or(make_scan_pdf))
 
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+
+def _scan_verdict(data: bytes) -> list[dict]:
+    """One record per document: its page and sparse-page counts, the
+    exact integer sparse basis points (10000 for zero pages) and the
+    strict > SCAN_THRESHOLD_BP verdict."""
+    chars = page_char_counts(data)
+    n_sparse = sum(1 for c in chars if c < SCAN_MIN_CHARS)
+    bp = 10000 * n_sparse // len(chars) if chars else 10000
+    return [{"n_pages": len(chars), "n_sparse_pages": n_sparse,
+             "sparse_bp": bp, "scanned": bp > SCAN_THRESHOLD_BP}]
 
 
 def pdf_scanned_audit(media: DataFrame,
@@ -477,36 +445,14 @@ def pdf_scanned_audit(media: DataFrame,
     pages (corrupt xref) count as scanned with n_pages 0 — unparseable
     and image-only land in the same reject lane.
 
-    ONE Arrow stage emitting the per-doc (n_pages, n_sparse_pages) pair
-    directly — the per-doc fold is bounded by page count and happens
-    inside the kernel, so the JVM side is a pure projection: no groupBy,
-    no join, no shuffle at all before the presentation sort."""
-    from pdf_parser_spark.core.pdflayout import page_char_counts
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids, n_pages, n_sparse = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                chars = page_char_counts(bytes(payload))
-                doc_ids.append(int(doc_id))
-                n_pages.append(len(chars))
-                n_sparse.append(
-                    sum(1 for c in chars if c < SCAN_MIN_CHARS))
-            yield pd.DataFrame({
-                "doc_id": doc_ids, "n_pages": n_pages,
-                "n_sparse_pages": n_sparse,
-            })
-
-    counted = media.select("doc_id", payload_col).mapInPandas(
-        fn, "doc_id long, n_pages long, n_sparse_pages long")
-    bp = F.expr(
-        "CASE WHEN n_pages = 0 THEN 10000 "
-        "ELSE 10000 * n_sparse_pages div n_pages END")
-    return counted.select(
-        "doc_id", "n_pages", "n_sparse_pages",
-        bp.cast("long").alias("sparse_bp"),
-        (bp > SCAN_THRESHOLD_BP).alias("scanned"),
-    ).orderBy("doc_id")
+    ONE Arrow stage emitting the per-doc verdict record directly — the
+    per-doc fold is bounded by page count and happens inside the kernel,
+    so there is no groupBy, no join, no shuffle at all before the
+    presentation sort."""
+    return _parse_stage(
+        media, payload_col, _scan_verdict,
+        "doc_id long, n_pages long, n_sparse_pages long, sparse_bp long,"
+        " scanned boolean", ["doc_id"])
 
 
 # --- outline-bearing PDFs: synthesis + the outline Arrow stage -----------
@@ -524,67 +470,31 @@ def make_outline_pdf(doc_id: int) -> bytes:
     for i in range(nc):
         chap_ids.append(nxt)
         nxt += 1 + kids[i]
-    items = []  # (obj_num, body)
+    items = []  # bodies of objects 6.., in pre-order = number order
     for i in range(nc):
         cid = chap_ids[i]
         nxt_ref = (b" /Next %d 0 R" % chap_ids[i + 1]
                    if i + 1 < nc else b"")
         first_ref = b" /First %d 0 R /Count 1" % (cid + 1) if kids[i] else b""
-        items.append((cid, b"<< /Title (" + _esc(
+        items.append(b"<< /Title (" + _esc(
             f"Chapter {i} of {doc_id}") + b") /Parent 5 0 R"
-            + first_ref + nxt_ref + b" >>"))
+            + first_ref + nxt_ref + b" >>")
         if kids[i]:
-            items.append((cid + 1, b"<< /Title (" + _esc(
+            items.append(b"<< /Title (" + _esc(
                 f"Section {i}.0 of {doc_id}")
-                + b") /Parent %d 0 R >>" % cid))
-    content = _content_stream(doc_id, 0)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-
-    def obj(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
-
-    obj(1, b"<< /Type /Catalog /Pages 2 0 R /Outlines 5 0 R >>")
-    obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>")
-    obj(4, b"<< /Length %d >>\nstream\n" % len(content)
-        + content + b"\nendstream")
-    obj(5, b"<< /Type /Outlines /First %d 0 R /Last %d 0 R /Count %d >>"
-        % (chap_ids[0], chap_ids[-1], nc))
-    for num, body in items:
-        obj(num, body)
-    n_objs = 5 + len(items)
-    xref_at = len(out)
-    out.extend(b"xref\n0 %d\n" % (n_objs + 1))
-    out.extend(b"0000000000 65535 f \n")
-    for num in range(1, n_objs + 1):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (n_objs + 1, xref_at)
-    )
-    return bytes(out)
+                + b") /Parent %d 0 R >>" % cid)
+    bodies = _page_tree([_content_stream(doc_id, 0)])
+    bodies[0] = b"<< /Type /Catalog /Pages 2 0 R /Outlines 5 0 R >>"
+    bodies.append(b"<< /Type /Outlines /First %d 0 R /Last %d 0 R"
+                  b" /Count %d >>" % (chap_ids[0], chap_ids[-1], nc))
+    return _write_pdf(bodies + items)
 
 
 def synthetic_outline_pdfs(df: DataFrame) -> DataFrame:
     """%13 corrupt; %5==2 docs have NO outline (plain make_pdf — the
     heuristics-fallback population); everything else carries one."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % PDF_CORRUPT_MOD == 0:
-                    payloads.append(b"%PDF-1.4\nno xref")
-                elif d % 5 == 2:
-                    payloads.append(make_pdf(d))
-                else:
-                    payloads.append(make_outline_pdf(d))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return _synthesize(df, _no_xref_or(
+        lambda d: make_pdf(d) if d % 5 == 2 else make_outline_pdf(d)))
 
 
 def pdf_outline(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -595,25 +505,9 @@ def pdf_outline(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     routes now exist in this engine, which is precisely how a production
     extractor chooses.  Same one-Arrow-stage shape; outline-less and
     corrupt documents yield zero rows."""
-    from pdf_parser_spark.core.pdflayout import parse_outline
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "ord": [], "level": [], "title": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse_outline(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    out["ord"].append(rec["ord"])
-                    out["level"].append(rec["level"])
-                    out["title"].append(rec["title"])
-            yield pd.DataFrame(out)
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, "doc_id long, ord int, level int, title string")
-        .orderBy("doc_id", "ord")
-    )
+    return _parse_stage(media, payload_col, parse_outline,
+                        "doc_id long, ord int, level int, title string",
+                        ["doc_id", "ord"])
 
 
 # --- link-annotation PDFs: synthesis + the outlink Arrow stage -----------
@@ -625,62 +519,27 @@ def make_link_pdf(doc_id: int) -> bytes:
     non-link annot (a /Square) and one link with a non-URI action
     (/GoTo) that the parser must SKIP."""
     k = 1 + doc_id % 3
-    annot_ids = list(range(5, 5 + k + 2))
-    content = _content_stream(doc_id, 0)
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-
-    def obj(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num + body + b"\nendobj\n")
-
-    annots = b" ".join(b"%d 0 R" % n for n in annot_ids)
-    obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    obj(3, b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Annots ["
-        + annots + b"] >>")
-    obj(4, b"<< /Length %d >>\nstream\n" % len(content)
-        + content + b"\nendstream")
+    annots = b" ".join(b"%d 0 R" % n for n in range(5, 5 + k + 2))
+    bodies = _page_tree([_content_stream(doc_id, 0)])
+    bodies[2] = (b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Annots ["
+                 + annots + b"] >>")
     for i in range(k):
         uri = (f"https://site{(doc_id + i) % 10}.example.com/docs/"
                f"{doc_id * 10 + i}")
-        obj(5 + i, b"<< /Type /Annot /Subtype /Link /Rect [0 0 10 10]"
-            b" /A << /S /URI /URI (" + _esc(uri) + b") >> >>")
+        bodies.append(b"<< /Type /Annot /Subtype /Link /Rect [0 0 10 10]"
+                      b" /A << /S /URI /URI (" + _esc(uri) + b") >> >>")
     # decoys: a square annot, and a link whose action is a GoTo
-    obj(5 + k, b"<< /Type /Annot /Subtype /Square /Rect [0 0 5 5] >>")
-    obj(5 + k + 1, b"<< /Type /Annot /Subtype /Link /Rect [0 0 5 5]"
-        b" /A << /S /GoTo /D (page2) >> >>")
-    n_objs = 4 + k + 2
-    xref_at = len(out)
-    out.extend(b"xref\n0 %d\n" % (n_objs + 1))
-    out.extend(b"0000000000 65535 f \n")
-    for num in range(1, n_objs + 1):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (n_objs + 1, xref_at)
-    )
-    return bytes(out)
+    bodies.append(b"<< /Type /Annot /Subtype /Square /Rect [0 0 5 5] >>")
+    bodies.append(b"<< /Type /Annot /Subtype /Link /Rect [0 0 5 5]"
+                  b" /A << /S /GoTo /D (page2) >> >>")
+    return _write_pdf(bodies)
 
 
 def synthetic_link_pdfs(df: DataFrame) -> DataFrame:
     """%13 corrupt; %7==2 docs carry NO annotations (plain make_pdf);
     else the annotated page."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % PDF_CORRUPT_MOD == 0:
-                    payloads.append(b"%PDF-1.4\nno xref")
-                elif d % 7 == 2:
-                    payloads.append(make_pdf(d))
-                else:
-                    payloads.append(make_link_pdf(d))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return _synthesize(df, _no_xref_or(
+        lambda d: make_pdf(d) if d % 7 == 2 else make_link_pdf(d)))
 
 
 def pdf_links(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -690,25 +549,9 @@ def pdf_links(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     channels or every link inside the web's PDFs is invisible).  Same
     one-Arrow-stage shape; non-link annots, non-URI actions, and corrupt
     or annotation-free documents contribute nothing."""
-    from pdf_parser_spark.core.pdflayout import parse_links
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "page_no": [], "ord": [], "uri": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse_links(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    out["page_no"].append(rec["page_no"])
-                    out["ord"].append(rec["ord"])
-                    out["uri"].append(rec["uri"])
-            yield pd.DataFrame(out)
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, "doc_id long, page_no int, ord int, uri string")
-        .orderBy("doc_id", "page_no", "ord")
-    )
+    return _parse_stage(media, payload_col, parse_links,
+                        "doc_id long, page_no int, ord int, uri string",
+                        ["doc_id", "page_no", "ord"])
 
 
 def pdf_table_strategy_audit(media: DataFrame,
@@ -720,20 +563,8 @@ def pdf_table_strategy_audit(media: DataFrame,
     'none' (unhinted unruled pages, and unparseable bytes).  The
     corpus-level observability face of parse_tables: a strategy-mix
     drift is a table-extraction regression you can SEE before any cell
-    diff.  One Arrow stage, one projection — no shuffle before the
-    presentation sort."""
-    from pdf_parser_spark.core.pdflayout import table_strategy
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": [int(d) for d in pdf["doc_id"]],
-                "strategy": [table_strategy(bytes(p))
-                             for p in pdf[payload_col]],
-            })
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, "doc_id long, strategy string")
-        .orderBy("doc_id")
-    )
+    diff.  One Arrow stage, one record per document — no shuffle before
+    the presentation sort."""
+    return _parse_stage(
+        media, payload_col, lambda data: [{"strategy": table_strategy(data)}],
+        "doc_id long, strategy string", ["doc_id"])

@@ -92,6 +92,9 @@ def test_filing_start_defaults_to_1():
 def test_scanned_detection():
     assert is_scanned(["", " ", "x", "", ""])
     assert not is_scanned(["long text " * 20] * 5)
+    # exactly 80% sparse (4 of 5) is not scanned: the rule is STRICT
+    assert not is_scanned(["long text " * 20] + [""] * 4)
+    assert not is_scanned([])
 
 
 # --- segmentation ---

@@ -4794,9 +4794,11 @@ def test_pdf_ruled_table_strategy_and_hint_gating():
     """The reference's two-strategy policy, byte-level: painted rulings
     are the PRIMARY strategy (multi-run cells join, empty grid cells are
     absent, runs outside the grid are not cells); with no rulings the
-    text-band retry fires ONLY on a financially-hinted page — an
-    unhinted unruled page yields no tables at all."""
-    from pdf_parser_spark.core.pdflayout import parse_tables
+    text-band retry fires ONLY on a financially-hinted page (hint read in
+    reading order) — an unhinted unruled page yields no tables at all.
+    Runs on the grid's bottom/right rulings and negative-extent `re`
+    rectangles are part of the grid."""
+    from pdf_parser_spark.core.pdflayout import parse_tables, table_strategy
 
     grid = (
         b"68 604 m 248 604 l S 68 584 m 248 584 l S 68 564 m 248 564 l S "
@@ -4824,6 +4826,35 @@ def test_pdf_ruled_table_strategy_and_hint_gating():
     got = [(r["row"], r["col"], r["text"])
            for r in parse_tables(_mini_pdf(hinted))]
     assert got == [(0, 0, "x0"), (0, 1, "x1"), (1, 0, "y0"), (1, 1, "y1")]
+    # the hint reads the page in READING order: its runs arriving
+    # right-to-left in the stream still read "Statements of operations"
+    # (the two-run hint line is itself one more band row)
+    reversed_hint = bands + (b"BT /F1 10 Tf 162 60 Td (of operations) Tj ET\n"
+                             b"BT /F1 10 Tf 72 60 Td (Statements) Tj ET\n")
+    got = [(r["row"], r["col"], r["text"])
+           for r in parse_tables(_mini_pdf(reversed_hint))]
+    assert got == [(0, 0, "x0"), (0, 1, "x1"), (1, 0, "y0"), (1, 1, "y1"),
+                   (2, 0, "Statements"), (2, 1, "of operations")], got
+
+    # a run ON the bottom h-ruling / the rightmost v-ruling is inside the
+    # grid's bounds, so it belongs to the band it borders (last row / last
+    # column) instead of being silently dropped
+    edge = (b"BT /F1 10 Tf 72 600 Td (top) Tj ET\n"
+            b"BT /F1 10 Tf 72 564 Td (bottom) Tj 176 16 Td (right) Tj ET\n")
+    got = [(r["row"], r["col"], r["text"])
+           for r in parse_tables(_mini_pdf(grid + edge))]
+    assert got == [(0, 0, "top"), (1, 0, "bottom"), (1, 1, "right")], got
+
+    # a rectangle drawn with a NEGATIVE height is the same ruling grid as
+    # its positive-extent twin: same strategy, same cells
+    cell = b"BT /F1 10 Tf 72 590 Td (boxed) Tj ET\n"
+    pos = parse_tables(_mini_pdf(b"68 584 180 20 re S\n" + cell))
+    neg = parse_tables(_mini_pdf(b"68 604 180 -20 re S\n" + cell))
+    assert [(r["row"], r["col"], r["text"]) for r in pos] == [
+        (0, 0, "boxed")]
+    assert neg == pos
+    assert table_strategy(_mini_pdf(b"68 604 180 -20 re S\n" + cell)) \
+        == "ruled"
 
 
 def test_rollback_semantics(spark, tmp_path):

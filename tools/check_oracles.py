@@ -52,12 +52,18 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pdf_parser_spark.session import get_spark
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    for name in unknown:
+        print(f"FAIL  {name}: not a queries() name")
+    if unknown:
+        return 1
+
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
