@@ -95,20 +95,28 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    import tempfile
+
     from pdf_parser_spark.operators import (
-        curation, dedup, multimodal, similarity, textstats, weburl,
+        curation, dedup, htmlmeta, linkgraph, multimodal, pdflayout,
+        similarity, snapshot, textstats, weburl,
     )
     from pdf_parser_spark.operators.consistency import finalize
     from pdf_parser_spark.operators.extract import extract_stage
     from pdf_parser_spark.plans import relational as R
+    from pdf_parser_spark.plans import sqlapi
+    from pdf_parser_spark.sources import jsonl, orc, warc, warc_datasource
+    from pdf_parser_spark.sources import tableformat as tf
+    from pdf_parser_spark.streaming import (
+        attribution, botdetect, changefeed, late, neardup, ratelimit,
+        sessionize, trending, windowed,
+    )
+    from pdf_parser_spark.streaming import dedup as st_dedup
+    from pdf_parser_spark.streaming import join as st_join
+    from pdf_parser_spark.streaming import pipeline as st_pipeline
 
     def _docs(spark, sf_dir):
         return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def _st_sessionize(spark, sf_dir):
-        from pdf_parser_spark.streaming.sessionize import sessionize_via_stream
-
-        return sessionize_via_stream(spark, sf_dir)
 
     def _qc_structural(spark, sf_dir):
         """Fleet pass-rates of the reference's 9 output checks over the
@@ -164,7 +172,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """Fleet-wide V8: extraction's exported statement_values broadcast-
         joined against the corpus-issuer facts dimension (rows-only — the PDF
         side comes out of the Arrow extraction stage, not SQL)."""
-        from pdf_parser_spark.operators.extract import extract_stage
         from pdf_parser_spark.operators.xbrl import fleet_cross_validate
         from pdf_parser_spark.sources.pages import synthetic_pages
         from pdf_parser_spark.sources.xbrl import corpus_facts_df
@@ -179,6 +186,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _emb(spark, sf_dir):
         return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
+    def _host_edges(spark, sf_dir):
+        """(doc link edges, doc_id -> host): the two inputs every
+        host-graph face compresses the link graph with."""
+        docs = _docs(spark, sf_dir)
+        hosts = weburl.canonicalize(weburl.with_synthetic_urls(docs))
+        return linkgraph.synthetic_edges(docs), hosts.select("doc_id", "host")
+
     def _st_extract(spark, sf_dir):
         """Streaming extraction held to the SAME frozen per-doc tuples as
         the batch flagship: pages stream in 4 micro-batches (one file per
@@ -186,24 +200,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sink; the per-doc outputs must be byte-identical to the core path
         regardless of batch boundaries (the stage is stateless per row —
         that's the claim this hash-checks)."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.streaming.pipeline import stream_extract
-
-        work = tempfile.mkdtemp(prefix="stextract_")
-        in_dir, out_dir, ckpt = (
-            f"{work}/in", f"{work}/out", f"{work}/ckpt"
-        )
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="stextract_", ignore_cleanup_errors=True
+        ) as work:
+            in_dir, out_dir, ckpt = (
+                f"{work}/in", f"{work}/out", f"{work}/ckpt"
+            )
             _docs_as_pages(spark, sf_dir).repartition(4).write.parquet(in_dir)
-            q = stream_extract(
+            q = st_pipeline.stream_extract(
                 spark, in_dir, out_dir, ckpt, run_ts=RUN_TS,
                 max_files_per_trigger=1,
             )
             q.processAllAvailable()
             q.stop()
-            out = (
+            return (
                 spark.read.parquet(out_dir)
                 .select(
                     "url", "status", "report_type",
@@ -211,12 +221,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.col("n_sections").cast("long").alias("n_sections"),
                 )
                 .orderBy("url")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the temp dirs are deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _incremental_extract(spark, sf_dir):
         """The incremental-crawl composition: snapshot_diff picks the
@@ -225,12 +231,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tuples against the frozen core-path expectations restricted to the
         same formula-defined set.  (diff -> re-extract is what the
         checkpoint/changefeed machinery exists to feed.)"""
-        from pdf_parser_spark.operators.extract import extract_stage
-        from pdf_parser_spark.operators.snapshot import demo_snapshots, snapshot_diff
-
         docs = _docs(spark, sf_dir)
         todo = (
-            snapshot_diff(*demo_snapshots(docs))
+            snapshot.snapshot_diff(*snapshot.demo_snapshots(docs))
             .where(F.col("change").isin("added", "changed"))
             .select("doc_id")
         )
@@ -249,27 +252,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         time-travel read AT version 2: exactly the first two snapshots'
         rows come back, regardless of the third append or any orphaned
         files (the manifest — not a directory glob — defines the table)."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tbl_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tbl_", ignore_cleanup_errors=True
+        ) as work:
             for k in range(3):
                 tf.append_snapshot(
                     _docs(spark, sf_dir).where(F.col("doc_id") % 3 == k), work
                 )
-            out = (
+            return (
                 tf.read_table(spark, work, version=2)
                 .select("doc_id", "lang", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_wap(spark, sf_dir):
         """Write-audit-publish (Iceberg WAP / cherry-pick) end to end:
@@ -282,13 +277,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         The final per-lang rollup equals the raw documents table —
         a leaked poisoned row ('zz' group), a lost concurrent append,
         or a doubled publish each hash-mismatch."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblwap_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblwap_", ignore_cleanup_errors=True
+        ) as work:
             docs = _docs(spark, sf_dir)
             v1 = tf.append_snapshot(docs.where(F.col("doc_id") % 3 == 0), work)
             poisoned = docs.where(F.col("doc_id") % 3 == 1).withColumn(
@@ -316,7 +307,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             tf.append_snapshot(docs.where(F.col("doc_id") % 3 == 2), work)
             v = tf.publish_staged(work, wap_ok)
             assert tf.publish_staged(work, wap_ok) == v  # exactly-once
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .groupBy("lang")
                 .agg(
@@ -325,12 +316,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.sum("n_chars").alias("sum_chars"),
                 )
                 .orderBy("lang")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_mor_delete(spark, sf_dir):
         """Merge-on-read equality deletes under the Iceberg v2 SEQUENCE
@@ -342,13 +329,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         which the oracle states directly; purge_deletes is then applied
         and must not change the hash (the maintenance rewrite materializes
         exactly the readers' view)."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblmor_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblmor_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(docs.where(d % 3 == 0), work)
@@ -358,16 +341,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "doc_id")
             tf.append_snapshot(docs.where(d % 3 == 2), work)
             tf.purge_deletes(spark, work)  # hash-identity pinned by oracle
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .select("doc_id", "lang", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_pos_delete(spark, sf_dir):
         """Merge-on-read POSITION deletes (Iceberg v2's second delete
@@ -381,13 +360,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rewrites exactly the recorded target files and must not change
         the hash.  Final view: (%3 in (0,1) AND NOT(de OR %7==2)) OR
         %3==2, stated directly by the oracle."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblpos_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblpos_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(docs.where(d % 3 == 0), work)
@@ -397,16 +372,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 spark, tf.positions_of(spark, work, hit), work)
             tf.append_snapshot(docs.where(d % 3 == 2), work)
             tf.purge_deletes(spark, work)  # hash-identity pinned by oracle
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .select("doc_id", "lang", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_branch(spark, sf_dir):
         """Branch/tag refs end to end: main v1 appends doc_id%3==0 and is
@@ -419,13 +390,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         leaked branch commit before the ff, a lost branch append, or a
         seq-collision sparing branch files from the delete each
         hash-mismatch."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblbr_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblbr_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(docs.where(d % 3 == 0), work)
@@ -437,16 +404,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             tf.delete_keys(
                 spark, docs.where(d % 11 == 0).select("doc_id"), work,
                 "doc_id")
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .select("doc_id", "lang", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_snapshots(spark, sf_dir):
         """Metadata-table introspection: a deterministic lifecycle
@@ -456,13 +419,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         derived commit kind and file/row deltas.  The oracle states the
         expected history literally with row counts from the documents
         strata."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblsnap_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblsnap_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(docs.where(d % 3 == 0).coalesce(1), work)
@@ -472,9 +431,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 spark, docs.where(d % 5 == 0).select("doc_id"), work,
                 "doc_id")
             tf.append_snapshot(docs.where(d % 3 == 2).coalesce(1), work)
-            return tf.snapshots_table(spark, work).persist()
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return tf.snapshots_table(spark, work)
 
     def _table_dedup_inplace(spark, sf_dir):
         """Lakehouse dedup maintenance under ONE hash — the operation a
@@ -489,13 +446,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exactly the original corpus.  A wrong keeper (copy kept), a
         missed copy, an over-delete, or a purge divergence each
         hash-mismatch."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tbldedup_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tbldedup_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir).select(
                 "doc_id", "text", "lang", "source")
@@ -505,8 +458,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "doc_id", d + 1_000_000)
             tf.append_snapshot(recrawl, work)
             live = tf.read_table(spark, work)
-            from pdf_parser_spark.operators.dedup import exact_dedup_groups
-            groups = exact_dedup_groups(live)
+            groups = dedup.exact_dedup_groups(live)
             fp = F.md5(F.lower(
                 F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
             losers = (
@@ -517,16 +469,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             tf.delete_keys(spark, losers, work, "doc_id")
             tf.purge_deletes(spark, work)
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .select("doc_id", "lang", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_schema_evolution(spark, sf_dir):
         """Schema evolution end to end: v1 appends (doc_id, lang), v2
@@ -535,13 +483,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exposes exactly (doc_id, source) with v1's rows NULL-backfilled
         (they were written before the column existed), which the oracle
         states directly from the doc_id%2 split."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblevo_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblevo_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(
@@ -550,16 +494,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 docs.where(d % 2 == 1).select("doc_id", "lang", "source"),
                 work)
             tf.drop_columns(spark, work, ["lang"])
-            out = (
+            return (
                 tf.read_table(spark, work)
                 .select("doc_id", "source")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_incremental_mv(spark, sf_dir):
         """Every commit kind flows through ONE signed-delta fold: v1/v2
@@ -569,13 +509,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         — a fold bug (sign flip, lost group, zero-group retention)
         hash-mismatches the oracle's direct aggregation of the final
         state."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblmv_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblmv_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             docs = _docs(spark, sf_dir)
             tf.append_snapshot(docs.where(d % 3 == 0), work)
@@ -587,16 +523,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             tf.delete_keys(
                 spark, docs.where(d % 7 == 0).select("doc_id"), work,
                 "doc_id")
-            out = (
+            return (
                 tf.incremental_mv(spark, work, "lang")
                 .select("lang", F.col("n_rows").alias("n_docs"))
                 .orderBy("lang")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_pruned_scan(spark, sf_dir):
         """Zone-map scan over the manifest table: three appends with
@@ -604,13 +536,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         eliminate the first two snapshots' files from METADATA alone
         (asserted — a planner regression fails the driver run, not just
         a timing)."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblscan_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblscan_", ignore_cleanup_errors=True
+        ) as work:
             d = F.col("doc_id")
             for lo, hi in ((0, 167), (167, 334), (334, 1 << 40)):
                 tf.append_snapshot(
@@ -620,11 +548,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 spark, work, predicates=[("doc_id", ">=", 334)]
             )
             assert n_read < n_total, (n_read, n_total)
-            out = df.select("doc_id", "lang").orderBy("doc_id").persist()
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return (
+                df.select("doc_id", "lang").orderBy("doc_id")
+                .localCheckpoint(eager=True)
+            )
 
     def _table_partitioned_scan(spark, sf_dir):
         """Hidden partitioning end to end (Iceberg partition transforms):
@@ -637,13 +564,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rollup must hash-match the oracle's direct filter over the raw
         parquet.  At 10^12 rows this is the difference between listing a
         crawl-day's files and listing the crawl's."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
-        work = tempfile.mkdtemp(prefix="tblpart_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblpart_", ignore_cleanup_errors=True
+        ) as work:
             ev = spark.read.parquet(f"{sf_dir}/events.parquet")
             tf.partitioned_append(
                 ev, work, [("day", "ts"), ("bucket", 4, "event_type")]
@@ -654,7 +577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                             ("event_type", "=", "click")],
             )
             assert n_read < n_total, (n_read, n_total)
-            out = (
+            return (
                 df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("ds"))
                 .agg(
                     F.count("*").alias("n_events"),
@@ -662,12 +585,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.sum("event_id").alias("sum_ids"),
                 )
                 .orderBy("ds")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _table_spec_evolution(spark, sf_dir):
         """Partition-spec evolution end to end (Iceberg §Partition
@@ -681,14 +600,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         three labeled scans must hash-match the oracle's direct filters
         over the raw parquet — pruning is an optimization, never the
         correctness path."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
         docs = _docs(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="tblspec_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblspec_", ignore_cleanup_errors=True
+        ) as work:
             tf.partitioned_append(
                 docs.where(F.col("doc_id") % 2 == 0), work,
                 [("identity", "lang")],
@@ -713,12 +628,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.count("*").cast("long").alias("n_docs"),
                     F.sum("doc_id").cast("long").alias("sum_ids"),
                 ))
-            out = scans[0].unionByName(scans[1]).unionByName(scans[2]) \
-                .orderBy("scan").persist()
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return (
+                scans[0].unionByName(scans[1]).unionByName(scans[2])
+                .orderBy("scan").localCheckpoint(eager=True)
+            )
 
     def _table_files(spark, sf_dir):
         """The files metadata table over a two-append identity(lang)
@@ -726,24 +639,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         count and zone-map key range must equal the oracle's direct
         per-(stratum, lang) aggregation, ordinal = (min, max, rows)
         rank — uuid paths never surface."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
         docs = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-        work = tempfile.mkdtemp(prefix="tblfiles_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblfiles_", ignore_cleanup_errors=True
+        ) as work:
             for stratum in (0, 1):
                 tf.partitioned_append(
                     docs.where(F.col("doc_id") % 3 == stratum).coalesce(1),
                     work, [("identity", "lang")],
                 )
-            out = tf.files_table(spark, work).persist()
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return tf.files_table(spark, work)
 
     def _table_rollback(spark, sf_dir):
         """Rollback end to end: good append, bad append, metadata-only
@@ -752,14 +657,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the rollback (exactly-once is per-batch, not per-state), then a
         recovery append.  Final state = good + recovery rows; the oracle
         is the direct filter."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.sources import tableformat as tf
-
         docs = _docs(spark, sf_dir).select("doc_id", "lang", "source")
-        work = tempfile.mkdtemp(prefix="tblrb_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="tblrb_", ignore_cleanup_errors=True
+        ) as work:
             tf.append_snapshot(docs.where(F.col("doc_id") % 3 == 0), work)
             tf.append_snapshot(
                 docs.where(F.col("doc_id") % 3 == 1), work, token="bad-b2"
@@ -778,11 +679,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      for r in tf.snapshots_table(spark, work).collect()}
             assert kinds[3] == "rollback"
             tf.append_snapshot(docs.where(F.col("doc_id") % 3 == 2), work)
-            out = tf.read_table(spark, work).orderBy("doc_id").persist()
-            out.count()  # materialize before the table dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return (
+                tf.read_table(spark, work).orderBy("doc_id")
+                .localCheckpoint(eager=True)
+            )
 
     def _cdx_lookup_join(spark, sf_dir):
         """Composable CDX lookup (r3 verdict item 5): write the sorted
@@ -791,26 +691,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         broadcast range join — boundary frame x authority windows pick the
         hit files, the capture scan broadcast-hash-joins on file with the
         SURT-prefix residual; no driver action inside the composed query."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.operators import weburl as wu
-
         docs = _docs(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="cdxjoin_")
-        try:
-            bounds = wu.write_cdx(docs, work, n_shards=4)
+        with tempfile.TemporaryDirectory(
+            prefix="cdxjoin_", ignore_cleanup_errors=True
+        ) as work:
+            bounds = weburl.write_cdx(docs, work, n_shards=4)
             auth = (
-                wu.surt_key(wu.canonicalize(wu.with_synthetic_urls(docs)))
+                weburl.surt_key(
+                    weburl.canonicalize(weburl.with_synthetic_urls(docs)))
                 .where(F.col("doc_id") % 7 == 0)
                 .select(F.substring_index("surt", ")", 1).alias("authority"))
                 .distinct()
             )
-            out = wu.cdx_lookup_join(spark, work, bounds, auth).persist()
-            out.count()  # materialize before the shard dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
+            return weburl.cdx_lookup_join(
+                spark, work, bounds, auth
+            ).localCheckpoint(eager=True)
 
     def _warc_ingest_corpus(spark, sf_dir):
         """The full crawl-to-corpus lifecycle under ONE hash (r3 verdict
@@ -824,20 +719,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the lifecycle (archive framing, charset decode, NFC bytes, gate
         thresholds, dedup keeper, sampling hash, packing prefix-sum)
         fails the one hash."""
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.operators import curation as cu
-        from pdf_parser_spark.sources.warc import write_warc
-        from pdf_parser_spark.sources.warc_datasource import WarcDataSource
-
         docs = _docs(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="warclife_")
-        try:
-            write_warc(docs, work)
+        with tempfile.TemporaryDirectory(
+            prefix="warclife_", ignore_cleanup_errors=True
+        ) as work:
+            warc.write_warc(docs, work)
             spark.conf.set(
                 "spark.sql.python.filterPushdown.enabled", "true")
-            spark.dataSource.register(WarcDataSource)
+            spark.dataSource.register(warc_datasource.WarcDataSource)
             back = spark.read.format("warc").load(work).select(
                 F.regexp_extract("target_uri", r"/doc/([0-9]+)$", 1)
                 .cast("long").alias("doc_id"),
@@ -847,23 +736,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             # lang is crawl metadata, not archive bytes: dim join
             rebuilt = back.join(docs.select("doc_id", "lang"), "doc_id")
-            pages = cu.with_mixed_encodings(rebuilt)
-            ing = cu.ingest_pipeline(pages, return_text=True)
+            pages = curation.with_mixed_encodings(rebuilt)
+            ing = curation.ingest_pipeline(pages, return_text=True)
             decoded_docs = ing.select("doc_id", "text").join(
                 rebuilt.select("doc_id", "source", "lang"), "doc_id")
-            built = cu.corpus_build(decoded_docs)
-            out = (
+            built = curation.corpus_build(decoded_docs)
+            return (
                 built.join(
                     ing.select("doc_id", "charset", "nfc_changed"), "doc_id")
                 .select("doc_id", "source", "lang", "n_tokens", "shard_id",
                         "charset", "nfc_changed")
                 .orderBy("doc_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the archive dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def _run_lineage(spark, sf_dir):
         """The north rule's checkpoint/lineage/resume channel in the
@@ -878,13 +763,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         output; the SUMS are exact and provably lossless against the
         frozen fixture (a dropped or double-counted partition breaks
         the hash)."""
-        import shutil
-        import tempfile
-
         from pdf_parser_spark.operators.pipeline import run_batch
 
-        work = tempfile.mkdtemp(prefix="lineage_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="lineage_", ignore_cleanup_errors=True
+        ) as work:
             pages = _docs_as_pages(spark, sf_dir).withColumn(
                 "doc_id",
                 F.regexp_extract("url", r"/([0-9]+)$", 1).cast("long"),
@@ -897,7 +780,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 pages.drop("doc_id"), work, run_ts=RUN_TS, run_id="r1",
                 resume=True,
             )
-            out = (
+            return (
                 spark.read.parquet(f"{work}/lineage")
                 .groupBy("run_id")
                 .agg(
@@ -908,17 +791,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     F.max("url_max").alias("url_max"),
                 )
                 .orderBy("run_id")
-                .persist()
+                .localCheckpoint(eager=True)
             )
-            out.count()  # materialize before the temp dir is deleted
-            return out
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
 
     def extract_pipeline(spark, sf_dir):
+        # materialized once (finalize fans out into 3 plan branches); an
+        # eager localCheckpoint is released with the frame, a persist is not
         extracted = extract_stage(
             _docs_as_pages(spark, sf_dir), run_ts=RUN_TS
-        ).persist()  # see entry(): finalize fans out into 3 plan branches
+        ).localCheckpoint(eager=True)
         final = finalize(extracted)
         # counters cast to long: the driver's hash compares against DuckDB
         # BIGINTs (same convention as every other integer output)
@@ -970,7 +851,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rule; pinned by the oracle's `> gap` new-session test and the
         # pytest boundary pin)
         "w6_session_window": R.w6_session_window,
-        "st_sessionize": _st_sessionize,
+        "st_sessionize": sessionize.sessionize_via_stream,
         # bucketed interval join: equi join on the time bucket + exact
         # range filter — never a nested-loop range predicate
         "j_range_join": R.j_range_join,
@@ -1297,110 +1178,68 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c_quality_tiers": lambda s, d: curation.quality_tiers(
             textstats.quality_score(_docs(s, d)).select("doc_id", "quality")
         ),
-        "st_dedup": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.dedup", fromlist=["dedup_via_stream"]
-        ).dedup_via_stream(s, d),
+        "st_dedup": st_dedup.dedup_via_stream,
         # bounded-state streaming dedup: dropDuplicatesWithinWatermark —
         # one-batch replay never evicts, so the exact DISTINCT oracle
         # holds; eviction/re-admit pinned in pytest
-        "st_dedup_watermark": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.dedup",
-            fromlist=["dedup_watermark_via_stream"],
-        ).dedup_watermark_via_stream(s, d),
+        "st_dedup_watermark": st_dedup.dedup_watermark_via_stream,
         # streaming LSH near-dup candidate feed: stateful first-seen keeper
         # per band bucket; one-batch replay makes the keeper the bucket min,
         # so the batch oracle is exact
-        "st_neardup": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.neardup",
-            fromlist=["neardup_via_stream"],
-        ).neardup_via_stream(s, d),
+        "st_neardup": neardup.neardup_via_stream,
         # per-host politeness rate limiter: stateful max-plus schedule
         # (emit_n = max(arrival, last_emit + delay)), one BIGINT state row
         # per host; oracle = the closed form delay*n + running_max(arr-k*d)
-        "st_rate_limit": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.ratelimit",
-            fromlist=["rate_limit_via_stream"],
-        ).rate_limit_via_stream(s, d),
+        "st_rate_limit": ratelimit.rate_limit_via_stream,
         # streaming last-touch attribution: per-user stateful touch-carry
         # (applyInPandasWithState); one-batch replay -> the batch W8 SQL
         # is the oracle verbatim; cross-batch carry pinned in pytest
-        "st_attribution": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.attribution",
-            fromlist=["attribution_via_stream"],
-        ).attribution_via_stream(s, d),
+        "st_attribution": attribution.attribution_via_stream,
         # streaming decayed trending (forward decay base 2, ICDE 2009):
         # per-key stateful floor-shift fold, two-BIGINT state; one-batch
         # replay -> recursive-CTE window chain is the oracle
-        "st_trending": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.trending",
-            fromlist=["trending_via_stream"],
-        ).trending_via_stream(s, d),
+        "st_trending": trending.trending_via_stream,
         # streaming peak-rate bot gate: bounded per-second histogram
         # state (applyInPandasWithState); one-batch replay -> the batch
         # W9 SQL is the oracle verbatim
-        "st_bot_detect": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.botdetect",
-            fromlist=["bot_detect_via_stream"],
-        ).bot_detect_via_stream(s, d),
+        "st_bot_detect": botdetect.bot_detect_via_stream,
         # streaming right-to-be-forgotten: delete-request batches ->
         # foreachBatch(delete_keys) MOR commits, exactly-once via the
         # txnAppId-style token; read merges at scan time
-        "st_gdpr_delete": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.pipeline",
-            fromlist=["gdpr_delete_via_stream"],
-        ).gdpr_delete_via_stream(s, d),
+        "st_gdpr_delete": st_pipeline.gdpr_delete_via_stream,
         # streaming ingest into a hidden-partitioned table: two micro-
         # batches -> partitioned_append commits, exactly-once via the
         # token ledger (batch 0 replayed in-harness and MUST skip), then
         # a pruned source-column-predicate scan feeds the rollup
-        "st_partitioned_ingest": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.pipeline",
-            fromlist=["partitioned_ingest_via_stream"],
-        ).partitioned_ingest_via_stream(s, d),
+        "st_partitioned_ingest": st_pipeline.partitioned_ingest_via_stream,
         # gated streaming ingest: write-audit-publish per micro-batch —
         # the poisoned batch is staged, audited, and ABORTED (no version);
         # clean batches publish; a replayed published batch must skip
-        "st_gated_ingest": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.pipeline",
-            fromlist=["gated_ingest_via_stream"],
-        ).gated_ingest_via_stream(s, d),
+        "st_gated_ingest": st_pipeline.gated_ingest_via_stream,
         # streaming incremental-MV maintenance: per-batch signed fold
         # (-1 from the batch keys' current rows, +1 from the batch), MV
         # committed before the idempotent base merge under the token
         # ledger — group-moving updates and a replayed batch both pinned
-        "st_incremental_mv": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.pipeline",
-            fromlist=["mv_maintain_via_stream"],
-        ).mv_maintain_via_stream(s, d),
+        "st_incremental_mv": st_pipeline.mv_maintain_via_stream,
         # watermark late-DROP semantics: 4-batch replay with a re-delivered
         # early batch that must be dropped (and a trap batch that would
         # re-emit duplicates if it were merged instead)
-        "st_late_events": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.late", fromlist=["x"]
-        ).late_events_via_stream(s, d),
-        "st_window_counts": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.windowed", fromlist=["window_counts_via_stream"]
-        ).window_counts_via_stream(s, d),
+        "st_late_events": late.late_events_via_stream,
+        "st_window_counts": windowed.window_counts_via_stream,
         # stream-static enrichment join: broadcast dim per micro-batch,
         # stateless (no watermark, no buffering) — the common join form
-        "st_static_enrich": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.join", fromlist=["x"]
-        ).static_enrich_via_stream(s, d),
+        "st_static_enrich": st_join.static_enrich_via_stream,
         # stream-stream interval join (view->click attribution): watermarks
         # on BOTH legs + the time-range condition bound the join state to
         # the attribution horizon — the only way a 10^12-event firehose
         # join is runnable at all
-        "st_stream_join": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.join", fromlist=["x"]
-        ).attribution_join_via_stream(s, d),
+        "st_stream_join": st_join.attribution_join_via_stream,
         # streaming extraction replay: per-doc outputs must equal the
         # frozen core-path tuples whatever the micro-batch boundaries
         "st_extract": _st_extract,
         # streaming crawl change-feed: one micro-batch per recrawl cycle,
         # last-seen fingerprint in keyed state; held to the batch lag() oracle
-        "st_change_feed": lambda s, d: __import__(
-            "pdf_parser_spark.streaming.changefeed", fromlist=["change_feed_via_stream"]
-        ).change_feed_via_stream(s, d),
+        "st_change_feed": changefeed.change_feed_via_stream,
         # --- dedup ---
         "d_exact": lambda s, d: dedup.exact_dedup_groups(_docs(s, d)),
         # cross-snapshot dedup curve (FineWeb-style): per synthetic crawl,
@@ -1526,50 +1365,42 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # byte-level PDF layout parse (north rule): xref walk ->
         # FlateDecode -> text operators -> line/block segmentation +
         # font-size heading heuristic, one Arrow stage
-        "p_pdf_layout": lambda s, d: (lambda pl: pl.pdf_layout(
-            pl.synthetic_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_layout"])),
+        "p_pdf_layout": lambda s, d: pdflayout.pdf_layout(
+            pdflayout.synthetic_pdfs(_docs(s, d))
+        ),
         # reading-order text assembly over the layout rows (line -> block
         # -> page -> document, explicit in-group ordering throughout)
-        "p_pdf_text": lambda s, d: (lambda pl: pl.pdf_text(
-            pl.synthetic_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_text"])),
+        "p_pdf_text": lambda s, d: pdflayout.pdf_text(
+            pdflayout.synthetic_pdfs(_docs(s, d))
+        ),
         # /Link-annotation URI outlinks (§12.5.6.5 + §12.6.4.7): the PDF
         # half of the outlink story; decoy annots/actions skipped
-        "p_pdf_links": lambda s, d: (lambda pl: pl.pdf_links(
-            pl.synthetic_link_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_links"])),
+        "p_pdf_links": lambda s, d: pdflayout.pdf_links(
+            pdflayout.synthetic_link_pdfs(_docs(s, d))
+        ),
         # author-declared outline (PDF §12.3.3 bookmarks): pre-order
         # /First-before-/Next walk; outline-less docs yield zero rows
         # (the heuristics-fallback population)
-        "p_pdf_outline": lambda s, d: (lambda pl: pl.pdf_outline(
-            pl.synthetic_outline_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_outline"])),
+        "p_pdf_outline": lambda s, d: pdflayout.pdf_outline(
+            pdflayout.synthetic_outline_pdfs(_docs(s, d))
+        ),
         # scanned-document rejection from raw bytes (reference S3
         # detect_scanned rule: strictly > 80% of pages under 50 chars),
         # fail-soft
-        "p_pdf_scanned": lambda s, d: (lambda pl: pl.pdf_scanned_audit(
-            pl.synthetic_scan_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_scanned_audit"])),
+        "p_pdf_scanned": lambda s, d: pdflayout.pdf_scanned_audit(
+            pdflayout.synthetic_scan_pdfs(_docs(s, d))
+        ),
         # two-strategy policy observability: which path (ruled grids /
         # hint-gated text retry / none) produced each doc's tables
-        "p_pdf_table_strategy": lambda s, d: (
-            lambda pl: pl.pdf_table_strategy_audit(
-                pl.synthetic_table_pdfs(_docs(s, d)))
-        )(__import__("pdf_parser_spark.operators.pdflayout",
-                     fromlist=["pdf_table_strategy_audit"])),
+        "p_pdf_table_strategy": lambda s, d: pdflayout.pdf_table_strategy_audit(
+            pdflayout.synthetic_table_pdfs(_docs(s, d))
+        ),
         # table extraction from layout runs (the pdfplumber
         # extract_tables role): >= 2-run line bands, x-rank columns,
         # prose lines break bands
-        "p_pdf_tables": lambda s, d: (lambda pl: pl.pdf_tables(
-            pl.synthetic_table_pdfs(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.pdflayout",
-                      fromlist=["pdf_tables"])),
+        "p_pdf_tables": lambda s, d: pdflayout.pdf_tables(
+            pdflayout.synthetic_table_pdfs(_docs(s, d))
+        ),
         # multimodal ingest dispatcher: magic-byte sniff -> per-family
         # typed extractors (html title / full pdf layout / png dims / wav
         # fmt), expensive branches filter first
@@ -1765,21 +1596,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # crawl snapshot diff: added/removed/changed/unchanged by fingerprint
         # token-multiset change magnitude between snapshots: HOW MUCH a
         # page changed (order-insensitive bp), not just the md5 boolean
-        "d_change_magnitude": lambda s, d: (lambda sn: sn.change_magnitude(
-            *sn.demo_text_snapshots(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.snapshot",
-                      fromlist=["change_magnitude"])),
-        "u_snapshot_diff": lambda s, d: (lambda sn: sn.snapshot_diff(
-            *sn.demo_snapshots(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.snapshot", fromlist=["x"])),
+        "d_change_magnitude": lambda s, d: snapshot.change_magnitude(
+            *snapshot.demo_text_snapshots(_docs(s, d))
+        ),
+        "u_snapshot_diff": lambda s, d: snapshot.snapshot_diff(
+            *snapshot.demo_snapshots(_docs(s, d))
+        ),
         # the spark.sql surface: ONE ANSI string executed by both engines
-        "q1_pricing_sql": lambda s, d: __import__(
-            "pdf_parser_spark.plans.sqlapi", fromlist=["x"]
-        ).q1_pricing_sql(s, d),
+        "q1_pricing_sql": sqlapi.q1_pricing_sql,
         # same gate for the window family (row_number rank + join)
-        "q_top_orders_sql": lambda s, d: __import__(
-            "pdf_parser_spark.plans.sqlapi", fromlist=["x"]
-        ).top_orders_sql(s, d),
+        "q_top_orders_sql": sqlapi.top_orders_sql,
         # snapshot/manifest table format: 3 appends, read AT version 2 —
         # time travel returns exactly the first two snapshots' rows
         "u_table_time_travel": _table_time_travel,
@@ -1816,48 +1642,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "u_table_incremental_mv": _table_incremental_mv,
         # WARC connector round-trip: docs -> archive files -> parsed back;
         # md5(body) pins byte-exact payload fidelity against the oracle
-        "u_warc_roundtrip": lambda s, d: __import__(
-            "pdf_parser_spark.sources.warc", fromlist=["roundtrip"]
-        ).roundtrip(s, d),
+        "u_warc_roundtrip": warc.roundtrip,
         # the REGISTERED Python DataSource read of the same WARC bytes
         # (spark.read.format('warc')): held to u_warc_roundtrip's oracle —
         # JVM lineSep parse and Python DataSource parse share one hash
-        "u_warc_datasource": lambda s, d: __import__(
-            "pdf_parser_spark.sources.warc_datasource",
-            fromlist=["datasource_roundtrip"],
-        ).datasource_roundtrip(s, d),
+        "u_warc_datasource": warc_datasource.datasource_roundtrip,
         # WET export: extracted text written back out as Common Crawl's
         # conversion-record format (2-block framing, no HTTP block) and read
         # back — body_md5 pins byte-exact fidelity, refers_to the WARC urn
-        "u_wet_export": lambda s, d: __import__(
-            "pdf_parser_spark.sources.warc", fromlist=["wet_export"]
-        ).wet_export(s, d),
+        "u_wet_export": warc.wet_export,
         # WAT export: the metadata member of the WARC/WAT/WET triple —
         # concat-built JSON payload (engine-stable bytes) inside metadata
         # records, read back via get_json_object
-        "u_wat_export": lambda s, d: __import__(
-            "pdf_parser_spark.sources.warc", fromlist=["wat_export"]
-        ).wat_export(s, d),
+        "u_wat_export": warc.wat_export,
         # WARC revisit records (WARC 1.1 §6.7.2 identical-payload-digest):
         # two-cycle capture stream -> digest-elected dedup on write (later
         # captures of a digest become payload-free revisit records with
         # Refers-To linkage) -> read resolves revisit bodies through the
         # link; digest_ok pins byte-exact resolution, the oracle reruns the
         # SAME min-cap_id election in SQL
-        "u_warc_revisit": lambda s, d: __import__(
-            "pdf_parser_spark.sources.warc", fromlist=["revisit_export"]
-        ).revisit_export(s, d),
+        "u_warc_revisit": warc.revisit_export,
         # JSONL interchange round-trip: binary html crosses the text format
         # as base64; text_md5/html_md5 pin byte-exact payload fidelity
-        "u_jsonl_roundtrip": lambda s, d: __import__(
-            "pdf_parser_spark.sources.jsonl", fromlist=["roundtrip"]
-        ).roundtrip(s, d),
+        "u_jsonl_roundtrip": jsonl.roundtrip,
         # ORC round-trip: the second columnar interchange format — binary
         # html crosses Spark's native ORC path; hashes held to the
         # documents-only oracle (DuckDB never reads ORC)
-        "u_orc_roundtrip": lambda s, d: __import__(
-            "pdf_parser_spark.sources.orc", fromlist=["roundtrip"]
-        ).roundtrip(s, d),
+        "u_orc_roundtrip": orc.roundtrip,
         # --- corpus curation (training-data build steps) ---
         "c_decontaminate": lambda s, d: curation.decontaminate(
             _docs(s, d), curation.benchmark_snippets(_docs(s, d))
@@ -2003,170 +1814,124 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # registered DataSource read -> ingest chain -> corpus build
         "p_warc_ingest_corpus": _warc_ingest_corpus,
         # --- link graph (crawl-frontier ops) ---
-        "u_outlinks": lambda s, d: __import__(
-            "pdf_parser_spark.operators.linkgraph", fromlist=["x"]
-        ).extract_outlinks(
-            __import__(
-                "pdf_parser_spark.operators.linkgraph", fromlist=["x"]
-            ).with_synthetic_html(_docs(s, d))
+        "u_outlinks": lambda s, d: linkgraph.extract_outlinks(
+            linkgraph.with_synthetic_html(_docs(s, d))
         ),
-        "g_pagerank": lambda s, d: (lambda lg: lg.pagerank(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_pagerank": lambda s, d: linkgraph.pagerank(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # TrustRank: teleport mass lands only on the vetted seed set
-        "g_trustrank": lambda s, d: (lambda lg: lg.trustrank(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_trustrank": lambda s, d: linkgraph.trustrank(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # rel=nofollow/ugc/sponsored link semantics: per-link relation +
         # followed flag (token-list match), attrs parsed order-free
-        "u_outlinks_nofollow": lambda s, d: (
-            lambda lg: lg.extract_outlinks_rel(
-                lg.with_synthetic_html_rel(_docs(s, d)))
-        )(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "u_outlinks_nofollow": lambda s, d: linkgraph.extract_outlinks_rel(
+            linkgraph.with_synthetic_html_rel(_docs(s, d))
+        ),
         # PageRank on the followed-edge subgraph — the endorsement rule
         # made operative: same exact-integer dataflow, filtered edge set
-        "g_pagerank_followed": lambda s, d: (
-            lambda lg: lg.pagerank_followed(_docs(s, d))
-        )(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_pagerank_followed": lambda s, d: linkgraph.pagerank_followed(
+            _docs(s, d)
+        ),
         # spam mass (Gyöngyi VLDB'06): rank unexplained by seed trust —
         # exact-integer composition of the two faces above, trust rescaled
         # by n_docs/n_seeds via the overflow-safe decomposed product
-        "g_spam_mass": lambda s, d: (lambda lg: lg.spam_mass(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_spam_mass": lambda s, d: linkgraph.spam_mass(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # exact-integer HITS (hubs/authorities) over the same ring graph
-        "g_hits": lambda s, d: (lambda lg: lg.hits(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_hits": lambda s, d: linkgraph.hits(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # SALSA (Lempel-Moran 2000): the stochastic HITS — degree-
         # normalized floor-div walk, kills the tightly-knit-community
         # amplification (farm-vs-honest pin in pytest)
-        "g_salsa": lambda s, d: (lambda lg: lg.salsa(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_salsa": lambda s, d: linkgraph.salsa(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # personalized PageRank related-pages (Jeh/Widom 2003): singleton
         # -seed trustrank per seed, top-k excluding the seed
-        "g_related": lambda s, d: (lambda lg: lg.related_docs(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_related": lambda s, d: linkgraph.related_docs(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # degree-assortativity moments (Newman 2002): exact BIGINT
         # per-edge (outdeg(src), indeg(dst)) moments + covariance sign
-        "g_assortativity": lambda s, d: (lambda lg: lg.assortativity_moments(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_assortativity": lambda s, d: linkgraph.assortativity_moments(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # co-citation pairs (shared citing sources) + one-row graph audit
-        "g_cocitation": lambda s, d: (lambda lg: lg.cocitation_pairs(
-            lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
-        "g_graph_stats": lambda s, d: (lambda lg: lg.graph_stats(
-            lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_cocitation": lambda s, d: linkgraph.cocitation_pairs(
+            linkgraph.synthetic_edges(_docs(s, d))
+        ),
+        "g_graph_stats": lambda s, d: linkgraph.graph_stats(
+            linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # BFS crawl depth from the vetted seed set (fetch waves to reach
         # each page; absent = outside the horizon)
-        "g_seed_depth": lambda s, d: (lambda lg: lg.seed_distance(
-            _docs(s, d), lg.synthetic_edges(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_seed_depth": lambda s, d: linkgraph.seed_distance(
+            _docs(s, d), linkgraph.synthetic_edges(_docs(s, d))
+        ),
         # host-graph compression: one host map on BOTH endpoints, intra-host
         # self-loops dropped, distinct linking pages counted
-        "g_host_graph": lambda s, d: (lambda lg, docs: lg.host_graph(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_host_graph": lambda s, d: linkgraph.host_graph(*_host_edges(s, d)),
         # weighted label propagation over the compressed host graph: the
         # community face next to PageRank popularity / TrustRank spam —
         # fixed synchronous rounds, neighbor-only votes, (weight desc,
         # label asc) argmax as one struct-min groupBy per round
-        "g_communities": lambda s, d: (lambda lg, docs: lg.host_communities(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_communities": lambda s, d: linkgraph.host_communities(
+            *_host_edges(s, d)
+        ),
         # host-graph reciprocity (one-row structural stat; spam-ring jump
         # detector)
-        "g_reciprocity": lambda s, d: (lambda lg, docs: lg.graph_reciprocity(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_reciprocity": lambda s, d: linkgraph.graph_reciprocity(
+            *_host_edges(s, d)
+        ),
         # per-host triangle count + local clustering coefficient over the
         # undirected simple host graph — the link-farm detector (cliques
         # cluster, editorial hubs don't); degree-ordered orientation
         # bounds the wedge join's fan-out under power-law skew
-        "g_triangles": lambda s, d: (lambda lg, docs: lg.host_triangles(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_triangles": lambda s, d: linkgraph.host_triangles(*_host_edges(s, d)),
         # exact k-core numbers via iterated neighborhood h-index (Lü et
         # al. 2016) — the farm detector raw degree overstates (a 10^4-
         # satellite hub is core 1; a dense mutual-link neighborhood is
         # high-core); fixed rounds, engine-asserted convergence
-        "g_kcore": lambda s, d: (lambda lg, docs: lg.host_kcore(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_kcore": lambda s, d: linkgraph.host_kcore(*_host_edges(s, d)),
         # harmonic centrality (Boldi-Vigna axioms): exact 1/d fold over
         # the SAME layered-BFS reach set as g_neighborhood — incoming
         # distances, micro-unit integers, zeros for unreached hosts
-        "g_harmonic": lambda s, d: (lambda lg, docs: lg.host_harmonic(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_harmonic": lambda s, d: linkgraph.host_harmonic(*_host_edges(s, d)),
         # exact neighborhood function N(t) + effective diameter (the
         # HyperBall curve, Boldi-Vigna): all-sources layered BFS on the
         # compressed host graph, one join+distinct+anti-join per level
-        "g_neighborhood": lambda s, d: (lambda lg, docs: lg.host_neighborhood(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_neighborhood": lambda s, d: linkgraph.host_neighborhood(
+            *_host_edges(s, d)
+        ),
         # log2-binned degree histogram of the host graph: the power-law
         # audit, exact-integer bins via length(bin(deg))-1
-        "g_degree_dist": lambda s, d: (lambda lg, docs: lg.degree_distribution(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_degree_dist": lambda s, d: linkgraph.degree_distribution(
+            *_host_edges(s, d)
+        ),
         # Broder bow-tie decomposition of the host graph: core/in/out/other
         # relative to the min-host pivot's SCC, two bounded reachability
         # sweeps on the compressed graph
-        "g_bowtie": lambda s, d: (lambda lg, docs: lg.bowtie(
-            lg.synthetic_edges(docs),
-            weburl.canonicalize(weburl.with_synthetic_urls(docs))
-            .select("doc_id", "host"),
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"]),
-           _docs(s, d)),
+        "g_bowtie": lambda s, d: linkgraph.bowtie(*_host_edges(s, d)),
         # crawl-frontier assembly: robots ∩ quota ∩ pagerank, per-host queues
-        "g_frontier": lambda s, d: (lambda lg: lg.frontier_schedule(
-            _docs(s, d)
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_frontier": lambda s, d: linkgraph.frontier_schedule(_docs(s, d)),
         # frontier v2: ranking-integrity rules layered on — rank on
         # FOLLOWED edges only, spam-mass suspects demoted BEFORE slot
         # assignment (no hole in the politeness spacing)
-        "g_frontier2": lambda s, d: (lambda lg: lg.frontier_schedule_v2(
-            _docs(s, d)
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "g_frontier2": lambda s, d: linkgraph.frontier_schedule_v2(_docs(s, d)),
         # the REAL crawl cycle: REAL Arrow extraction picks the ok docs,
         # the quality gate picks the crawl-worthy ones, then outlinks ->
         # PageRank -> robots ∩ quota over the surviving subgraph only
-        "g_corpus_frontier": lambda s, d: (lambda lg: lg.corpus_frontier(
+        "g_corpus_frontier": lambda s, d: linkgraph.corpus_frontier(
             _docs(s, d), _docs_as_pages(s, d), run_ts=RUN_TS
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        ),
         # inverted anchor-text index per link target (sorted-distinct texts)
-        "u_anchor_text": lambda s, d: (lambda lg: lg.anchor_text_index(
-            lg.with_synthetic_html(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.linkgraph", fromlist=["x"])),
+        "u_anchor_text": lambda s, d: linkgraph.anchor_text_index(
+            linkgraph.with_synthetic_html(_docs(s, d))
+        ),
         # corpus-level line dedup: drop lines shared by >=2 docs (CCNet);
         # clean_md5 pins the byte-exact surviving text per doc
         "c_line_dedup": lambda s, d: curation.line_dedup(
@@ -2182,24 +1947,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             scope_col="source",
         ),
         # head-metadata extraction: five fields, one codegen'd regex pass
-        "u_head_meta": lambda s, d: (lambda hm: hm.head_meta(
-            hm.with_head_html(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.htmlmeta", fromlist=["x"])),
+        "u_head_meta": lambda s, d: htmlmeta.head_meta(
+            htmlmeta.with_head_html(_docs(s, d))
+        ),
         # boilerplate-gate audit: the north-star text/link-density block
         # verdicts as records (real DOM walk); per-block char arithmetic
         # re-derived exactly by the oracle from the synthesis formula
-        "p_boilerplate_audit": lambda s, d: (lambda hm:
-            hm.boilerplate_audit(hm.with_boilerplate_html(_docs(s, d)))
-        )(__import__("pdf_parser_spark.operators.htmlmeta",
-                     fromlist=["x"])),
+        "p_boilerplate_audit": lambda s, d: htmlmeta.boilerplate_audit(
+            htmlmeta.with_boilerplate_html(_docs(s, d))
+        ),
         # SCD2 recrawl history: per-url validity intervals over 4 cycles
-        "u_scd2_history": lambda s, d: (lambda sn: sn.scd2_history(
-            sn.snapshot_series(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.snapshot", fromlist=["x"])),
+        "u_scd2_history": lambda s, d: snapshot.scd2_history(
+            snapshot.snapshot_series(_docs(s, d))
+        ),
         # adaptive recrawl scheduling: exponential backoff for stable urls
-        "u_recrawl_schedule": lambda s, d: (lambda sn: sn.recrawl_schedule(
-            sn.snapshot_series(_docs(s, d))
-        ))(__import__("pdf_parser_spark.operators.snapshot", fromlist=["x"])),
+        "u_recrawl_schedule": lambda s, d: snapshot.recrawl_schedule(
+            snapshot.snapshot_series(_docs(s, d))
+        ),
         # redirect-chain resolution: terminal url per source in O(log L)
         # pointer-doubling shuffles; oracle walks the same chains with a
         # recursive CTE (the synthesized graph is acyclic by construction;

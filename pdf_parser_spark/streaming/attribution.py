@@ -26,9 +26,6 @@ per batch, no joins in the stateful stage.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -36,25 +33,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pdf_parser_spark.plans.relational import ATTR_LOOKBACK_S, ATTR_TOUCHES
-
-EVENTS_SCHEMA = StructType([
-    StructField("event_id", LongType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink, replay
 
 OUTPUT_SCHEMA = StructType([
     StructField("event_id", LongType(), True),
@@ -124,33 +106,12 @@ def stream_attribution(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def attribution_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: one batch through the stateful walk; the
     batch w8_attribution SQL is the oracle verbatim."""
-    work = tempfile.mkdtemp(prefix="attr_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "attr_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_attribution(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("event_id").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "events.parquet"), stream_attribution
+    ).orderBy("event_id")

@@ -36,9 +36,6 @@ O(batch seconds x window) per user with no joins in the stateful stage.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -55,7 +52,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_parser_spark.plans.relational import BOT_RPM_MIN, BOT_WINDOW_S
-from pdf_parser_spark.streaming.trending import EVENTS_SCHEMA
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink, replay
 
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType(), True),
@@ -126,33 +123,12 @@ def stream_bot_detect(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def bot_detect_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: one batch through the stateful fold; the
     batch W9 SQL is the oracle verbatim."""
-    work = tempfile.mkdtemp(prefix="bot_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "bot_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_bot_detect(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("user_id").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "events.parquet"), stream_bot_detect
+    ).orderBy("user_id")

@@ -24,7 +24,6 @@ EventTimeTimeout exactly as streaming/sessionize.py does).
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import uuid
 from typing import Any, Iterable, Iterator
@@ -35,6 +34,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
+
+from pdf_parser_spark.streaming.replay import memory_sink
 
 OBS_SCHEMA = StructType([
     StructField("doc_id", LongType(), True),
@@ -80,13 +81,7 @@ def stream_change_feed(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def change_feed_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,14 +94,14 @@ def change_feed_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pdf_parser_spark.operators.snapshot import N_SNAPSHOTS, snapshot_series
 
-    work = tempfile.mkdtemp(prefix="changefeed_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
     name = "feed_" + uuid.uuid4().hex[:8]
-    try:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        series = snapshot_series(docs).toPandas()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    series = snapshot_series(docs).toPandas()
+    with tempfile.TemporaryDirectory(
+        prefix="changefeed_stream_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        os.makedirs(in_dir)
         q = None
         for t in range(N_SNAPSHOTS):
             cycle = series[series["snap_ts"] == t]
@@ -115,11 +110,9 @@ def change_feed_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(in_dir, f"cycle{t}.parquet"),
             )
             if q is None:
-                q = stream_change_feed(spark, in_dir, ckpt, name)
+                q = stream_change_feed(
+                    spark, in_dir, os.path.join(work, "ckpt"), name
+                )
             q.processAllAvailable()
         q.stop()
-        out = spark.table(name).orderBy("doc_id", "snap_ts").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return spark.table(name).orderBy("doc_id", "snap_ts")

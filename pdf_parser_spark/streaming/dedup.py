@@ -19,23 +19,11 @@ so the output is the exact distinct set.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType, StringType, StructField, StructType,
-)
 
-DOCS_SCHEMA = StructType([
-    StructField("doc_id", LongType(), True),
-    StructField("text", StringType(), True),
-    StructField("lang", StringType(), True),
-    StructField("source", StringType(), True),
-    StructField("n_chars", LongType(), True),
-])
+from pdf_parser_spark.streaming.replay import DOCS_SCHEMA, memory_sink, replay
 
 
 def stream_dedup(
@@ -46,46 +34,16 @@ def stream_dedup(
     docs = spark.readStream.schema(DOCS_SCHEMA).parquet(input_dir)
     fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
     deduped = docs.withColumn("fp", fp).select("fp").dropDuplicates(["fp"])
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(deduped, query_name, checkpoint_dir)
 
 
 def dedup_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: stream the documents table through the dedup
     operator and return the surviving fingerprint set as a batch DataFrame
     (oracle-comparable to SELECT DISTINCT fp)."""
-    work = tempfile.mkdtemp(prefix="dedup_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "dedup_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_dedup(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("fp").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-PAGES_TS_SCHEMA = StructType([
-    StructField("doc_id", LongType(), True),
-    StructField("text", StringType(), True),
-    StructField("lang", StringType(), True),
-    StructField("source", StringType(), True),
-    StructField("n_chars", LongType(), True),
-])
+    return replay(
+        spark, os.path.join(sf_dir, "documents.parquet"), stream_dedup
+    ).orderBy("fp")
 
 
 def stream_dedup_within_watermark(
@@ -124,13 +82,7 @@ def stream_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["fp"])
         .select("fp")
     )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(deduped, query_name, checkpoint_dir)
 
 
 def dedup_watermark_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,21 +90,7 @@ def dedup_watermark_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     state row before its duplicates arrive, so the surviving set equals the
     exact DISTINCT oracle — the eviction semantics are pinned separately in
     pytest with a multi-batch replay."""
-    work = tempfile.mkdtemp(prefix="dedup_wm_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "dedupwm_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_dedup_within_watermark(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("fp").persist()
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "documents.parquet"),
+        stream_dedup_within_watermark,
+    ).orderBy("fp")

@@ -24,15 +24,13 @@ two live feeds joined on key + event-time proximity.
 
 from __future__ import annotations
 
+import functools
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.streaming.windowed import EVENTS_SCHEMA
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink, replay
 
 ATTR_HOURS = 24       # click attributes to a view up to this long before it
 JOIN_WATERMARK = "2 hours"
@@ -70,46 +68,25 @@ def stream_attribution_join(
             f"AND click_ts <= view_ts + interval {int(attr_hours)} hours"
         ),
     ).select("user_id", "view_id", "click_id", "view_ts", "click_ts")
-    return (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(joined, query_name, checkpoint_dir)
 
 
 def attribution_join_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness for the oracle: one batch through the real
     stream-stream join; timestamps surfaced as floor-epoch-seconds BIGINTs
     (the st_window_counts casting doctrine)."""
-    work = tempfile.mkdtemp(prefix="attrjoin_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "attrjoin_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
+    return (
+        replay(
+            spark, os.path.join(sf_dir, "events.parquet"),
+            stream_attribution_join,
         )
-        q = stream_attribution_join(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            spark.table(name)
-            .select(
-                "user_id", "view_id", "click_id",
-                F.col("view_ts").cast("long").alias("view_ts_s"),
-                F.col("click_ts").cast("long").alias("click_ts_s"),
-            )
-            .orderBy("user_id", "view_id", "click_id")
-            .persist()
+        .select(
+            "user_id", "view_id", "click_id",
+            F.col("view_ts").cast("long").alias("view_ts_s"),
+            F.col("click_ts").cast("long").alias("click_ts_s"),
         )
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("user_id", "view_id", "click_id")
+    )
 
 
 def stream_static_enrich(
@@ -138,13 +115,7 @@ def stream_static_enrich(
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("complete")
-        .start()
-    )
+    return memory_sink(agg, query_name, checkpoint_dir, "complete")
 
 
 USER_TIER_MOD = 3  # synthetic user dim: tier = user_id % 3 -> gold/silver/bronze
@@ -164,27 +135,10 @@ def user_tier_dim(spark: SparkSession) -> DataFrame:
 def static_enrich_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: one batch through the real stream-static
     join + complete-mode rollup; equals the batch join GROUP BY oracle."""
-    work = tempfile.mkdtemp(prefix="ssenrich_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "ssenrich_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_static_enrich(spark, in_dir, ckpt, name, user_tier_dim(spark))
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            spark.table(name)
-            .select("tier", "event_type", "n_events",
-                    "min_event_id", "max_event_id")
-            .orderBy("tier", "event_type")
-            .persist()
-        )
-        out.count()
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    enrich = functools.partial(stream_static_enrich, dim=user_tier_dim(spark))
+    return (
+        replay(spark, os.path.join(sf_dir, "events.parquet"), enrich)
+        .select("tier", "event_type", "n_events",
+                "min_event_id", "max_event_id")
+        .orderBy("tier", "event_type")
+    )

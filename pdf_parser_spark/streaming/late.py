@@ -37,9 +37,7 @@ or Kafka source.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import tempfile
 import time
 import uuid
@@ -47,22 +45,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.streaming.windowed import EVENTS_SCHEMA
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, land, memory_sink
 
 SPLIT1 = "2024-01-11 00:00:00"  # batch0/batch1 boundary (all SFs span Jan)
 SPLIT2 = "2024-01-21 00:00:00"  # batch1/batch3 boundary
 WATERMARK = "30 minutes"
 WINDOW = "1 hour"
-
-
-def _write_one(df: DataFrame, directory: str, name: str, mtime: float) -> None:
-    tmp = os.path.join(directory, "_tmp_" + name)
-    df.coalesce(1).write.parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    dst = os.path.join(directory, name)
-    os.rename(part, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.utime(dst, (mtime, mtime))
 
 
 def late_replay(spark: SparkSession, sf_dir: str):
@@ -74,16 +62,21 @@ def late_replay(spark: SparkSession, sf_dir: str):
     b1 = ev.where((F.col("ts") >= F.lit(SPLIT1)) & (F.col("ts") < F.lit(SPLIT2)))
     b3 = ev.where(F.col("ts") >= F.lit(SPLIT2))
 
-    work = tempfile.mkdtemp(prefix="late_replay_")
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir)
     name = "late_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="late_replay_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        os.makedirs(in_dir)
         now = time.time()
-        _write_one(b0, in_dir, "batch0.parquet", now - 300)
-        _write_one(b1, in_dir, "batch1.parquet", now - 200)
-        _write_one(b0, in_dir, "batch2.parquet", now - 100)  # re-delivery
-        _write_one(b3, in_dir, "batch3.parquet", now)
+        for f, df, mtime in (
+            ("batch0.parquet", b0, now - 300),
+            ("batch1.parquet", b1, now - 200),
+            ("batch2.parquet", b0, now - 100),  # re-delivery
+            ("batch3.parquet", b3, now),
+        ):
+            # explicit mtimes: the file source replays in mtime order
+            os.utime(land(df, in_dir, f), (mtime, mtime))
 
         events = (
             spark.readStream.schema(EVENTS_SCHEMA)
@@ -99,32 +92,22 @@ def late_replay(spark: SparkSession, sf_dir: str):
                 F.max("event_id").alias("max_event_id"),
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
+        q = memory_sink(agg, name, os.path.join(work, "ckpt"))
         q.processAllAvailable()
         progress = [p for p in q.recentProgress]
         q.stop()
-        out = (
-            spark.table(name)
-            .select(
-                F.col("window.start").cast("long").alias("window_start"),
-                "event_type",
-                "n_events",
-                "min_event_id",
-                "max_event_id",
-            )
-            .orderBy("window_start", "event_type")
-            .persist()
+    out = (
+        spark.table(name)
+        .select(
+            F.col("window.start").cast("long").alias("window_start"),
+            "event_type",
+            "n_events",
+            "min_event_id",
+            "max_event_id",
         )
-        out.count()  # materialize before the temp input dir is deleted
-        return out, progress
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("window_start", "event_type")
+    )
+    return out, progress
 
 
 def late_events_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,9 +30,6 @@ groupBy(band, bucket) that co-locates state.  At 10^12 docs the state is
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -43,7 +40,7 @@ from pyspark.sql.types import (
     LongType, StringType, StructField, StructType,
 )
 
-from pdf_parser_spark.streaming.dedup import DOCS_SCHEMA
+from pdf_parser_spark.streaming.replay import DOCS_SCHEMA, memory_sink, replay
 
 OUTPUT_SCHEMA = StructType([
     StructField("band", LongType(), True),
@@ -100,13 +97,7 @@ def stream_neardup(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def neardup_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,25 +105,6 @@ def neardup_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup feed as ONE batch and return the candidate rows (oracle =
     per-bucket min-keeper x later members, since one batch makes first-seen
     and min-election coincide)."""
-    work = tempfile.mkdtemp(prefix="neardup_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "neardup_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_neardup(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            spark.table(name)
-            .orderBy("band", "bucket", "doc_id")
-            .persist()
-        )
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "documents.parquet"), stream_neardup
+    ).orderBy("band", "bucket", "doc_id")

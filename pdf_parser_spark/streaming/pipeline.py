@@ -10,12 +10,16 @@ window aggregation is demonstrated in streaming_metrics()."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pdf_parser_spark.operators.extract import extract_stage
 from pdf_parser_spark.sources.pages import PAGES_SCHEMA
+from pdf_parser_spark.streaming.replay import land, memory_sink
 
 
 def stream_extract(
@@ -56,13 +60,7 @@ def streaming_metrics(
         .groupBy(F.window("warc_ts", window), "lang")
         .count()
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName("pages_by_window")
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(agg, "pages_by_window", checkpoint_dir)
 
 
 def stream_upsert_table(
@@ -165,43 +163,28 @@ def gdpr_delete_via_stream(spark: SparkSession, sf_dir: str):
     becomes one snapshot, a single batch of delete requests (every
     doc_id % 7 == 0) streams through the sink, and the merged read is the
     result — the oracle states the survivor set directly."""
-    import os
-    import shutil
-    import tempfile
-
     from pdf_parser_spark.sources import tableformat as tf
 
-    work = tempfile.mkdtemp(prefix="gdpr_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    tbl = os.path.join(work, "tbl")
-    os.makedirs(in_dir)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gdpr_stream_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        tbl = os.path.join(work, "tbl")
+        os.makedirs(in_dir)
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         tf.append_snapshot(
             docs.select("doc_id", "lang", "source").coalesce(2), tbl)
-        staged = os.path.join(work, "staged")
-        (
-            docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
-            .coalesce(1).write.parquet(staged)
-        )
-        for i, f in enumerate(sorted(os.listdir(staged))):
-            if f.endswith(".parquet"):
-                shutil.move(os.path.join(staged, f),
-                            os.path.join(in_dir, f"b{i}.parquet"))
-        q = stream_delete_table(spark, in_dir, tbl, ckpt)
+        land(docs.where(F.col("doc_id") % 7 == 0).select("doc_id"),
+             in_dir, "b0.parquet")
+        q = stream_delete_table(spark, in_dir, tbl, os.path.join(work, "ckpt"))
         q.processAllAvailable()
         q.stop()
-        out = (
+        return (
             tf.read_table(spark, tbl)
             .select("doc_id", "lang", "source")
             .orderBy("doc_id")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        out.count()  # materialize before the temp table dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def stream_partitioned_ingest(
@@ -262,33 +245,21 @@ def partitioned_ingest_via_stream(spark: SparkSession, sf_dir: str):
     only source columns.  One hash covers: the streaming ingest, the
     exactly-once ledger, the transform derivation, and the residual
     filters."""
-    import os
-    import shutil
-    import tempfile
-
     from pdf_parser_spark.sources import tableformat as tf
 
-    work = tempfile.mkdtemp(prefix="part_ingest_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    tbl = os.path.join(work, "tbl")
-    os.makedirs(in_dir)
     spec = [("day", "ts"), ("bucket", 4, "event_type")]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="part_ingest_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        tbl = os.path.join(work, "tbl")
+        os.makedirs(in_dir)
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        staged = os.path.join(work, "staged")
         # two deterministic halves -> two single-file micro-batches
-        ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-            os.path.join(staged, "a"))
-        ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-            os.path.join(staged, "b"))
-        for i, sub in enumerate(("a", "b")):
-            for f in sorted(os.listdir(os.path.join(staged, sub))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staged, sub, f),
-                                os.path.join(in_dir, f"b{i}.parquet"))
+        b0 = land(ev.where(F.col("event_id") % 2 == 0), in_dir, "b0.parquet")
+        land(ev.where(F.col("event_id") % 2 == 1), in_dir, "b1.parquet")
         q = stream_partitioned_ingest(
-            spark, in_dir, tbl, ckpt, spec, ev.schema,
+            spark, in_dir, tbl, os.path.join(work, "ckpt"), spec, ev.schema,
             app_id="ingest",
         )
         q.processAllAvailable()
@@ -296,8 +267,7 @@ def partitioned_ingest_via_stream(spark: SparkSession, sf_dir: str):
         # replay batch 0 with its recorded token: MUST skip (exactly-once)
         v_before = tf.current_version(tbl)
         v_after = tf.partitioned_append(
-            spark.read.parquet(os.path.join(in_dir, "b0.parquet")),
-            tbl, spec, token="ingest:0",
+            spark.read.parquet(b0), tbl, spec, token="ingest:0",
         )
         assert v_after == v_before, (v_before, v_after)
         df, n_read, n_total = tf.scan_table(
@@ -306,7 +276,7 @@ def partitioned_ingest_via_stream(spark: SparkSession, sf_dir: str):
                         ("event_type", "=", "click")],
         )
         assert n_read < n_total, (n_read, n_total)
-        out = (
+        return (
             df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("ds"))
             .agg(
                 F.count("*").alias("n_events"),
@@ -314,12 +284,8 @@ def partitioned_ingest_via_stream(spark: SparkSession, sf_dir: str):
                 F.sum("event_id").alias("sum_ids"),
             )
             .orderBy("ds")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        out.count()  # materialize before the temp table dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def stream_gated_ingest(
@@ -381,20 +347,15 @@ def gated_ingest_via_stream(spark: SparkSession, sf_dir: str):
     Final state = batches 0 and 2 only — a leaked poisoned batch, a
     dropped clean batch, or a doubled replay each hash-mismatch the
     per-lang rollup."""
-    import os
-    import shutil
-    import tempfile
-
     from pdf_parser_spark.sources import tableformat as tf
 
-    work = tempfile.mkdtemp(prefix="gated_ingest_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    tbl = os.path.join(work, "tbl")
-    os.makedirs(in_dir)
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gated_ingest_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        tbl = os.path.join(work, "tbl")
+        os.makedirs(in_dir)
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        staged_dir = os.path.join(work, "staged")
         for i in range(3):
             part = docs.where(F.col("doc_id") % 3 == i)
             if i == 1:  # the batch the audit must reject
@@ -403,11 +364,7 @@ def gated_ingest_via_stream(spark: SparkSession, sf_dir: str):
                     F.when(F.col("doc_id") % 5 == 0, F.lit("zz"))
                     .otherwise(F.col("lang")),
                 )
-            part.coalesce(1).write.parquet(os.path.join(staged_dir, str(i)))
-            for f in sorted(os.listdir(os.path.join(staged_dir, str(i)))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staged_dir, str(i), f),
-                                os.path.join(in_dir, f"b{i}.parquet"))
+            land(part, in_dir, f"b{i}.parquet")
 
         def _audit(staged_view) -> bool:
             # batch-scoped gate stated on the staged TABLE view: no
@@ -415,7 +372,8 @@ def gated_ingest_via_stream(spark: SparkSession, sf_dir: str):
             return staged_view.where(F.col("lang") == "zz").count() == 0
 
         q = stream_gated_ingest(
-            spark, in_dir, tbl, ckpt, docs.schema, _audit, app_id="gated",
+            spark, in_dir, tbl, os.path.join(work, "ckpt"), docs.schema,
+            _audit, app_id="gated",
         )
         q.processAllAvailable()
         q.stop()
@@ -427,7 +385,7 @@ def gated_ingest_via_stream(spark: SparkSession, sf_dir: str):
             spark.read.parquet(os.path.join(in_dir, "b0.parquet")), tbl,
         ), token="gated:0")
         assert v == 2, v
-        out = (
+        return (
             tf.read_table(spark, tbl)
             .groupBy("lang")
             .agg(
@@ -436,12 +394,8 @@ def gated_ingest_via_stream(spark: SparkSession, sf_dir: str):
                 F.sum("n_chars").alias("sum_chars"),
             )
             .orderBy("lang")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        out.count()  # materialize before the temp table dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def stream_mv_maintain(
@@ -535,17 +489,14 @@ def mv_maintain_via_stream(spark: SparkSession, sf_dir: str):
     equal a direct aggregation of the final base state.  A missed -1 on
     a group move, a doubled replay, or a lost batch each hash-mismatch;
     the in-harness token replay pins the ledger the sink relies on."""
-    import os
-    import shutil
-    import tempfile
-
     from pdf_parser_spark.sources import tableformat as tf
 
-    work = tempfile.mkdtemp(prefix="mv_stream_")
-    in_dir = os.path.join(work, "in")
-    os.makedirs(in_dir)
-    base, mv = os.path.join(work, "base"), os.path.join(work, "mv")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mv_stream_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        os.makedirs(in_dir)
+        base, mv = os.path.join(work, "base"), os.path.join(work, "mv")
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         batches = [
             docs.where(F.col("doc_id") % 2 == 0),
@@ -553,13 +504,8 @@ def mv_maintain_via_stream(spark: SparkSession, sf_dir: str):
             docs.where(F.col("doc_id") % 7 == 0)
             .withColumn("lang", F.upper("lang")),
         ]
-        staged = os.path.join(work, "staged")
         for i, b in enumerate(batches):
-            b.coalesce(1).write.parquet(os.path.join(staged, str(i)))
-            for f in sorted(os.listdir(os.path.join(staged, str(i)))):
-                if f.endswith(".parquet"):
-                    shutil.move(os.path.join(staged, str(i), f),
-                                os.path.join(in_dir, f"b{i}.parquet"))
+            land(b, in_dir, f"b{i}.parquet")
         q = stream_mv_maintain(
             spark, in_dir, base, mv, os.path.join(work, "ckpt"),
             docs.schema, key="doc_id", group_col="lang", app_id="mv",
@@ -571,13 +517,9 @@ def mv_maintain_via_stream(spark: SparkSession, sf_dir: str):
         assert tf.overwrite_snapshot(
             spark.range(1).withColumnRenamed("id", "lang"), mv, token="mv:0"
         ) == 3
-        out = (
+        return (
             tf.read_table(spark, mv)
             .select("lang", "n_rows")
             .orderBy("lang")
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        out.count()  # materialize before the temp table dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

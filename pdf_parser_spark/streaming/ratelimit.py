@@ -37,9 +37,6 @@ broadcast dim join upstream.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -49,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from pdf_parser_spark.streaming.dedup import DOCS_SCHEMA
+from pdf_parser_spark.streaming.replay import DOCS_SCHEMA, memory_sink, replay
 
 OUTPUT_SCHEMA = StructType([
     StructField("doc_id", LongType(), True),
@@ -128,34 +125,13 @@ def stream_rate_limit(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def rate_limit_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: one batch through the limiter; the closed
     form emit_n = delay*n + running_max(arrival_k - delay*k) is the
     oracle."""
-    work = tempfile.mkdtemp(prefix="ratelimit_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "ratelimit_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "documents.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_rate_limit(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("doc_id").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "documents.parquet"), stream_rate_limit
+    ).orderBy("doc_id")

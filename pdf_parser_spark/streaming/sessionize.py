@@ -33,18 +33,9 @@ from typing import Any, Iterable, Iterator, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-EVENTS_SCHEMA = StructType([
-    StructField("event_id", LongType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink
 
 OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType(), True),
@@ -156,13 +147,7 @@ def stream_sessionize(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(sessions, query_name, checkpoint_dir)
 
 
 def _write_advancer(path: str, ts_us: int) -> None:
@@ -194,22 +179,23 @@ def sessionize_via_stream(
     at its start every real user's EventTimeTimeout fires and the final open
     sessions flush.  Advancer rows use user_id = -1 and are filtered out.
     """
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    work = tempfile.mkdtemp(prefix="sessionize_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
+    src = os.path.join(sf_dir, "events.parquet")
+    ts_col = pq.read_table(src, columns=["ts"])["ts"]
+    max_us = pc.max(ts_col).cast("int64").as_py()
+    gap_us = gap_minutes * 60 * 1_000_000
     name = "sessions_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
+    with tempfile.TemporaryDirectory(
+        prefix="sessionize_stream_", ignore_cleanup_errors=True
+    ) as work:
+        in_dir = os.path.join(work, "in")
+        os.makedirs(in_dir)
         shutil.copy(src, os.path.join(in_dir, "batch0.parquet"))
-        ts_col = pq.read_table(src, columns=["ts"])["ts"]
-        import pyarrow.compute as pc
-
-        max_us = pc.max(ts_col).cast("int64").as_py()
-        gap_us = gap_minutes * 60 * 1_000_000
-        q = stream_sessionize(spark, in_dir, ckpt, name, gap_minutes)
+        q = stream_sessionize(
+            spark, in_dir, os.path.join(work, "ckpt"), name, gap_minutes
+        )
         q.processAllAvailable()
         _write_advancer(
             os.path.join(in_dir, "batch1.parquet"), max_us + gap_us + 3_600_000_000
@@ -220,13 +206,4 @@ def sessionize_via_stream(
         )
         q.processAllAvailable()
         q.stop()
-        out = (
-            spark.table(name)
-            .where("user_id >= 0")
-            .orderBy("user_id", "session_id")
-            .persist()
-        )
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return spark.table(name).where("user_id >= 0").orderBy("user_id", "session_id")

@@ -40,9 +40,6 @@ the per-key fold stays embarrassingly key-parallel).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -50,26 +47,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink, replay
 
 TREND_WINDOW_S = 3600       # one event-time window = one decay half-life
 TREND_SHIFT_CLAMP = 62      # gaps beyond this zero the carried score
-
-EVENTS_SCHEMA = StructType([
-    StructField("event_id", LongType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
 
 OUTPUT_SCHEMA = StructType([
     StructField("event_type", StringType(), True),
@@ -138,33 +121,12 @@ def stream_trending(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        feed.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
+    return memory_sink(feed, query_name, checkpoint_dir)
 
 
 def trending_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded replay harness: one batch through the stateful fold; the
     recursive-CTE window chain is the oracle."""
-    work = tempfile.mkdtemp(prefix="trend_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "trend_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
-        )
-        q = stream_trending(spark, in_dir, ckpt, name)
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(name).orderBy("event_type", "win").persist()
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return replay(
+        spark, os.path.join(sf_dir, "events.parquet"), stream_trending
+    ).orderBy("event_type", "win")

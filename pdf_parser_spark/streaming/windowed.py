@@ -14,25 +14,13 @@ dropped before state lookup.
 
 from __future__ import annotations
 
+import functools
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
-)
 
-EVENTS_SCHEMA = StructType([
-    StructField("event_id", LongType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
+from pdf_parser_spark.streaming.replay import EVENTS_SCHEMA, memory_sink, replay
 
 
 def stream_window_counts(
@@ -58,13 +46,7 @@ def stream_window_counts(
             F.max("event_id").alias("max_event_id"),
         )
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
-    )
+    return memory_sink(agg, query_name, checkpoint_dir, output_mode)
 
 
 def window_counts_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,34 +54,15 @@ def window_counts_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-batch replay never advances the watermark past the tail windows,
     so append mode would under-emit; complete mode yields every window and
     must equal the batch GROUP BY date_trunc oracle exactly)."""
-    work = tempfile.mkdtemp(prefix="winagg_stream_")
-    in_dir = os.path.join(work, "in")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(in_dir)
-    name = "winagg_" + uuid.uuid4().hex[:8]
-    try:
-        shutil.copy(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(in_dir, "batch0.parquet"),
+    complete = functools.partial(stream_window_counts, output_mode="complete")
+    return (
+        replay(spark, os.path.join(sf_dir, "events.parquet"), complete)
+        .select(
+            F.col("window.start").cast("long").alias("window_start"),
+            "event_type",
+            "n_events",
+            "min_event_id",
+            "max_event_id",
         )
-        q = stream_window_counts(
-            spark, in_dir, ckpt, name, output_mode="complete"
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = (
-            spark.table(name)
-            .select(
-                F.col("window.start").cast("long").alias("window_start"),
-                "event_type",
-                "n_events",
-                "min_event_id",
-                "max_event_id",
-            )
-            .orderBy("window_start", "event_type")
-            .persist()
-        )
-        out.count()  # materialize before the temp input dir is deleted
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("window_start", "event_type")
+    )

@@ -5957,6 +5957,23 @@ def test_run_lineage_face_resume_split(spark):
         assert r["n_ok"] + r["n_error"] == r["n_rows"]
 
 
+@pytest.mark.parametrize("name", [
+    "st_dedup", "st_change_feed", "st_gdpr_delete", "u_table_time_travel",
+    "extract_pipeline",
+])
+def test_scratch_faces_leave_no_session_cache(spark, name):
+    """A registry face that runs over temporary files returns a memory-sink
+    table or an eager localCheckpoint, never a persisted frame: once its
+    rows are collected, nothing it built is left in the session's cache
+    manager (a persisted frame would stay there until the session ends)."""
+    import __spark_entry__ as entry
+    from tests.conftest import SF001
+
+    spark.catalog.clearCache()
+    assert entry.queries()[name](spark, SF001).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pdf_tj_flavor_produces_identical_line_grid():
     """doc_id % 7 == 5 content streams use Tm/TL/T*/TJ instead of Td/Tj
     chains but must parse to EXACTLY the formula line grid the oracles

@@ -2,7 +2,9 @@
 on Spark and its oracle_sql() on DuckDB at a given sf dir, compare row count,
 column-name set, and the order-insensitive multiset of values (exact equality
 — the engine is DESIGNED to be hash-identical, floats rounded at 4dp on both
-sides).
+sides).  The session cache is cleared before each face; a face that leaves
+an entry in it (a persisted frame nobody unpersists) prints LEAK and counts
+as a failure.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
@@ -29,8 +31,6 @@ def normalize(v):
         if v == 0:
             return 0.0
         return v
-    if isinstance(v, int):
-        return float(v) if False else v
     if hasattr(v, "isoformat"):
         return v.isoformat()
     if isinstance(v, list):
@@ -65,10 +65,12 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     oracles = entrymod.oracle_sql()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spark.catalog.clearCache()
         try:
             sdf = fn(spark, sf_dir)
             srows = [r.asDict(recursive=True) for r in sdf.collect()]
@@ -77,6 +79,9 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {exc}")
             failures += 1
             continue
+        if not cache_manager.isEmpty():
+            print(f"LEAK  {name}")
+            failures += 1
         if name not in oracles:
             print(f"ROWS  {name}: {len(srows)} rows (no oracle — rows-only check)")
             if len(srows) == 0:
