@@ -44,8 +44,6 @@ PUBLIC_SUFFIXES = (
 )
 MAX_SUFFIX_LABELS = 3
 
-DEFAULT_PORTS = {"http": ":80", "https": ":443"}
-
 
 def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Add raw parse columns (scheme, host, port_s, path, query_s, frag) —

@@ -10,10 +10,19 @@ HadoopTableOperations does it (public spec: iceberg.apache.org/spec):
 - data files are immutable parquet files under ``data/``;
 - a SNAPSHOT is a manifest (JSON list of data-file paths + row counts +
   the parent snapshot) under ``metadata/``;
-- the table state is a single ``v<N>.json`` version file; a commit WRITES
-  the new version to a temp name and RENAMES it into place — rename is
-  atomic on POSIX and HDFS, so two concurrent committers race on the
-  rename and exactly one wins (the loser retries on top of the winner);
+- the table state is a single ``v<N>.json`` version file, and every
+  commit follows ONE rule (``_link``): write the new version to a temp
+  name, then hard-link it to ``v<N+1>.json``.  The link is atomic and
+  fails if the name exists, so two concurrent committers race on it and
+  exactly one wins.  The loser has one of two outcomes, picked by the
+  commit's kind: an APPEND (append, partitioned append, WAP publish,
+  branch append, fast-forward) RETRIES on top of the winner's manifest,
+  because appends commute; a REWRITE (everything else) REFUSES with a
+  ``RuntimeError`` naming the op and removes its orphaned data files
+  (``_commit_rewrite``), because it was computed against a base that is
+  no longer current;
+- a new version is its parent's STATE (``_state``) plus its own
+  per-commit keys plus whatever the commit changes (``_successor``);
 - readers list the version files, pick the highest N (or a requested
   older one = TIME TRAVEL), and read exactly that manifest's files —
   never a directory glob, so concurrent appends and orphaned files from
@@ -32,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,8 +51,14 @@ def _meta_dir(path: str) -> str:
     return os.path.join(path, "metadata")
 
 
-def _versions(path: str) -> list[int]:
-    md = _meta_dir(path)
+def _load(p: str) -> dict:
+    with open(p) as f:
+        return json.load(f)
+
+
+def _versions(md: str) -> list[int]:
+    """Sorted version numbers of the ``v<N>.json`` files in a metadata dir
+    (the main chain's or a branch's)."""
     if not os.path.isdir(md):
         return []
     out = []
@@ -56,15 +72,169 @@ def _versions(path: str) -> list[int]:
 
 
 def current_version(path: str) -> int:
-    vs = _versions(path)
+    vs = _versions(_meta_dir(path))
     if not vs:
         raise FileNotFoundError(f"no table at {path}")
     return vs[-1]
 
 
 def _read_version(path: str, n: int) -> dict:
-    with open(os.path.join(_meta_dir(path), f"v{n}.json")) as f:
-        return json.load(f)
+    return _load(os.path.join(_meta_dir(path), f"v{n}.json"))
+
+
+def _main_head(path: str) -> tuple[int, dict]:
+    """(version, manifest) of main's latest commit; (0, {}) for a table
+    with no version yet (versions start at 1)."""
+    vs = _versions(_meta_dir(path))
+    if not vs:
+        return 0, {}
+    return vs[-1], _read_version(path, vs[-1])
+
+
+def _link(md: str, name: str, body: dict) -> bool:
+    """THE commit rule: write ``body`` to a temp file in ``md`` and
+    hard-link it to ``name``.  The link fails with EEXIST if a racer got
+    there first, so of two committers exactly one wins.  Returns whether
+    this one did; the temp file is removed either way."""
+    tmp = os.path.join(md, f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+    try:
+        os.link(tmp, os.path.join(md, name))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
+def _commit_rewrite(path: str, version: dict, op: str) -> int:
+    """Link a REWRITE's version onto main, or refuse: a rewrite was
+    computed against its base, so retrying on top of a racer would drop
+    the racer's rows (or put them under this commit's sequence number).
+    A lost race removes the op's orphaned data dir, if it wrote one, and
+    raises — Iceberg's validation failure on conflicting commits."""
+    n = version["version"]
+    if not _link(_meta_dir(path), f"v{n}.json", version):
+        shutil.rmtree(
+            os.path.join(path, "data", version["snapshot_id"]),
+            ignore_errors=True,
+        )
+        raise RuntimeError(
+            f"concurrent commit beat {op} of v{n - 1}; "
+            "re-run against the new current version"
+        )
+    return n
+
+
+def _state(meta: dict) -> dict:
+    """A manifest's STATE: everything a new version inherits from its
+    parent unless the commit changes it.  The rest of a manifest is
+    per-commit — version, snapshot_id, parent_version, added_files,
+    added_rows and the commit-kind markers — and is never inherited."""
+    return {
+        "all_files": meta.get("all_files", []),
+        "file_stats": meta.get("file_stats", {}),
+        # data sequence numbers (Iceberg v2): each data file remembers the
+        # commit that added it, so a MOR equality delete (seq D) applies
+        # only to files with seq < D — a row re-inserted AFTER the delete
+        # survives it.  Self-contained per manifest (never reconstructed
+        # from history: expire_snapshots drops old version files).
+        "file_seq": meta.get("file_seq", {}),
+        # pending merge-on-read delete files ride forward untouched
+        "delete_files": meta.get("delete_files", []),
+        "schema": meta.get("schema"),
+        "retired_columns": meta.get("retired_columns", []),
+        "applied_tokens": meta.get("applied_tokens", []),
+        **_part_meta(meta),
+    }
+
+
+def _successor(
+    parent: dict, base: int, snap_id: str | None = None,
+    added_files: list[str] | None = None, added_rows: int = 0, **changes,
+) -> dict:
+    """Version ``base + 1``: ``parent``'s state, this commit's per-commit
+    keys, then the fields the commit changes (``changes`` wins).  A
+    metadata-only commit passes no ``snap_id`` and gets a fresh one."""
+    return {
+        **_state(parent),
+        "version": base + 1,
+        "snapshot_id": snap_id or uuid.uuid4().hex[:12],
+        "parent_version": base or None,  # base 0: the first version
+        "added_files": added_files or [],
+        "added_rows": added_rows,
+        **changes,
+    }
+
+
+def _with_token(meta: dict, token: str | None) -> list:
+    """The exactly-once ledger after a commit that carries ``token``."""
+    return meta.get("applied_tokens", []) + (
+        [token] if token is not None else []
+    )
+
+
+def _write_data(
+    writer, path: str, snap_id: str | None = None
+) -> tuple[str, list[str], dict]:
+    """Write one commit's immutable data files under ``data/<snap_id>``
+    (a fresh id unless given) through a DataFrameWriter.  Returns the
+    snapshot id, the sorted parquet files (hive partition dirs included)
+    and each file's footer zone map (``_file_stats``)."""
+    snap_id = snap_id or uuid.uuid4().hex[:12]
+    data_dir = os.path.join(path, "data", snap_id)
+    writer.parquet(data_dir)
+    files = sorted(
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(data_dir)
+        for f in names
+        if f.endswith(".parquet")
+    )
+    return snap_id, files, {f: _file_stats(f) for f in files}
+
+
+def _rows(spark: SparkSession, files: list[str]) -> int:
+    """Row count from the WRITTEN files — counting the source frame again
+    would re-execute its whole plan (2x an Arrow extraction subtree's
+    cost)."""
+    return spark.read.parquet(*files).count() if files else 0
+
+
+def _refuse_retired(meta: dict, schema) -> None:
+    """Name-based column mapping (no field-ids): a writer re-adding a name
+    ``drop_columns`` retired would resurrect the old files' values —
+    refuse instead of silently diverging from Iceberg's fresh-field-id
+    NULLs.  Every writer checks its schema here."""
+    retired = meta.get("retired_columns", [])
+    revived = [f.name for f in schema.fields if f.name in retired]
+    if revived:
+        raise ValueError(
+            f"columns {revived} were dropped from this table; "
+            "re-adding a retired name is not supported"
+        )
+
+
+def _refuse_pending_deletes(meta: dict, op: str) -> None:
+    """A rewrite computed from raw data files would resurrect rows that
+    pending merge-on-read deletes hide — purge them first."""
+    if meta.get("delete_files"):
+        raise RuntimeError(
+            f"{op} refuses with merge-on-read deletes pending; "
+            "run purge_deletes first"
+        )
+
+
+def _read_meta(spark: SparkSession, meta: dict) -> DataFrame:
+    """The rows a manifest describes: its data files, with any pending
+    merge-on-read deletes applied — a table with pending deletes is never
+    readable in its undeleted form."""
+    dels = meta.get("delete_files", [])
+    if not dels:
+        return _read_files(spark, meta, meta["all_files"])
+    return _apply_deletes(
+        spark, meta["all_files"], meta.get("file_seq", {}), dels, meta
+    )
 
 
 def _read_files(spark: SparkSession, meta: dict, files: list[str]) -> DataFrame:
@@ -118,17 +288,14 @@ def _token_applied(path: str, token: str | None) -> bool:
     paying for its data files."""
     if token is None:
         return False
-    vs = _versions(path)
-    if not vs:
-        return False
-    return token in _read_version(path, vs[-1]).get("applied_tokens", [])
+    return token in _main_head(path)[1].get("applied_tokens", [])
 
 
 def append_snapshot(df: DataFrame, path: str, token: str | None = None) -> int:
     """Append df as a new snapshot; returns the committed version number.
 
     Write path: data files first (invisible until committed), then the
-    version file via write-temp + atomic rename.  If another committer
+    version file via write-temp + atomic link.  If another committer
     won the race for v<N>, retry as v<N+1> on top of THEIR manifest —
     serializable append semantics, no locks.
 
@@ -139,41 +306,10 @@ def append_snapshot(df: DataFrame, path: str, token: str | None = None) -> int:
     """
     if _token_applied(path, token):
         return current_version(path)
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
-    df.write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    return _commit_snapshot(df, path, snap_id, files, token=token)
-
-
-def _commit_snapshot(
-    df: DataFrame, path: str, snap_id: str, files: list[str],
-    partition_spec: list | None = None,
-    file_partitions: dict | None = None,
-    token: str | None = None,
-) -> int:
-    """Shared manifest-commit loop for append_snapshot and
-    partitioned_append: footer stats + the atomic link-rename retry race.
-    The token re-check inside the loop closes the race window between the
-    caller's cheap pre-write check and the commit (two concurrent replays
-    of one batch: the loser re-reads the winner's manifest, sees the
-    token, and skips — its orphaned data files stay invisible, the same
-    fate as any failed commit's, until GC)."""
-    # count from the WRITTEN files' footers — counting `df` again would
-    # re-execute its whole plan (2x an Arrow extraction subtree's cost)
-    n_rows = df.sparkSession.read.parquet(*files).count() if files else 0
-    # zone maps from the same footers: per-file min/max per column, carried
-    # in the manifest so scan_table can eliminate files from metadata alone
-    stats = {f: _file_stats(f) for f in files}
+    snap_id, files, stats = _write_data(df.write, path)
     return _commit_manifest(
-        df.schema, path, snap_id, files, n_rows, stats,
-        partition_spec=partition_spec, file_partitions=file_partitions,
-        token=token,
+        df.schema, path, snap_id, files, _rows(df.sparkSession, files),
+        stats, token=token,
     )
 
 
@@ -183,31 +319,32 @@ def _commit_manifest(
     partition_spec: list | None = None,
     file_partitions: dict | None = None,
     token: str | None = None,
+    branch: str | None = None,
 ) -> int:
-    """Metadata-only half of the commit: the atomic link-rename retry
-    race over precomputed footer stats.  Split out of _commit_snapshot so
-    publish_staged can commit a WAP-staged snapshot's already-written
-    files without touching a DataFrame (the stage pass computed the
-    stats; publish is pure metadata — Iceberg's cherry-pick)."""
+    """The APPEND commit over already-written files and their footer
+    stats, shared by append_snapshot, partitioned_append, publish_staged
+    (pure metadata — Iceberg's cherry-pick) and branch_append (the
+    version lands in ``branch``'s metadata dir instead of main's).  A
+    lost race retries on top of the winner's manifest.
+
+    The token re-check inside the loop closes the race window between the
+    caller's cheap pre-write check and the commit (two concurrent replays
+    of one batch: the loser re-reads the winner's manifest, sees the
+    token, and skips — its orphaned data files stay invisible, the same
+    fate as any failed commit's, until GC)."""
+    md = _meta_dir(path) if branch is None else _branch_meta_dir(path, branch)
+    os.makedirs(md, exist_ok=True)
+    fparts = file_partitions or {}
     while True:
-        vs = _versions(path)
-        base = vs[-1] if vs else 0
-        parent = (
-            _read_version(path, base) if vs else {"all_files": [], "file_stats": {}}
-        )
-        retired = parent.get("retired_columns", [])
-        revived = [f.name for f in schema.fields if f.name in retired]
-        if revived:
-            # name-based column mapping (no field-ids): re-adding a dropped
-            # name would resurrect the old files' values — refuse instead
-            # of silently diverging from Iceberg's fresh-field-id NULLs
-            raise ValueError(
-                f"columns {revived} were dropped from this table; "
-                "re-adding a retired name is not supported"
-            )
+        if branch is None:
+            base, parent = _main_head(path)
+        else:
+            base, parent = _branch_head(path, branch)
+        _refuse_retired(parent, schema)
         if token is not None and token in parent.get("applied_tokens", []):
             return base  # a racer applied this batch; skip, files orphan
         specs, cur_id = _specs_of(parent)
+        spec_meta: dict = {}
         if partition_spec is not None:
             cur_spec = specs.get(cur_id) if cur_id is not None else None
             if cur_spec is not None and cur_spec != partition_spec:
@@ -219,63 +356,37 @@ def _commit_manifest(
                     f"table at {path} is currently partitioned by "
                     f"{cur_spec}; append brings spec {partition_spec}"
                 )
-            if cur_id is None:
-                specs, cur_id = {"0": [list(t) for t in partition_spec]}, "0"
-        version = {
-            "version": base + 1,
-            "snapshot_id": snap_id,
-            "parent_version": base if vs else None,
-            "added_files": files,
-            "added_rows": n_rows,
-            "all_files": parent["all_files"] + files,
-            "file_stats": {**parent.get("file_stats", {}), **stats},
-            "schema": _merged_schema_json(parent.get("schema"), schema),
-            "retired_columns": retired,
-            # data sequence numbers (Iceberg v2): each data file remembers
-            # the commit that added it, so a MOR equality delete (seq D)
-            # applies only to files with seq < D — a row re-inserted AFTER
-            # the delete survives it.  Self-contained per manifest (never
-            # reconstructed from history: expire_snapshots drops old
-            # version files).
-            "file_seq": {
+            if cur_id is None:  # the first partitioned append fixes it
+                cur_id = "0"
+                spec_meta = {
+                    "partition_spec": partition_spec,
+                    "partition_specs": {"0": partition_spec},
+                    "current_spec_id": "0",
+                }
+        version = _successor(
+            parent, base, snap_id, files, n_rows,
+            all_files=parent.get("all_files", []) + files,
+            file_stats={**parent.get("file_stats", {}), **stats},
+            file_seq={
                 **parent.get("file_seq", {}),
                 **{f: base + 1 for f in files},
             },
-            # pending merge-on-read delete files ride forward untouched
-            "delete_files": parent.get("delete_files", []),
-            "applied_tokens": parent.get("applied_tokens", [])
-            + ([token] if token is not None else []),
-            # hidden partitioning: the table's transform specs (per-file
-            # spec ids — Iceberg partition-spec evolution) plus each
-            # file's partition tuple (string values as written in the hive
-            # dirs; files without a tuple are never partition-pruned).
-            # "partition_spec" stays the CURRENT spec for back-compat.
-            "partition_spec": (
-                specs.get(cur_id) if cur_id is not None else None
-            ),
-            "partition_specs": specs or None,
-            "current_spec_id": cur_id,
-            "file_spec_ids": {
+            schema=_merged_schema_json(parent.get("schema"), schema),
+            applied_tokens=_with_token(parent, token),
+            # hidden partitioning: each file's partition tuple (string
+            # values as written in the hive dirs) under the spec id it was
+            # written with; files without a tuple are never
+            # partition-pruned
+            file_spec_ids={
                 **parent.get("file_spec_ids", {}),
-                **({f: cur_id for f in (file_partitions or {})}
-                   if cur_id is not None else {}),
+                **{f: cur_id for f in fparts},
             },
-            "file_partitions": {
-                **parent.get("file_partitions", {}),
-                **(file_partitions or {}),
-            },
-        }
-        tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(version, f)
-        target = os.path.join(_meta_dir(path), f"v{base + 1}.json")
-        try:
-            # atomic commit: link fails with EEXIST if a racer won
-            os.link(tmp, target)
-            os.unlink(tmp)
+            file_partitions={**parent.get("file_partitions", {}), **fparts},
+            **spec_meta,
+            **({"branch": branch} if branch is not None else {}),
+        )
+        if _link(md, f"v{base + 1}.json", version):
             return base + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race -> re-read state and retry
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +448,7 @@ def partitioned_append(
 ) -> int:
     """Append df under a partition spec: derive the partition-value columns,
     write hive-layout (`_p0=.../_p1=...`), record each data file's partition
-    TUPLE in the manifest, and commit through the same atomic-rename race as
+    TUPLE in the manifest, and commit through the same atomic-link race as
     append_snapshot.  The partition columns exist only in directory names —
     the recorded table schema is df's own, so reads never see them (hidden).
 
@@ -351,41 +462,32 @@ def partitioned_append(
     if _token_applied(path, token):
         return current_version(path)
     spec = [list(t) for t in spec]
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
     pnames = [f"_p{i}" for i in range(len(spec))]
     out = df
     for name, t in zip(pnames, spec):
         _, expr = _transform_expr(t)
         out = out.withColumn(name, expr)
-    out.write.partitionBy(*pnames).parquet(data_dir)
-    files, fparts = [], {}
-    for root, _dirs, names in os.walk(data_dir):
-        for fname in sorted(names):
-            if not fname.endswith(".parquet"):
+    snap_id, files, stats = _write_data(out.write.partitionBy(*pnames), path)
+    data_dir = os.path.join(path, "data", snap_id)
+    fparts = {}
+    for fpath in files:
+        vals: dict[str, str | None] = {}
+        for seg in os.path.relpath(fpath, data_dir).split(os.sep)[:-1]:
+            if "=" not in seg:
                 continue
-            fpath = os.path.join(root, fname)
-            rel = os.path.relpath(fpath, data_dir)
-            vals: dict[str, str | None] = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" not in seg:
-                    continue
-                k, _, raw = seg.partition("=")
-                raw = urllib.parse.unquote(raw)
-                vals[k] = None if raw == _HIVE_NULL else raw
-            files.append(fpath)
-            fparts[fpath] = [vals.get(p) for p in pnames]
-    files.sort()
-    return _commit_snapshot(
-        df, path, snap_id, files,
-        partition_spec=spec, file_partitions=fparts, token=token,
+            k, _, raw = seg.partition("=")
+            raw = urllib.parse.unquote(raw)
+            vals[k] = None if raw == _HIVE_NULL else raw
+        fparts[fpath] = [vals.get(p) for p in pnames]
+    return _commit_manifest(
+        df.schema, path, snap_id, files, _rows(df.sparkSession, files),
+        stats, partition_spec=spec, file_partitions=fparts, token=token,
     )
 
 
 def rollback_to(path: str, version: int) -> int:
     """METADATA-ONLY rollback (Iceberg `rollback_to_snapshot`): commit a
-    NEW version whose state is a byte-for-byte copy of an older one —
+    NEW version whose state (``_state``) is a copy of an older one's —
     history moves FORWARD (the bad commits stay in the chain, time travel
     still reaches them, and the audit trail shows both the mistake and
     the recovery), only the current pointer's state rewinds.  The one
@@ -399,7 +501,7 @@ def rollback_to(path: str, version: int) -> int:
     version (no-op churn).  Pending MOR delete files are part of the
     copied state, so they roll back WITH it — a delete committed after
     the target simply ceases to be pending (its file stays on disk until
-    GC, unreferenced).  Race-refuses like every commit here.  Appears as
+    GC, unreferenced).  Race-refuses like every rewrite here.  Appears as
     kind 'rollback' in the snapshots metadata table."""
     base_version = current_version(path)
     if version == base_version:
@@ -411,38 +513,13 @@ def rollback_to(path: str, version: int) -> int:
             f"version {version} of {path} does not exist (or was expired)"
         )
     cur = _read_version(path, base_version)
-    tokens = list(dict.fromkeys(
-        target.get("applied_tokens", []) + cur.get("applied_tokens", [])
-    ))
-    # strip the target's own commit-kind markers: the new commit's kind
-    # is 'rollback', not whatever the target commit happened to be
-    _markers = ("fast_forward_of", "overwrite_of", "purge_of",
-                "compaction_of", "zorder_by", "evolved_spec_to",
-                "rollback_of")
-    new = {
-        **{k: v for k, v in target.items() if k not in _markers},
-        "version": base_version + 1,
-        "snapshot_id": uuid.uuid4().hex[:12],
-        "parent_version": base_version,
-        "rollback_of": version,
-        "added_files": [],
-        "added_rows": 0,
-        "applied_tokens": tokens,
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(new, f)
-    tgt = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, tgt)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"concurrent commit beat rollback_to of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return base_version + 1
+    return _commit_rewrite(path, _successor(
+        target, base_version,
+        rollback_of=version,
+        applied_tokens=list(dict.fromkeys(
+            target.get("applied_tokens", []) + cur.get("applied_tokens", [])
+        )),
+    ), "rollback_to")
 
 
 def evolve_partition_spec(path: str, new_spec: list) -> int:
@@ -470,41 +547,13 @@ def evolve_partition_spec(path: str, new_spec: list) -> int:
             f"table at {path} already has current spec {new_spec}"
         )
     next_id = str(max((int(i) for i in specs), default=-1) + 1)
-    new_specs = {**specs, next_id: new_spec}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": uuid.uuid4().hex[:12],
-        "parent_version": base_version,
-        "evolved_spec_to": next_id,
-        "added_files": [],
-        "added_rows": 0,
-        "all_files": meta["all_files"],
-        "file_stats": meta.get("file_stats", {}),
-        "file_seq": meta.get("file_seq", {}),
-        "delete_files": meta.get("delete_files", []),
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", []),
-        "partition_spec": new_spec,
-        "partition_specs": new_specs,
-        "current_spec_id": next_id,
-        "file_partitions": meta.get("file_partitions", {}),
-        "file_spec_ids": meta.get("file_spec_ids", {}),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"concurrent commit beat evolve_partition_spec of "
-            f"v{base_version}; re-run against the new current version"
-        )
-    return base_version + 1
+    return _commit_rewrite(path, _successor(
+        meta, base_version,
+        evolved_spec_to=next_id,
+        partition_spec=new_spec,
+        partition_specs={**specs, next_id: new_spec},
+        current_spec_id=next_id,
+    ), "evolve_partition_spec")
 
 
 def _specs_of(meta: dict) -> tuple[dict, str | None]:
@@ -537,6 +586,31 @@ def _part_meta(meta: dict, kept: list[str] | None = None) -> dict:
         "file_spec_ids": (
             fs if kept is None else {f: v for f, v in fs.items() if f in kept}
         ),
+    }
+
+
+def _rewrite_state(
+    meta: dict, base: int, kept: list[str], new_files: list[str], stats: dict
+) -> dict:
+    """The data-file state after a REWRITE of ``meta`` (overwrite,
+    compaction, z-order, merge, purge): the ``kept`` files keep their
+    stats, sequence number and partition tuple; ``new_files`` join at the
+    new version's sequence with their footer ``stats`` and no tuple; no
+    delete is pending any more."""
+    seq = meta.get("file_seq", {})
+    return {
+        "all_files": kept + new_files,
+        "file_stats": {
+            **{f: s for f, s in meta.get("file_stats", {}).items()
+               if f in kept},
+            **stats,
+        },
+        "file_seq": {
+            **{f: seq.get(f, 0) for f in kept},
+            **{f: base + 1 for f in new_files},
+        },
+        "delete_files": [],
+        **_part_meta(meta, kept),
     }
 
 
@@ -727,25 +801,19 @@ def read_table(
     them (``_apply_deletes``) — a table with pending deletes is never
     readable in its undeleted form."""
     v = current_version(path) if version is None else version
-    meta = _read_version(path, v)
-    dels = meta.get("delete_files", [])
-    if not dels:
-        return _read_files(spark, meta, meta["all_files"])
-    return _apply_deletes(
-        spark, meta["all_files"], meta.get("file_seq", {}), dels, meta
-    )
+    return _read_meta(spark, _read_version(path, v))
 
 
 def snapshots(path: str) -> list[dict]:
     """Version history (driver-side metadata, one tiny JSON per version)."""
-    return [_read_version(path, n) for n in _versions(path)]
+    return [_read_version(path, n) for n in _versions(_meta_dir(path))]
 
 
 def rollback(path: str, version: int) -> None:
     """Drop version files above `version` — the table's current state
     becomes that snapshot (data files stay; they are unreachable, exactly
     like Iceberg until a GC/expire pass)."""
-    for n in _versions(path):
+    for n in _versions(_meta_dir(path)):
         if n > version:
             os.unlink(os.path.join(_meta_dir(path), f"v{n}.json"))
 
@@ -775,48 +843,34 @@ def stage_append(df: DataFrame, path: str) -> str:
     if pruning matters for the batch."""
     os.makedirs(_meta_dir(path), exist_ok=True)
     wap_id = uuid.uuid4().hex[:12]
-    snap_id = f"wap-{wap_id}"
-    data_dir = os.path.join(path, "data", snap_id)
-    df.write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    staged = {
+    snap_id, files, stats = _write_data(df.write, path, f"wap-{wap_id}")
+    # a fresh wap_id cannot lose the link
+    _link(_meta_dir(path), f"staged-{wap_id}.json", {
         "wap_id": wap_id,
         "snapshot_id": snap_id,
         "files": files,
-        "added_rows": (
-            df.sparkSession.read.parquet(*files).count() if files else 0
-        ),
-        "file_stats": {f: _file_stats(f) for f in files},
+        "added_rows": _rows(df.sparkSession, files),
+        "file_stats": stats,
         "schema": df.schema.json(),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(staged, f)
-    os.rename(tmp, os.path.join(_meta_dir(path), f"staged-{wap_id}.json"))
+    })
     return wap_id
 
 
 def list_staged(path: str) -> list[dict]:
     """Pending staged snapshots (driver-side metadata listing)."""
     md = _meta_dir(path)
-    out = []
-    for f in sorted(os.listdir(md) if os.path.isdir(md) else []):
-        if f.startswith("staged-") and f.endswith(".json"):
-            with open(os.path.join(md, f)) as fh:
-                out.append(json.load(fh))
-    return out
+    return [
+        _load(os.path.join(md, f))
+        for f in sorted(os.listdir(md) if os.path.isdir(md) else [])
+        if f.startswith("staged-") and f.endswith(".json")
+    ]
 
 
 def _staged_meta(path: str, wap_id: str) -> dict:
     sp = os.path.join(_meta_dir(path), f"staged-{wap_id}.json")
     if not os.path.exists(sp):
         raise FileNotFoundError(f"no staged snapshot {wap_id} at {path}")
-    with open(sp) as f:
-        return json.load(f)
+    return _load(sp)
 
 
 def read_staged(spark: SparkSession, path: str, wap_id: str) -> DataFrame:
@@ -830,41 +884,24 @@ def read_staged(spark: SparkSession, path: str, wap_id: str) -> DataFrame:
     from pyspark.sql.types import StructType
 
     st = _staged_meta(path, wap_id)
-    vs = _versions(path)
-    base = vs[-1] if vs else 0
-    parent = (
-        _read_version(path, base)
-        if vs
-        else {"all_files": [], "file_stats": {}}
-    )
-    retired = parent.get("retired_columns", [])
+    base, parent = _main_head(path)
     st_schema = StructType.fromJson(json.loads(st["schema"]))
-    revived = [f.name for f in st_schema.fields if f.name in retired]
-    if revived:
-        # publish would refuse this commit — refuse the preview too
-        raise ValueError(
-            f"columns {revived} were dropped from this table; "
-            "re-adding a retired name is not supported"
-        )
-    meta = {
-        "all_files": parent["all_files"] + st["files"],
+    # publish would refuse this commit — refuse the preview too
+    _refuse_retired(parent, st_schema)
+    return _read_meta(spark, {
+        "all_files": parent.get("all_files", []) + st["files"],
         "file_seq": {
             **parent.get("file_seq", {}),
             **{f: base + 1 for f in st["files"]},
         },
         "delete_files": parent.get("delete_files", []),
         "schema": _merged_schema_json(parent.get("schema"), st_schema),
-    }
-    if not meta["delete_files"]:
-        return _read_files(spark, meta, meta["all_files"])
-    return _apply_deletes(
-        spark, meta["all_files"], meta["file_seq"], meta["delete_files"], meta
-    )
+    })
 
 
 def publish_staged(path: str, wap_id: str, token: str | None = None) -> int:
     """Commit a staged snapshot as the next table version — pure
-    metadata through the same atomic-rename race as every other commit,
+    metadata through the same atomic-link race as every other append,
     REBASED onto whatever the current head is (appends that landed after
     the stage are kept; an append commutes with them, which is exactly
     why Iceberg cherry-picks only append/dynamic-overwrite snapshots).
@@ -885,8 +922,7 @@ def publish_staged(path: str, wap_id: str, token: str | None = None) -> int:
         if _token_applied(path, tok):
             return current_version(path)
         raise FileNotFoundError(f"no staged snapshot {wap_id} at {path}")
-    with open(sp) as f:
-        st = json.load(f)
+    st = _load(sp)
     v = _commit_manifest(
         StructType.fromJson(json.loads(st["schema"])), path,
         st["snapshot_id"], st["files"], st["added_rows"], st["file_stats"],
@@ -1078,8 +1114,7 @@ def read_ref(path: str, name: str) -> dict | None:
     p = os.path.join(_refs_dir(path), f"{name}.json")
     if not os.path.exists(p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    return _load(p)
 
 
 def list_refs(path: str) -> dict:
@@ -1088,26 +1123,18 @@ def list_refs(path: str) -> dict:
     if not os.path.isdir(rd):
         return {}
     return {
-        f[:-5]: json.load(open(os.path.join(rd, f)))
+        f[:-5]: _load(os.path.join(rd, f))
         for f in sorted(os.listdir(rd)) if f.endswith(".json")
     }
 
 
 def _create_ref(path: str, name: str, kind: str, version: int | None) -> dict:
     v = current_version(path) if version is None else version
-    if v not in _versions(path):
+    if v not in _versions(_meta_dir(path)):
         raise ValueError(f"version {v} does not exist on the main chain")
     os.makedirs(_refs_dir(path), exist_ok=True)
     ref = {"type": kind, "version": v}
-    tmp = os.path.join(_refs_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(ref, f)
-    target = os.path.join(_refs_dir(path), f"{name}.json")
-    try:
-        os.link(tmp, target)  # atomic: refuse if the name exists
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
+    if not _link(_refs_dir(path), f"{name}.json", ref):
         raise ValueError(f"ref '{name}' already exists")
     return ref
 
@@ -1132,20 +1159,6 @@ def drop_ref(path: str, name: str) -> None:
     os.unlink(os.path.join(_refs_dir(path), f"{name}.json"))
 
 
-def _branch_versions(path: str, name: str) -> list[int]:
-    bd = _branch_meta_dir(path, name)
-    if not os.path.isdir(bd):
-        return []
-    out = []
-    for f in os.listdir(bd):
-        if f.startswith("v") and f.endswith(".json"):
-            try:
-                out.append(int(f[1:-5]))
-            except ValueError:
-                pass
-    return sorted(out)
-
-
 def _branch_head(path: str, name: str) -> tuple[int, dict]:
     """(version, manifest) of the branch head — the last branch commit,
     or the fork-point main manifest if the branch has none yet.  Branch
@@ -1154,11 +1167,10 @@ def _branch_head(path: str, name: str) -> tuple[int, dict]:
     ref = read_ref(path, name)
     if ref is None or ref["type"] != "branch":
         raise ValueError(f"no branch named '{name}'")
-    bvs = _branch_versions(path, name)
+    bd = _branch_meta_dir(path, name)
+    bvs = _versions(bd)
     if bvs:
-        with open(os.path.join(
-                _branch_meta_dir(path, name), f"v{bvs[-1]}.json")) as f:
-            return bvs[-1], json.load(f)
+        return bvs[-1], _load(os.path.join(bd, f"v{bvs[-1]}.json"))
     return ref["version"], _read_version(path, ref["version"])
 
 
@@ -1167,55 +1179,15 @@ def branch_append(
 ) -> int:
     """Append df to a BRANCH — same write path as append_snapshot (data
     files first, then the atomic-link manifest race, schema-evolution
-    merge, exactly-once token ledger), but the version file lands in the
-    branch's metadata dir, so main readers never see it.  Branch commits
-    are append-only by design (the audit-series workflow); row-level
-    rewrites happen on main after the fast-forward."""
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
-    df.write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, f) for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+    merge, retired-name refusal, exactly-once token ledger), but the
+    version file lands in the branch's metadata dir, so main readers never
+    see it.  Branch commits are append-only by design (the audit-series
+    workflow); row-level rewrites happen on main after the fast-forward."""
+    snap_id, files, stats = _write_data(df.write, path)
+    return _commit_manifest(
+        df.schema, path, snap_id, files, _rows(df.sparkSession, files),
+        stats, token=token, branch=name,
     )
-    n_rows = df.sparkSession.read.parquet(*files).count() if files else 0
-    stats = {f: _file_stats(f) for f in files}
-    bd = _branch_meta_dir(path, name)
-    os.makedirs(bd, exist_ok=True)
-    while True:
-        base, parent = _branch_head(path, name)
-        if token is not None and token in parent.get("applied_tokens", []):
-            return base
-        version = {
-            "version": base + 1,
-            "snapshot_id": snap_id,
-            "parent_version": base,
-            "branch": name,
-            "added_files": files,
-            "added_rows": n_rows,
-            "all_files": parent["all_files"] + files,
-            "file_stats": {**parent.get("file_stats", {}), **stats},
-            "schema": _merged_schema_json(parent.get("schema"), df.schema),
-            "retired_columns": parent.get("retired_columns", []),
-            "file_seq": {
-                **parent.get("file_seq", {}),
-                **{f: base + 1 for f in files},
-            },
-            "delete_files": parent.get("delete_files", []),
-            "applied_tokens": parent.get("applied_tokens", [])
-            + ([token] if token is not None else []),
-            **_part_meta(parent),
-        }
-        tmp = os.path.join(bd, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(version, f)
-        target = os.path.join(bd, f"v{base + 1}.json")
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
-            return base + 1
-        except FileExistsError:
-            os.unlink(tmp)  # lost the race on THIS branch; retry
 
 
 def read_ref_table(spark: SparkSession, path: str, name: str) -> DataFrame:
@@ -1227,13 +1199,7 @@ def read_ref_table(spark: SparkSession, path: str, name: str) -> DataFrame:
         raise ValueError(f"no ref named '{name}'")
     if ref["type"] == "tag":
         return read_table(spark, path, version=ref["version"])
-    _, meta = _branch_head(path, name)
-    dels = meta.get("delete_files", [])
-    if not dels:
-        return _read_files(spark, meta, meta["all_files"])
-    return _apply_deletes(
-        spark, meta["all_files"], meta.get("file_seq", {}), dels, meta
-    )
+    return _read_meta(spark, _branch_head(path, name)[1])
 
 
 def fast_forward(path: str, name: str, token: str | None = None) -> dict:
@@ -1270,33 +1236,22 @@ def fast_forward(path: str, name: str, token: str | None = None) -> dict:
                 f"'{name}' forked at v{fork} — re-branch and re-apply"
             )
         new_v = main_v + 1
-        fseq = dict(head.get("file_seq", {}))
-        for f, s in list(fseq.items()):
-            if int(s) > fork:  # branch-added file -> renumber to new_v
-                fseq[f] = new_v
-        version = {
-            **{k: v for k, v in head.items() if k != "branch"},
-            "version": new_v,
-            "parent_version": main_v,
-            "fast_forward_of": name,
-            "added_files": [
-                f for f in head["all_files"] if f not in main["all_files"]
-            ],
-            "file_seq": fseq,
-            "applied_tokens": main.get("applied_tokens", [])
-            + ([token] if token is not None else []),
-        }
-        tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(version, f)
-        target = os.path.join(_meta_dir(path), f"v{new_v}.json")
-        try:
-            os.link(tmp, target)
-            os.unlink(tmp)
+        version = _successor(
+            head, main_v, head["snapshot_id"],
+            [f for f in head["all_files"] if f not in main["all_files"]],
+            head.get("added_rows", 0),
+            fast_forward_of=name,
+            # branch-added file (seq past the fork) -> renumber to new_v
+            file_seq={
+                f: new_v if int(s) > fork else s
+                for f, s in head.get("file_seq", {}).items()
+            },
+            applied_tokens=_with_token(main, token),
+        )
+        # a lost race loops back and re-checks the fork rule
+        if _link(_meta_dir(path), f"v{new_v}.json", version):
             return {"version": new_v, "skipped": False,
                     "n_published": head_v - fork}
-        except FileExistsError:
-            os.unlink(tmp)  # racer moved main; loop re-checks fork rule
 
 
 def expire_snapshots(
@@ -1314,10 +1269,9 @@ def expire_snapshots(
     naively-timed GC — only snapshot dirs older than the cutoff are
     collected (Iceberg's orphan-file age guard; pass 0 only when no writer
     can be active)."""
-    import shutil
     import time
 
-    vs = _versions(path)
+    vs = _versions(_meta_dir(path))
     refs = list_refs(path)
     # a version NAMED by any ref is retained regardless of age: tags pin
     # it directly, branches need their fork point for _branch_head — the
@@ -1334,10 +1288,9 @@ def expire_snapshots(
     # every branch commit's state is live until the branch is dropped
     for name, r in refs.items():
         if r["type"] == "branch":
+            bd = _branch_meta_dir(path, name)
             metas.extend(
-                json.load(open(os.path.join(
-                    _branch_meta_dir(path, name), f"v{b}.json")))
-                for b in _branch_versions(path, name)
+                _load(os.path.join(bd, f"v{b}.json")) for b in _versions(bd)
             )
     for meta in metas:
         reachable.update(meta["all_files"])
@@ -1389,66 +1342,18 @@ def overwrite_snapshot(
     if _token_applied(path, token):
         return current_version(path)
     os.makedirs(_meta_dir(path), exist_ok=True)
-    vs = _versions(path)
-    base = vs[-1] if vs else 0
-    parent = _read_version(path, base) if vs else {}
-    if parent.get("delete_files"):
-        raise RuntimeError(
-            "overwrite_snapshot refuses with merge-on-read deletes "
-            "pending; run purge_deletes first"
-        )
-    retired = parent.get("retired_columns", [])
-    revived = [f.name for f in df.schema.fields if f.name in retired]
-    if revived:
-        raise ValueError(
-            f"columns {revived} were dropped from this table; "
-            "re-adding a retired name is not supported"
-        )
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
-    df.write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    version = {
-        "version": base + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base if vs else None,
-        "overwrite_of": base if vs else None,
-        "added_files": files,
-        "added_rows": (
-            df.sparkSession.read.parquet(*files).count() if files else 0
-        ),
-        "all_files": files,
-        "file_stats": {f: _file_stats(f) for f in files},
-        "file_seq": {f: base + 1 for f in files},
-        "delete_files": [],
+    base, parent = _main_head(path)
+    _refuse_pending_deletes(parent, "overwrite_snapshot")
+    _refuse_retired(parent, df.schema)
+    snap_id, files, stats = _write_data(df.write, path)
+    return _commit_rewrite(path, _successor(
+        parent, base, snap_id, files, _rows(df.sparkSession, files),
+        overwrite_of=base or None,
         # the overwrite's schema REPLACES the table's (content did)
-        "schema": _merged_schema_json(None, df.schema),
-        "retired_columns": retired,
-        "applied_tokens": parent.get("applied_tokens", [])
-        + ([token] if token is not None else []),
-        **_part_meta(parent, []),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-        return base + 1
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat overwrite of v{base}; re-run the "
-            "refresh against the new current version"
-        )
+        schema=_merged_schema_json(None, df.schema),
+        applied_tokens=_with_token(parent, token),
+        **_rewrite_state(parent, base, [], files, stats),
+    ), "overwrite")
 
 
 def compact_table(
@@ -1477,57 +1382,20 @@ def compact_table(
     zone-map scan still pruning correctly on the compacted stats)."""
     base_version = current_version(path)
     meta = _read_version(path, base_version)
-    if meta.get("delete_files"):
-        raise RuntimeError(
-            "compact_table refuses with merge-on-read deletes pending; "
-            "run purge_deletes first"
-        )
+    _refuse_pending_deletes(meta, "compact_table")
     files = meta["all_files"]
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total // target_bytes))
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
-    _read_files(spark, meta, files).repartition(n_out).write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+    snap_id, new_files, stats = _write_data(
+        _read_files(spark, meta, files).repartition(n_out).write, path
     )
-    n_rows = spark.read.parquet(*new_files).count() if new_files else 0
-    stats = {f: _file_stats(f) for f in new_files}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "compaction_of": base_version,
-        "added_files": new_files,
-        "added_rows": 0,  # a rewrite adds no logical rows
-        "n_rows": n_rows,
-        "all_files": new_files,
-        "file_stats": stats,
-        "file_seq": {f: base_version + 1 for f in new_files},
-        "delete_files": [],
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", []),
-        **_part_meta(meta, []),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat compaction of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return base_version + 1
+    # a rewrite adds no logical rows (added_rows stays 0)
+    return _commit_rewrite(path, _successor(
+        meta, base_version, snap_id, new_files,
+        compaction_of=base_version,
+        n_rows=_rows(spark, new_files),
+        **_rewrite_state(meta, base_version, [], new_files, stats),
+    ), "compaction")
 
 
 def merge_snapshot(
@@ -1561,12 +1429,7 @@ def merge_snapshot(
 
     base_version = current_version(path)
     meta = _read_version(path, base_version)
-    if meta.get("delete_files"):
-        # a raw rewrite of affected files would resurrect MOR-deleted rows
-        raise RuntimeError(
-            "merge_snapshot refuses with merge-on-read deletes pending; "
-            "run purge_deletes first"
-        )
+    _refuse_pending_deletes(meta, "merge_snapshot")
     # NULL merge keys follow SQL MERGE semantics (NULL = NULL is not true):
     # they can never match an existing row, so they are pure inserts and
     # are excluded from file pruning (they also must not hit the range
@@ -1610,70 +1473,24 @@ def merge_snapshot(
         else:
             untouched.append(f)
     merged_schema = _merged_schema_json(meta.get("schema"), df.schema)
-    retired = meta.get("retired_columns", [])
-    revived = [f.name for f in df.schema.fields if f.name in retired]
-    if revived:
-        raise ValueError(
-            f"columns {revived} were dropped from this table; "
-            "re-adding a retired name is not supported"
-        )
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
+    _refuse_retired(meta, df.schema)
+    out = df
     if affected:
         kept = _read_files(spark, meta, affected).join(
             keyed.select(key).distinct(), key, "left_anti")
         # allowMissingColumns: an upsert batch may carry a NEW column
         # (schema evolution through MERGE) or omit an optional one
-        kept.unionByName(df, allowMissingColumns=True).write.parquet(data_dir)
-    else:
-        df.write.parquet(data_dir)
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    stats = {f: _file_stats(f) for f in new_files}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "merge_key": key,
-        "added_files": new_files,
-        "added_rows": 0,
-        "rewrote_files": affected,
-        "all_files": untouched + new_files,
-        "file_stats": {
-            **{f: s for f, s in meta.get("file_stats", {}).items()
-               if f in untouched},
-            **stats,
-        },
-        "file_seq": {
-            **{f: meta.get("file_seq", {}).get(f, 0) for f in untouched},
-            **{f: base_version + 1 for f in new_files},
-        },
-        "delete_files": [],
-        "schema": merged_schema,
-        "retired_columns": retired,
-        "applied_tokens": meta.get("applied_tokens", []),
-        **_part_meta(meta, untouched),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat merge of v{base_version}; "
-            "re-run against the new current version"
-        )
+        out = kept.unionByName(df, allowMissingColumns=True)
+    snap_id, new_files, stats = _write_data(out.write, path)
+    version = _commit_rewrite(path, _successor(
+        meta, base_version, snap_id, new_files,
+        merge_key=key,
+        rewrote_files=affected,
+        schema=merged_schema,
+        **_rewrite_state(meta, base_version, untouched, new_files, stats),
+    ), "merge")
     return {
-        "version": base_version + 1,
+        "version": version,
         "n_files_rewritten": len(affected),
         "n_files_untouched": len(untouched),
     }
@@ -1718,49 +1535,19 @@ def delete_keys(
     if token is not None and token in meta.get("applied_tokens", []):
         return {"version": base_version, "n_delete_files": 0,
                 "skipped": True}
-    snap_id = uuid.uuid4().hex[:12]
-    ddir = os.path.join(path, "data", snap_id)
-    (
+    snap_id, dfiles, stats = _write_data(
         keys.select(key).where(F.col(key).isNotNull()).distinct()
-        .coalesce(1).write.parquet(ddir)
+        .coalesce(1).write,
+        path,
     )
-    dfiles = sorted(
-        os.path.join(ddir, f) for f in os.listdir(ddir) if f.endswith(".parquet")
-    )
-    stats = {f: _file_stats(f) for f in dfiles}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "added_files": [],
-        "added_rows": 0,
-        "all_files": meta["all_files"],
-        "file_stats": {**meta.get("file_stats", {}), **stats},
-        "file_seq": meta.get("file_seq", {}),
-        "delete_files": meta.get("delete_files", [])
+    version = _commit_rewrite(path, _successor(
+        meta, base_version, snap_id,
+        file_stats={**meta.get("file_stats", {}), **stats},
+        delete_files=meta.get("delete_files", [])
         + [{"file": f, "key": key, "seq": base_version + 1} for f in dfiles],
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", [])
-        + ([token] if token is not None else []),
-        **_part_meta(meta),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(ddir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat delete of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return {"version": base_version + 1, "n_delete_files": len(dfiles),
+        applied_tokens=_with_token(meta, token),
+    ), "delete")
+    return {"version": version, "n_delete_files": len(dfiles),
             "skipped": False}
 
 
@@ -1825,15 +1612,11 @@ def delete_positions(
     if token is not None and token in meta.get("applied_tokens", []):
         return {"version": base_version, "n_delete_files": 0,
                 "n_targets": 0, "skipped": True}
-    snap_id = uuid.uuid4().hex[:12]
-    ddir = os.path.join(path, "data", snap_id)
-    pos = positions.select("file", "pos").where(
-        F.col("file").isNotNull() & F.col("pos").isNotNull()
-    ).distinct()
-    pos.coalesce(1).write.parquet(ddir)
-    dfiles = sorted(
-        os.path.join(ddir, f) for f in os.listdir(ddir)
-        if f.endswith(".parquet")
+    snap_id, dfiles, stats = _write_data(
+        positions.select("file", "pos").where(
+            F.col("file").isNotNull() & F.col("pos").isNotNull()
+        ).distinct().coalesce(1).write,
+        path,
     )
     # distinct target files: bounded by the table's file count (the same
     # driver-scalar class as the CDX shard boundaries), recorded in the
@@ -1842,41 +1625,15 @@ def delete_positions(
         r["file"]
         for r in spark.read.parquet(*dfiles).select("file").distinct().collect()
     )
-    stats = {f: _file_stats(f) for f in dfiles}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "added_files": [],
-        "added_rows": 0,
-        "all_files": meta["all_files"],
-        "file_stats": {**meta.get("file_stats", {}), **stats},
-        "file_seq": meta.get("file_seq", {}),
-        "delete_files": meta.get("delete_files", [])
+    version = _commit_rewrite(path, _successor(
+        meta, base_version, snap_id,
+        file_stats={**meta.get("file_stats", {}), **stats},
+        delete_files=meta.get("delete_files", [])
         + [{"file": f, "kind": "pos", "seq": base_version + 1,
             "targets": targets} for f in dfiles],
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", [])
-        + ([token] if token is not None else []),
-        **_part_meta(meta),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(ddir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat position-delete of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return {"version": base_version + 1, "n_delete_files": len(dfiles),
+        applied_tokens=_with_token(meta, token),
+    ), "position-delete")
+    return {"version": version, "n_delete_files": len(dfiles),
             "n_targets": len(targets), "skipped": False}
 
 
@@ -1927,56 +1684,18 @@ def purge_deletes(spark: SparkSession, path: str) -> dict:
                 must = True
                 break
         (affected if must else untouched).append(f)
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
-    new_files: list[str] = []
-    if affected:
-        _apply_deletes(spark, affected, fseq, dels, meta).write.parquet(data_dir)
-        new_files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if f.endswith(".parquet")
-        )
-    stats = {f: _file_stats(f) for f in new_files}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "purge_of": base_version,
-        "added_files": new_files,
-        "added_rows": 0,
-        "all_files": untouched + new_files,
-        "file_stats": {
-            **{f: s for f, s in fstats.items() if f in untouched},
-            **stats,
-        },
-        "file_seq": {
-            **{f: fseq.get(f, 0) for f in untouched},
-            **{f: base_version + 1 for f in new_files},
-        },
-        "delete_files": [],
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", []),
-        **_part_meta(meta, untouched),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat purge of v{base_version}; "
-            "re-run against the new current version"
-        )
+    snap_id, new_files, stats = (
+        _write_data(_apply_deletes(spark, affected, fseq, dels, meta).write,
+                    path)
+        if affected else (None, [], {})
+    )
+    version = _commit_rewrite(path, _successor(
+        meta, base_version, snap_id, new_files,
+        purge_of=base_version,
+        **_rewrite_state(meta, base_version, untouched, new_files, stats),
+    ), "purge")
     return {
-        "version": base_version + 1,
+        "version": version,
         "n_files_rewritten": len(affected),
         "n_files_untouched": len(untouched),
     }
@@ -1993,13 +1712,13 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
 
     The name is RETIRED permanently: this format maps columns by NAME, not
     Iceberg's field-ids, so re-adding a dropped name would resurrect the
-    old files' values — ``append_snapshot``/``merge_snapshot`` refuse it
+    old files' values — every writer refuses it (``_refuse_retired``)
     (stated divergence: Iceberg would give the re-added column a fresh
     field-id and read NULLs).
 
     Refuses to drop an unknown column, every column, or the key column of
     a pending merge-on-read delete (the read-side merge would lose its
-    join key).  Race-refuses like every commit here.  Returns the new
+    join key).  Race-refuses like every rewrite here.  Returns the new
     version number."""
     base_version = current_version(path)
     meta = _read_version(path, base_version)
@@ -2024,36 +1743,12 @@ def drop_columns(spark: SparkSession, path: str, cols: list[str]) -> int:
             f"columns {pinned} key pending merge-on-read deletes; "
             "run purge_deletes first"
         )
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": uuid.uuid4().hex[:12],
-        "parent_version": base_version,
-        "dropped_columns": cols,
-        "added_files": [],
-        "added_rows": 0,
-        "all_files": meta["all_files"],
-        "file_stats": meta.get("file_stats", {}),
-        "file_seq": meta.get("file_seq", {}),
-        "delete_files": meta.get("delete_files", []),
-        "schema": StructType(remaining).json(),
-        "retired_columns": meta.get("retired_columns", []) + list(cols),
-        "applied_tokens": meta.get("applied_tokens", []),
-        **_part_meta(meta),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        raise RuntimeError(
-            f"concurrent commit beat drop_columns of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return base_version + 1
+    return _commit_rewrite(path, _successor(
+        meta, base_version,
+        dropped_columns=cols,
+        schema=StructType(remaining).json(),
+        retired_columns=meta.get("retired_columns", []) + list(cols),
+    ), "drop_columns")
 
 
 def table_changes(
@@ -2140,17 +1835,11 @@ def zorder_table(
 
     base_version = current_version(path)
     meta = _read_version(path, base_version)
-    if meta.get("delete_files"):
-        raise RuntimeError(
-            "zorder_table refuses with merge-on-read deletes pending; "
-            "run purge_deletes first"
-        )
+    _refuse_pending_deletes(meta, "zorder_table")
     files = meta["all_files"]
     df = _read_files(spark, meta, files)
     total = sum(os.path.getsize(f) for f in files)
     n_out = n_files or max(1, -(-total // (8 * 1024 * 1024)))
-    snap_id = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", snap_id)
     n_buckets = 1 << ZORDER_BITS
     probs = [i / n_buckets for i in range(1, n_buckets)]
     qa, qb = df.approxQuantile(
@@ -2163,52 +1852,20 @@ def zorder_table(
                      outputCol="_za", handleInvalid="keep").transform(pre)
     pre = Bucketizer(splits=_zsplits(qb), inputCol="_zb_in",
                      outputCol="_zb", handleInvalid="keep").transform(pre)
-    (
+    snap_id, new_files, stats = _write_data(
         pre.withColumn("_z", _zvalue(F.col("_za").cast("long"),
                                      F.col("_zb").cast("long")))
         .repartitionByRange(n_out, F.col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z", "_za", "_zb", "_za_in", "_zb_in")
-        .write.parquet(data_dir)
+        .write,
+        path,
     )
-    new_files = sorted(
-        os.path.join(data_dir, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
-    )
-    stats = {f: _file_stats(f) for f in new_files}
-    version = {
-        "version": base_version + 1,
-        "snapshot_id": snap_id,
-        "parent_version": base_version,
-        "zorder_by": [col_a, col_b],
-        "added_files": new_files,
-        "added_rows": 0,
-        "all_files": new_files,
-        "file_stats": stats,
-        "file_seq": {f: base_version + 1 for f in new_files},
-        "delete_files": [],
-        "schema": meta.get("schema"),
-        "retired_columns": meta.get("retired_columns", []),
-        "applied_tokens": meta.get("applied_tokens", []),
-        **_part_meta(meta, []),
-    }
-    tmp = os.path.join(_meta_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(version, f)
-    target = os.path.join(_meta_dir(path), f"v{base_version + 1}.json")
-    try:
-        os.link(tmp, target)
-        os.unlink(tmp)
-    except FileExistsError:
-        os.unlink(tmp)
-        import shutil
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent commit beat zorder of v{base_version}; "
-            "re-run against the new current version"
-        )
-    return base_version + 1
+    return _commit_rewrite(path, _successor(
+        meta, base_version, snap_id, new_files,
+        zorder_by=[col_a, col_b],
+        **_rewrite_state(meta, base_version, [], new_files, stats),
+    ), "zorder")
 
 
 def incremental_mv(

@@ -36,10 +36,7 @@ from pyspark.sql import functions as F
 WARC_VERSION_LINE = "WARC/1.0\r\n"
 WARC_DATE = "2026-08-16T00:00:00Z"  # run-scoped literal, like entry RUN_TS
 
-# WARC-Target-URI synthesized for documents rows (oracle re-derives it)
-URI_SQL = "'https://' || source || '.example.com/doc/' || doc_id"
-
-
+# WARC-Target-URI synthesized for documents rows
 def _uri_col():
     return F.concat(
         F.lit("https://"), F.col("source"), F.lit(".example.com/doc/"), F.col("doc_id")

@@ -3581,6 +3581,12 @@ def test_schema_evolution_add_drop_and_refusals(spark, tmp_path):
         tf.append_snapshot(
             spark.createDataFrame([(5, "ghost")], "id long, a string")
             .coalesce(1), path)
+    # ... on a branch too: fast_forward would publish the revived values
+    tf.create_branch(path, "revive")
+    with _pytest.raises(ValueError, match="retired"):
+        tf.branch_append(
+            spark.createDataFrame([(5, "ghost")], "id long, a string")
+            .coalesce(1), path, "revive")
     with _pytest.raises(ValueError, match="cannot drop unknown"):
         tf.drop_columns(spark, path, ["nope"])
     with _pytest.raises(ValueError, match="cannot drop every"):
@@ -3596,6 +3602,65 @@ def test_schema_evolution_add_drop_and_refusals(spark, tmp_path):
         spark, spark.createDataFrame([(1,)], "id long"), path, "id")
     with _pytest.raises(ValueError, match="purge_deletes"):
         tf.drop_columns(spark, path, ["id"])
+
+
+# every commit that rewrites table state refuses a lost race instead of
+# retrying on top of the racer (only appends retry)
+_REWRITE_OPS = {
+    "rollback_to": lambda s, tf, p: tf.rollback_to(p, 1),
+    "evolve_partition_spec": lambda s, tf, p: tf.evolve_partition_spec(
+        p, [("identity", "v")]),
+    "overwrite_snapshot": lambda s, tf, p: tf.overwrite_snapshot(
+        s.createDataFrame([(9, "o")], "id long, v string"), p),
+    "compact_table": lambda s, tf, p: tf.compact_table(s, p),
+    "merge_snapshot": lambda s, tf, p: tf.merge_snapshot(
+        s, s.createDataFrame([(1, "m")], "id long, v string"), p, "id"),
+    "delete_keys": lambda s, tf, p: tf.delete_keys(
+        s, s.createDataFrame([(1,)], "id long"), p, "id"),
+    "delete_positions": lambda s, tf, p: tf.delete_positions(
+        s, tf.positions_of(s, p, F.col("id") == 1), p),
+    "purge_deletes": lambda s, tf, p: tf.purge_deletes(s, p),
+    "drop_columns": lambda s, tf, p: tf.drop_columns(s, p, ["v"]),
+    "zorder_table": lambda s, tf, p: tf.zorder_table(s, p, "id", "id"),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITE_OPS))
+def test_rewrite_commits_refuse_a_lost_race(spark, tmp_path, op):
+    """A racer's v<N+1> is on disk while the op's base read is pinned at
+    v<N>: the op raises, the racer's manifest is untouched, and the
+    refused op leaves no data dir and no temp file behind."""
+    import json
+    import unittest.mock as mock
+
+    from pdf_parser_spark.sources import tableformat as tf
+
+    path = str(tmp_path / "tbl")
+    for lo in (0, 10):
+        tf.append_snapshot(spark.createDataFrame(
+            [(lo + i, f"v{lo + i}") for i in range(4)], "id long, v string"
+        ).coalesce(1), path)
+    if op == "purge_deletes":
+        tf.delete_keys(spark, spark.createDataFrame([(11,)], "id long"),
+                       path, "id")
+    n = tf.current_version(path)
+    md = os.path.join(path, "metadata")
+    racer = os.path.join(md, f"v{n + 1}.json")
+    with open(racer, "w") as f:
+        json.dump({**tf._read_version(path, n), "version": n + 1,
+                   "snapshot_id": "racer", "parent_version": n}, f)
+    with open(racer) as f:
+        racer_body = f.read()
+    data_dirs = sorted(os.listdir(os.path.join(path, "data")))
+    # current_version and every other base read list through _versions
+    with mock.patch.object(tf, "_versions",
+                           return_value=list(range(1, n + 1))):
+        with pytest.raises(RuntimeError, match="concurrent commit"):
+            _REWRITE_OPS[op](spark, tf, path)
+    with open(racer) as f:
+        assert f.read() == racer_body
+    assert sorted(os.listdir(os.path.join(path, "data"))) == data_dirs
+    assert not [f for f in os.listdir(md) if f.startswith(".tmp-")]
 
 
 def test_schema_evolution_through_merge_and_mor(spark, tmp_path):
