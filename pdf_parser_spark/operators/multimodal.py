@@ -1,8 +1,16 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video payloads ride as ``binary`` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample are Arrow-batched Pandas
-stages over mapInPandas.
+Image/audio/video payloads ride as ``binary`` columns with a metadata struct.
+Every Python stage here is one of the Arrow stage pair in
+`operators/bytestage.py`, shared with the byte-level PDF family: each
+``synthetic_*`` generator is `synthesize(df, payload_fn)`, and every
+per-document kernel (decode, transform, frame sampling, shot detection,
+audio windows, perceptual hashes, near-dup captures) is a plain
+``parse(bytes) -> records`` function run by `parse_stage`.  A null payload
+is read as b"", which every kernel answers with its empty result.  Each
+container rule exists once: one RIFF chunk walk clamped to the RIFF
+envelope (`_wav_layout`), one WAV writer (`_riff_wav`), one P6/P5 header
+scan (`_ppm_fields`), one JPEG segment writer (`_jpeg`).
 
 Decode (r2): REAL header parsers for the codec-less container formats —
 BMP (BITMAPINFOHEADER), binary PPM/PGM (P6/P5), and RIFF/WAV (fmt + data
@@ -15,13 +23,17 @@ remains a one-function change.
 
 from __future__ import annotations
 
+import hashlib
+import math
 import struct
-from typing import Iterator
+import zlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pdf_parser_spark.operators.bytestage import parse_stage, synthesize
+from pdf_parser_spark.operators.pdflayout import make_pdf, pdf_text
 
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, byte_len long, "
@@ -39,8 +51,6 @@ def decode_stub(payload: bytes) -> dict:
     Raises for a null payload so the unsupported case stays explicit."""
     if payload is None:
         raise NotImplementedError("real media decoding requires codec libs (PIL/ffmpeg)")
-    import hashlib
-
     n = len(payload)
     # vectorized byte sum (the r4-verdict hot-spot note): numpy's uint8
     # reduction, not a per-byte Python loop — the integer sum is identical
@@ -69,14 +79,15 @@ def _decode_bmp(payload: bytes) -> dict | None:
     }
 
 
-def _decode_ppm(payload: bytes) -> dict | None:
-    """Binary PPM/PGM: 'P6'/'P5', then whitespace/comment-separated ASCII
-    width height maxval."""
-    if payload[:2] not in (b"P6", b"P5"):
+def _ppm_fields(payload: bytes, start: int = 0):
+    """([width, height, maxval], index just past maxval) for the binary
+    PPM/PGM header at ``start`` (offsets are absolute): 'P6'/'P5', then
+    whitespace/comment-separated ASCII fields; else None.  The one header
+    scan behind _decode_ppm and _ppm_header."""
+    if payload[start:start + 2] not in (b"P6", b"P5"):
         return None
     fields: list[int] = []
-    i = 2
-    n = len(payload)
+    i, n = start + 2, len(payload)
     while i < n and len(fields) < 3:
         c = payload[i:i + 1]
         if c == b"#":  # comment to end of line
@@ -94,34 +105,58 @@ def _decode_ppm(payload: bytes) -> dict | None:
             return None
     if len(fields) < 3:
         return None
+    return fields, i
+
+
+def _decode_ppm(payload: bytes) -> dict | None:
+    """Binary PPM/PGM: 'P6'/'P5', then whitespace/comment-separated ASCII
+    width height maxval."""
+    hd = _ppm_fields(payload)
+    if hd is None:
+        return None
+    (width, height, _), _ = hd
     return {
         "media_type": "image/ppm" if payload[:2] == b"P6" else "image/pgm",
         **_MEDIA_NULLS,
-        "width": fields[0],
-        "height": fields[1],
+        "width": width,
+        "height": height,
     }
 
 
-def _decode_wav(payload: bytes) -> dict | None:
-    """RIFF/WAVE: iterate chunks; 'fmt ' gives channels uint16le@+2,
-    sample_rate uint32le@+4, bits uint16le@+14; 'data' size gives duration
-    (floor-ms over the byte rate)."""
+def _wav_layout(payload: bytes) -> tuple:
+    """(channels, rate, bits, data_off, data_end) of a RIFF/WAVE payload —
+    the one RIFF chunk walk behind every WAV reader.  The RIFF header's
+    size field is the file's own envelope: the walk stops at it, and the
+    data extent clamps to the chunk's declared end, itself clamped to the
+    envelope — never to end-of-file, so an oversized data declaration
+    cannot pull trailing junk (or a concatenated second payload) in as
+    PCM.  'fmt ' gives channels uint16le@+2, sample_rate uint32le@+4,
+    bits uint16le@+14.  Fields of a missing chunk, and all five for a
+    payload that is not RIFF/WAVE, are None."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    channels = rate = bits = data_size = None
+        return (None,) * 5
+    riff_end = min(8 + struct.unpack_from("<I", payload, 4)[0], len(payload))
+    channels = rate = bits = data_off = data_end = None
     i = 12
-    n = len(payload)
-    while i + 8 <= n:
+    while i + 8 <= riff_end:
         cid = payload[i:i + 4]
         size = struct.unpack_from("<I", payload, i + 4)[0]
-        if cid == b"fmt " and i + 8 + 16 <= n:
+        if cid == b"fmt " and i + 8 + 16 <= riff_end:
             channels = struct.unpack_from("<H", payload, i + 8 + 2)[0]
             rate = struct.unpack_from("<I", payload, i + 8 + 4)[0]
             bits = struct.unpack_from("<H", payload, i + 8 + 14)[0]
         elif cid == b"data":
-            data_size = size
+            data_off, data_end = i + 8, min(i + 8 + size, riff_end)
         i += 8 + size + (size & 1)  # chunks are word-aligned
-    if channels is None or data_size is None or not rate or not bits:
+    return channels, rate, bits, data_off, data_end
+
+
+def _decode_wav(payload: bytes) -> dict | None:
+    """RIFF/WAVE via _wav_layout: 'fmt ' gives channels/sample_rate/bits,
+    the envelope-clamped 'data' extent gives duration (floor-ms over the
+    byte rate)."""
+    channels, rate, bits, data_off, data_end = _wav_layout(payload)
+    if channels is None or data_off is None or not rate or not bits:
         return None
     byte_rate = rate * channels * (bits // 8)
     return {
@@ -129,54 +164,38 @@ def _decode_wav(payload: bytes) -> dict | None:
         **_MEDIA_NULLS,
         "n_channels": channels,
         "sample_rate": rate,
-        "duration_ms": data_size * 1000 // byte_rate if byte_rate else None,
+        "duration_ms": ((data_end - data_off) * 1000 // byte_rate
+                        if byte_rate else None),
     }
+
+
+def _pcm16(payload: bytes) -> np.ndarray | None:
+    """The interleaved int16 samples (as int64) of _wav_layout's clamped
+    data extent, None without a data chunk — the one sample basis of
+    audio_energy and audio_spectral_peaks, so the two faces can never
+    disagree about which bytes are samples."""
+    data_off, data_end = _wav_layout(payload)[3:]
+    if data_off is None:
+        return None
+    return np.frombuffer(payload, dtype="<i2", count=(data_end - data_off) // 2,
+                         offset=data_off).astype(np.int64)
 
 
 def decode_media(payload: bytes) -> dict:
     """Sniff the container magic and parse the real header; unknown formats
     fall back to decode_stub's byte stats.  Always fills the full MEDIA
     column set (checksum + feature_norm computed for every format)."""
-    import hashlib
-
-    if payload is None:
-        raise NotImplementedError("real media decoding requires codec libs (PIL/ffmpeg)")
+    stats = decode_stub(payload)  # raises for a null payload
     parsed = _decode_bmp(payload) or _decode_ppm(payload) or _decode_wav(payload)
-    if parsed is None:
-        return decode_stub(payload)
-    n = len(payload)
-    parsed["byte_len"] = n
-    parsed["checksum"] = hashlib.md5(payload).hexdigest()
-    parsed["feature_norm"] = (
-        round(int(np.frombuffer(payload, dtype=np.uint8).sum()) / n, 4)
-        if n else 0.0
-    )
-    return parsed
-
-
-_MEDIA_COLUMNS = [
-    "doc_id", "media_type", "byte_len", "width", "height",
-    "n_channels", "sample_rate", "duration_ms", "checksum", "feature_norm",
-]
+    return {**stats, **(parsed or {})}
 
 
 def media_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """mapInPandas stage: (doc_id, payload binary) -> MEDIA_SCHEMA rows.
+    """parse_stage: (doc_id, payload binary) -> MEDIA_SCHEMA rows, one
+    decode_media record per document (nullable ints stay exact ints).
     Arrow batches bound memory; the loop is per-batch Python, not per-row UDF."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                feat = decode_media(bytes(payload) if payload is not None else b"")
-                recs.append({"doc_id": doc_id, **feat})
-            out = pd.DataFrame.from_records(recs, columns=_MEDIA_COLUMNS)
-            # nullable ints must not decay to float through from_records
-            for c in ("width", "height", "n_channels", "sample_rate", "duration_ms"):
-                out[c] = out[c].astype("object")
-            yield out
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=MEDIA_SCHEMA)
+    return parse_stage(df, payload_col, lambda b: [decode_media(b)],
+                       MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -192,27 +211,27 @@ def make_bmp(width: int, height: int) -> bytes:
     header = b"BM" + struct.pack("<IHHI", 54 + pixel_bytes, 0, 0, 54)
     info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
                        pixel_bytes, 2835, 2835, 0, 0)
-    import numpy as np
-
     pixels = ((np.arange(pixel_bytes) * 7 + width) % 256).astype(np.uint8).tobytes()
     return header + info + pixels
 
 
-def make_wav(channels: int, rate: int, n_samples: int) -> bytes:
-    data_size = n_samples * channels * 2  # 16-bit PCM
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * 2,
-                      channels * 2, 16)
-    import numpy as np
-
-    data = ((np.arange(data_size) * 13 + channels) % 256).astype(np.uint8).tobytes()
+def _riff_wav(channels: int, rate: int, bits: int, data: bytes) -> bytes:
+    """The one WAV writer: RIFF envelope, a 16-byte PCM 'fmt ' chunk (byte
+    rate and block align derived from channels x bits), one data chunk."""
+    frame = channels * (bits // 8)
+    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * frame, frame, bits)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt \
-        + b"data" + struct.pack("<I", data_size) + data
+        + b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def make_ppm(width: int, height: int) -> bytes:
-    import numpy as np
+def make_wav(channels: int, rate: int, n_samples: int) -> bytes:
+    data_size = n_samples * channels * 2  # 16-bit PCM
+    data = ((np.arange(data_size) * 13 + channels) % 256).astype(np.uint8).tobytes()
+    return _riff_wav(channels, rate, 16, data)
 
+
+def make_ppm(width: int, height: int) -> bytes:
     header = f"P6\n{width} {height}\n255\n".encode()
     return header + ((np.arange(3 * width * height) * 11 + height) % 256).astype(
         np.uint8).tobytes()
@@ -233,59 +252,7 @@ def synthetic_media_payload(doc_id: int) -> bytes:
 def synthetic_media(df: DataFrame) -> DataFrame:
     """(doc_id, ...) -> (doc_id, payload binary) with deterministic real
     container bytes per doc_id (generator plumbing for tests/benchmarks)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [synthetic_media_payload(int(d)) for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
-
-
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, payload binary"
-)
-FRAME_SCHEMA = (
-    "doc_id long, frame_index int, frame_ts_ms long, payload binary"
-)
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: a real implementation decodes with PIL and
-    re-encodes; the stub derives a content-addressed payload of bounded size
-    so batch shapes and memory behavior are realistic."""
-    if payload is None:
-        raise NotImplementedError("real image resize requires codec libs (PIL)")
-    import hashlib
-
-    seed = hashlib.md5(payload + f"{width}x{height}".encode()).digest()
-    # repeat the digest to a size proportional to the target area (capped)
-    size = min(width * height // 64 + 16, 4096)
-    return (seed * (size // len(seed) + 1))[:size]
-
-
-def resize_images(
-    df: DataFrame, width: int = 64, height: int = 64, payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas resize stage: (doc_id, payload) -> (doc_id, width, height,
-    payload).  Arrow batches bound memory for multi-MB payloads."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                out = resize_stub(bytes(payload) if payload is not None else b"", width, height)
-                recs.append({
-                    "doc_id": doc_id, "width": width, "height": height,
-                    "payload": out,
-                })
-            yield pd.DataFrame.from_records(
-                recs, columns=["doc_id", "width", "height", "payload"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=RESIZE_SCHEMA)
+    return synthesize(df, synthetic_media_payload)
 
 
 # frame-sampling knobs, shared with the m_frame_sample oracle (anti-drift:
@@ -293,39 +260,6 @@ def resize_images(
 # diverge engine vs oracle — ADVICE r2)
 SAMPLE_EVERY_DEFAULT = 2
 MAX_FRAMES_DEFAULT = 8
-
-
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000,
-    max_frames: int = MAX_FRAMES_DEFAULT, payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas frame-sampling stage for video-like payloads: one input row
-    fans out to <= max_frames rows (doc_id, frame_index, frame_ts_ms, payload).
-    The decode is stubbed (deterministic slices of the payload); the Spark-side
-    contract — 1:N row fan-out inside an Arrow batch, bounded output size — is
-    the real thing a video pipeline needs."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else b""
-                # fake "duration": 1 ms per byte
-                n_frames = min(max(len(raw) // every_ms, 1), max_frames)
-                for i in range(n_frames):
-                    ts = i * every_ms
-                    frame = hashlib.md5(raw + ts.to_bytes(8, "big")).digest()
-                    recs.append({
-                        "doc_id": doc_id, "frame_index": i,
-                        "frame_ts_ms": ts, "payload": frame,
-                    })
-            yield pd.DataFrame.from_records(
-                recs, columns=["doc_id", "frame_index", "frame_ts_ms", "payload"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=FRAME_SCHEMA)
 
 
 def binary_stats(documents: DataFrame) -> DataFrame:
@@ -351,28 +285,11 @@ def binary_stats(documents: DataFrame) -> DataFrame:
 def _ppm_header(payload: bytes, start: int = 0):
     """(width, height, maxval, data_offset) for the P6/P5 header at
     ``start`` (offsets are absolute), else None."""
-    if payload[start:start + 2] not in (b"P6", b"P5"):
+    hd = _ppm_fields(payload, start)
+    if hd is None or hd[1] >= len(payload):
         return None
-    fields: list[int] = []
-    i, n = start + 2, len(payload)
-    while i < n and len(fields) < 3:
-        c = payload[i:i + 1]
-        if c == b"#":
-            while i < n and payload[i:i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        elif c.isdigit():
-            j = i
-            while j < n and payload[j:j + 1].isdigit():
-                j += 1
-            fields.append(int(payload[i:j]))
-            i = j
-        else:
-            return None
-    if len(fields) < 3 or i >= n:
-        return None
-    return fields[0], fields[1], fields[2], i + 1  # single ws after maxval
+    (width, height, maxval), i = hd
+    return width, height, maxval, i + 1  # single ws after maxval
 
 
 def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes | None:
@@ -380,8 +297,6 @@ def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes | None:
     decode the padded pixel grid, gather source rows/cols by the standard
     floor map sx = x2*W//W2, re-encode a valid BMP.  Vectorized numpy —
     two fancy-index gathers, no per-pixel Python."""
-    import numpy as np
-
     if len(payload) < 54 or payload[:2] != b"BM":
         return None
     w = struct.unpack_from("<i", payload, 18)[0]
@@ -415,8 +330,6 @@ def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes | None:
 def resize_ppm(payload: bytes, out_w: int, out_h: int) -> bytes | None:
     """Real nearest-neighbor resize of a binary P6 PPM (P5 analog: 1
     channel); re-encodes a valid header + raster."""
-    import numpy as np
-
     hd = _ppm_header(payload)
     if hd is None:
         return None
@@ -439,47 +352,19 @@ def decimate_wav(payload: bytes, factor: int = 2) -> bytes | None:
     the declared sample rate, preserving duration — a valid RIFF/WAVE out.
     (Proper resampling low-pass-filters first; plain decimation is the
     deterministic integer-exact variant the oracle can recompute.)"""
-    import numpy as np
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    channels = rate = bits = None
-    data_off = data_size = None
-    # walk and data extent clamp to the RIFF envelope (the header's own
-    # size field), not to end-of-file — audio_energy doctrine: an
-    # oversized data declaration must not pull trailing non-RIFF bytes
-    # into the PCM frames
-    n = len(payload)
-    riff_end = min(8 + struct.unpack_from("<I", payload, 4)[0], n)
-    i = 12
-    while i + 8 <= riff_end:
-        cid = payload[i:i + 4]
-        size = struct.unpack_from("<I", payload, i + 4)[0]
-        if cid == b"fmt " and i + 8 + 16 <= n:
-            channels = struct.unpack_from("<H", payload, i + 8 + 2)[0]
-            rate = struct.unpack_from("<I", payload, i + 8 + 4)[0]
-            bits = struct.unpack_from("<H", payload, i + 8 + 14)[0]
-        elif cid == b"data":
-            data_off, data_size = i + 8, size
-        i += 8 + size + (size & 1)
+    channels, rate, bits, data_off, data_end = _wav_layout(payload)
     if channels is None or data_off is None or not rate or not bits:
         return None
     frame_bytes = channels * (bits // 8)
     if frame_bytes == 0:
         return None  # bits < 8: not PCM we can frame
-    # clamp to the chunk's own end: a truncated fetch may declare a data
-    # size larger than the bytes present, and frombuffer would raise
-    data_end = min(data_off + data_size, riff_end)
-    n_frames = max(data_end - data_off, 0) // frame_bytes
+    # the extent is _wav_layout's envelope-clamped one: an oversized data
+    # declaration (a truncated fetch, trailing junk) never reaches
+    # frombuffer, which would raise or read non-RIFF bytes as frames
+    n_frames = (data_end - data_off) // frame_bytes
     data = np.frombuffer(payload, dtype=np.uint8, count=n_frames * frame_bytes,
                          offset=data_off).reshape(n_frames, frame_bytes)
-    out = data[::factor]
-    out_rate = rate // factor
-    fmt = struct.pack("<HHIIHH", 1, channels, out_rate,
-                      out_rate * frame_bytes, frame_bytes, bits)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt \
-        + b"data" + struct.pack("<I", out.size) + out.tobytes()
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_wav(channels, rate // factor, bits, data[::factor].tobytes())
 
 
 TRANSFORM_SCHEMA = (
@@ -488,84 +373,69 @@ TRANSFORM_SCHEMA = (
 )
 
 
+def _transform(payload: bytes) -> dict:
+    """transform_media's per-document kernel: one TRANSFORM_SCHEMA record."""
+    base = {
+        "media_type": "unknown", "out_w": -1,
+        "out_h": -1, "out_rate": -1, "n_units": -1, "data_sum": -1,
+        "out_len": len(payload), "payload": payload,
+    }
+    if payload[:2] == b"BM" and len(payload) >= 54:
+        w = abs(struct.unpack_from("<i", payload, 18)[0])
+        h = abs(struct.unpack_from("<i", payload, 22)[0])
+        w2, h2 = max(w // 2, 1), max(h // 2, 1)
+        out = resize_bmp(payload, w2, h2)
+        if out is None:
+            return base
+        stride2 = ((w2 * 3 + 3) // 4) * 4
+        arr = np.frombuffer(out, np.uint8, count=stride2 * h2,
+                            offset=54).reshape(h2, stride2)[:, : w2 * 3]
+        return {**base, "media_type": "image/bmp", "out_w": w2,
+                "out_h": h2, "n_units": w2 * h2,
+                "data_sum": int(arr.sum()), "out_len": len(out),
+                "payload": out}
+    if payload[:2] in (b"P6", b"P5"):
+        hd = _ppm_header(payload)
+        if hd is None:
+            return base
+        w, h, _, _ = hd
+        ch = 3 if payload[:2] == b"P6" else 1
+        w2, h2 = max(w // 2, 1), max(h // 2, 1)
+        out = resize_ppm(payload, w2, h2)
+        if out is None:
+            return base
+        raster = np.frombuffer(out, np.uint8, count=ch * w2 * h2,
+                               offset=len(out) - ch * w2 * h2)
+        return {**base, "media_type": "image/ppm" if ch == 3 else "image/pgm",
+                "out_w": w2, "out_h": h2, "n_units": w2 * h2,
+                "data_sum": int(raster.sum()), "out_len": len(out),
+                "payload": out}
+    if payload[:4] == b"RIFF":
+        meta = _decode_wav(payload)
+        out = decimate_wav(payload, 2)
+        if meta is None or out is None:
+            return base
+        # the layout we emit is canonical: data chunk starts at byte 44
+        data = np.frombuffer(out, np.uint8, offset=44)
+        return {**base, "media_type": "audio/wav", "out_w": -1,
+                "out_h": -1,
+                "out_rate": meta["sample_rate"] // 2,
+                "n_units": int(len(data) //
+                               (meta["n_channels"] * 2)),
+                "data_sum": int(data.sum()), "out_len": len(out),
+                "payload": out}
+    return base
+
+
 def transform_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """mapInPandas transform stage: images resize to (max(W//2,1),
+    """parse_stage transform: images resize to (max(W//2,1),
     max(H//2,1)) nearest-neighbor, WAV decimates 2x; emits the REAL
     re-encoded container plus integer evidence columns — data_sum is the
     exact byte sum of the transformed raster/PCM data (excluding
     header/padding), which the m_transform oracle recomputes from the
     synthesis formulas.  Unknown formats pass through with -1 features."""
-    import hashlib
-
-    import numpy as np
-
-    def one(doc_id, payload: bytes) -> dict:
-        base = {
-            "doc_id": doc_id, "media_type": "unknown", "out_w": -1,
-            "out_h": -1, "out_rate": -1, "n_units": -1, "data_sum": -1,
-            "out_len": len(payload), "payload": payload,
-        }
-        if payload[:2] == b"BM" and len(payload) >= 54:
-            w = abs(struct.unpack_from("<i", payload, 18)[0])
-            h = abs(struct.unpack_from("<i", payload, 22)[0])
-            w2, h2 = max(w // 2, 1), max(h // 2, 1)
-            out = resize_bmp(payload, w2, h2)
-            if out is None:
-                return base
-            stride2 = ((w2 * 3 + 3) // 4) * 4
-            arr = np.frombuffer(out, np.uint8, count=stride2 * h2,
-                                offset=54).reshape(h2, stride2)[:, : w2 * 3]
-            return {**base, "media_type": "image/bmp", "out_w": w2,
-                    "out_h": h2, "n_units": w2 * h2,
-                    "data_sum": int(arr.sum()), "out_len": len(out),
-                    "payload": out}
-        if payload[:2] in (b"P6", b"P5"):
-            hd = _ppm_header(payload)
-            if hd is None:
-                return base
-            w, h, _, _ = hd
-            ch = 3 if payload[:2] == b"P6" else 1
-            w2, h2 = max(w // 2, 1), max(h // 2, 1)
-            out = resize_ppm(payload, w2, h2)
-            if out is None:
-                return base
-            raster = np.frombuffer(out, np.uint8, count=ch * w2 * h2,
-                                   offset=len(out) - ch * w2 * h2)
-            return {**base, "media_type": "image/ppm" if ch == 3 else "image/pgm",
-                    "out_w": w2, "out_h": h2, "n_units": w2 * h2,
-                    "data_sum": int(raster.sum()), "out_len": len(out),
-                    "payload": out}
-        if payload[:4] == b"RIFF":
-            meta = _decode_wav(payload)
-            out = decimate_wav(payload, 2)
-            if meta is None or out is None:
-                return base
-            # the layout we emit is canonical: data chunk starts at byte 44
-            data = np.frombuffer(out, np.uint8, offset=44)
-            return {**base, "media_type": "audio/wav", "out_w": -1,
-                    "out_h": -1,
-                    "out_rate": meta["sample_rate"] // 2,
-                    "n_units": int(len(data) //
-                                   (meta["n_channels"] * 2)),
-                    "data_sum": int(data.sum()), "out_len": len(out),
-                    "payload": out}
-        return base
-
-    def fn(batches):
-        for pdf in batches:
-            recs = [
-                one(d, bytes(p) if p is not None else b"")
-                for d, p in zip(pdf["doc_id"], pdf[payload_col])
-            ]
-            out = pd.DataFrame.from_records(recs, columns=[
-                "doc_id", "media_type", "out_w", "out_h", "out_rate",
-                "n_units", "data_sum", "out_len", "payload",
-            ])
-            yield out
-
-    return df.select("doc_id", payload_col).mapInPandas(
-        fn, schema=TRANSFORM_SCHEMA
-    )
+    return parse_stage(df, payload_col, lambda b: [_transform(b)],
+                       TRANSFORM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -577,8 +447,6 @@ def transform_media(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 def make_ppm_seeded(width: int, height: int, seed: int) -> bytes:
     """A P6 frame whose raster byte i is (i*11 + seed) % 256 — per-frame
     seeds let a SQL oracle distinguish (and checksum) individual frames."""
-    import numpy as np
-
     header = f"P6\n{width} {height}\n255\n".encode()
     return header + ((np.arange(3 * width * height) * 11 + seed) % 256).astype(
         np.uint8).tobytes()
@@ -614,14 +482,7 @@ def synthetic_video_payload(doc_id: int) -> bytes:
 
 
 def synthetic_video(df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [synthetic_video_payload(int(d)) for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return synthesize(df, synthetic_video_payload)
 
 
 SAMPLE_SCHEMA = (
@@ -635,7 +496,7 @@ def sample_ppm_frames(
     max_frames: int = MAX_FRAMES_DEFAULT,
     payload_col: str = "payload",
 ) -> DataFrame:
-    """mapInPandas frame-sampling over REAL P6 streams: one input row fans
+    """parse_stage frame sampling over REAL P6 streams: one input row fans
     out to ceil(n_frames/every) rows (capped at max_frames), each carrying
     the standalone sampled frame plus integer evidence (data_sum = exact
     raster byte sum) the m_frame_sample oracle recomputes per frame.
@@ -643,33 +504,23 @@ def sample_ppm_frames(
     Scale: the fan-out happens inside the Arrow batch — no explode shuffle;
     video rows are fat, so session.py's small Arrow batch size is what
     bounds executor memory, same as the extraction stage."""
-    import numpy as np
+    def sampled(raw: bytes) -> list[dict]:
+        frames = split_ppm_stream(raw)
+        recs = []
+        for idx in range(0, len(frames), every):
+            if idx // every >= max_frames:
+                break
+            fb = frames[idx]
+            w, h, _, off = _ppm_header(fb)
+            raster = np.frombuffer(fb, np.uint8, offset=off)
+            recs.append({
+                "frame_index": idx, "n_frames": len(frames),
+                "width": w, "height": h, "data_sum": int(raster.sum()),
+                "frame_len": len(fb), "payload": fb,
+            })
+        return recs
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else b""
-                frames = split_ppm_stream(raw)
-                for idx in range(0, len(frames), every):
-                    if idx // every >= max_frames:
-                        break
-                    fb = frames[idx]
-                    hd = _ppm_header(fb)
-                    w, h, _, off = hd
-                    raster = np.frombuffer(fb, np.uint8, offset=off)
-                    recs.append({
-                        "doc_id": doc_id, "frame_index": idx,
-                        "n_frames": len(frames), "width": w, "height": h,
-                        "data_sum": int(raster.sum()), "frame_len": len(fb),
-                        "payload": fb,
-                    })
-            yield pd.DataFrame.from_records(recs, columns=[
-                "doc_id", "frame_index", "n_frames", "width", "height",
-                "data_sum", "frame_len", "payload",
-            ])
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=SAMPLE_SCHEMA)
+    return parse_stage(df, payload_col, sampled, SAMPLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -679,12 +530,9 @@ def sample_ppm_frames(
 AHASH_GRID = 8  # 8x8 = 64-bit fingerprint (the classic aHash layout)
 
 
-def _bmp_gray_sample(b: bytes, gx: int, gy: int) -> list[int] | None:
-    """Nearest-neighbor-sample a gy x gx grid of integer grays from a
-    24bpp BMP payload (row-major, STORED row order), None for anything
-    the kernel can't decode (magic/bpp/truncation sniff).  ONE sampler
-    shared by aHash (8x8) and dHash (8x9) so the two fingerprints can
-    never disagree about pixel addressing."""
+def _bmp_raster(b: bytes) -> tuple[int, int, int, int] | None:
+    """(width, height, pixel offset, padded row stride) of a decodable
+    24bpp BMP, None for anything else (magic/bpp/truncation sniff)."""
     if b[:2] != b"BM" or len(b) < 54:
         return None
     w = int.from_bytes(b[18:22], "little", signed=True)
@@ -696,25 +544,72 @@ def _bmp_gray_sample(b: bytes, gx: int, gy: int) -> list[int] | None:
     bs = ((w * 3 + 3) // 4) * 4
     if len(b) < off + bs * h:
         return None
+    return w, h, off, bs
+
+
+def _gray_grid(b: bytes, off: int, stride: int, w: int, h: int,
+               gx: int, gy: int) -> list[int]:
+    """Nearest-neighbor gy x gx grid (row-major) of integer grays of the
+    3-byte pixels at off + stride*sy + 3*sx, sx = x*w//gx, sy = y*h//gy —
+    one addressing rule for BMP rows (padded stride) and P6 rows (3w)."""
     grays: list[int] = []
     for i in range(gx * gy):
         sx = (i % gx) * w // gx
         sy = (i // gx) * h // gy
-        o = off + bs * sy + 3 * sx
+        o = off + stride * sy + 3 * sx
         grays.append((b[o] + b[o + 1] + b[o + 2]) // 3)
     return grays
+
+
+def _bmp_gray_sample(b: bytes, gx: int, gy: int) -> list[int] | None:
+    """Nearest-neighbor-sample a gy x gx grid of integer grays from a
+    24bpp BMP payload (row-major, STORED row order), None for anything
+    the kernel can't decode (magic/bpp/truncation sniff).  ONE sampler
+    shared by aHash (8x8) and dHash (8x9) so the two fingerprints can
+    never disagree about pixel addressing."""
+    lay = _bmp_raster(b)
+    if lay is None:
+        return None
+    w, h, off, bs = lay
+    return _gray_grid(b, off, bs, w, h, gx, gy)
+
+
+def _mean_bits(grays: list[int]) -> str:
+    """The aHash threshold: bit = 1 iff the cell is strictly above the
+    integer grid mean (BMP and P6 kernels alike)."""
+    mean = sum(grays) // len(grays)
+    return "".join("1" if v > mean else "0" for v in grays)
 
 
 def _ahash_of(b: bytes) -> str | None:
     """64-char aHash bit string of a 24bpp BMP payload, None for anything
     the kernel can't decode.  Shared by image_ahash and image_neardup so
     both faces hash identically."""
-    g = AHASH_GRID
-    grays = _bmp_gray_sample(b, g, g)
-    if grays is None:
-        return None
-    mean = sum(grays) // (g * g)
-    return "".join("1" if v > mean else "0" for v in grays)
+    grays = _bmp_gray_sample(b, AHASH_GRID, AHASH_GRID)
+    return None if grays is None else _mean_bits(grays)
+
+
+def _hash_records(hash_of, col: str):
+    """parse function: one {col: hash_of(bytes)} record per document, none
+    when the kernel cannot decode it."""
+    def parse(b: bytes) -> list[dict]:
+        h = hash_of(b)
+        return [] if h is None else [{col: h}]
+    return parse
+
+
+def _hash_groups(media: DataFrame, hash_of, col: str) -> DataFrame:
+    """(doc_id, <col>, n_same): hash_of per payload in the parse stage,
+    n_same = docs sharing the hash (one window shuffle on the hash) — the
+    one group tail of image_ahash, image_dhash and image_phash."""
+    hashed = parse_stage(media, "payload", _hash_records(hash_of, col),
+                         f"doc_id long, {col} string")
+    return (
+        hashed.withColumn(
+            "n_same", F.count("*").over(Window.partitionBy(col)).cast("long")
+        )
+        .orderBy("doc_id")
+    )
 
 
 def _dhash_of(b: bytes) -> str | None:
@@ -754,32 +649,7 @@ def image_ahash(media: DataFrame) -> DataFrame:
     regardless of resolution); the only shuffle is the group-size window
     on the 64-bit hash — the same single-shuffle shape as exact_dedup.
     """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[str] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                ah = _ahash_of(bytes(payload))
-                if ah is None:
-                    continue
-                ids.append(int(doc_id))
-                hashes.append(ah)
-            yield pd.DataFrame({"doc_id": ids, "ahash": hashes})
-
-    from pyspark.sql import Window
-
-    hashed = media.select("doc_id", "payload").mapInPandas(
-        fn, "doc_id long, ahash string"
-    )
-    return (
-        hashed.withColumn(
-            "n_same", F.count("*").over(Window.partitionBy("ahash")).cast("long")
-        )
-        .orderBy("doc_id")
-    )
+    return _hash_groups(media, _ahash_of, "ahash")
 
 
 # ---------------------------------------------------------------------------
@@ -814,38 +684,30 @@ def image_overlay_captures(media: DataFrame) -> DataFrame:
     makes perceptual near-dups exist by construction (re-derivable by the
     oracle from the synthesis formula).  Real bytes both ways: the copy is
     a valid BMP, not a formula shortcut."""
+    return _captures(media, _overlay_copies, IMG_COPY_OFFSET)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            payloads: list[bytes] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                if b[:2] != b"BM" or len(b) < 54:
-                    continue
-                h = int.from_bytes(b[22:26], "little", signed=True)
-                w = int.from_bytes(b[18:22], "little", signed=True)
-                bpp = int.from_bytes(b[28:30], "little")
-                if bpp != 24 or w <= 0 or h <= 0:
-                    continue
-                off = int.from_bytes(b[10:14], "little")
-                bs = ((w * 3 + 3) // 4) * 4
-                if len(b) < off + bs * h:
-                    continue
-                ids.append(int(doc_id))
-                payloads.append(b)
-                rows = min(IMG_OVERLAY_ROWS, h)
-                fill = bytes([IMG_OVERLAY_FILL]) * (bs * rows)
-                edited = b[: off] + fill + b[off + bs * rows:]
-                ids.append(int(doc_id) + IMG_COPY_OFFSET)
-                payloads.append(edited)
-            yield pd.DataFrame({"cap_id": ids, "payload": payloads})
 
-    return media.select("doc_id", "payload").mapInPandas(
-        fn, "cap_id long, payload binary"
-    )
+def _overlay_copies(b: bytes) -> list[dict]:
+    """A decodable BMP and its overlay-edited copy (copy flag 1)."""
+    lay = _bmp_raster(b)
+    if lay is None:
+        return []
+    _, h, off, bs = lay
+    rows = min(IMG_OVERLAY_ROWS, h)
+    fill = bytes([IMG_OVERLAY_FILL]) * (bs * rows)
+    edited = b[: off] + fill + b[off + bs * rows:]
+    return [{"copy": 0, "payload": b}, {"copy": 1, "payload": edited}]
+
+
+def _captures(media: DataFrame, copies, offset: int) -> DataFrame:
+    """(cap_id, payload): copies(bytes) -> records of (copy flag, payload)
+    per document in the parse stage, cap_id = doc_id + copy * offset
+    computed JVM-side — the one capture stage of the three near-dup
+    faces."""
+    return parse_stage(
+        media, "payload", copies, "doc_id long, copy int, payload binary"
+    ).select((F.col("doc_id") + F.col("copy") * offset).alias("cap_id"),
+             "payload")
 
 
 def image_neardup(
@@ -865,23 +727,9 @@ def image_neardup(
     never all-pairs; the exact Hamming filter runs JVM-side via two 32-bit
     conv/xor/bit_count halves (conv parses binary in both engines' SQL but
     only Spark needs it — the oracle compares the bit strings position-wise)."""
-    def hfn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[str] = []
-            for cap_id, payload in zip(pdf["cap_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                ah = _ahash_of(bytes(payload))
-                if ah is None:
-                    continue
-                ids.append(int(cap_id))
-                hashes.append(ah)
-            yield pd.DataFrame({"cap_id": ids, "ahash": hashes})
-
-    hashed = image_overlay_captures(media).mapInPandas(
-        hfn, "cap_id long, ahash string"
-    )
+    hashed = parse_stage(image_overlay_captures(media), "payload",
+                         _hash_records(_ahash_of, "ahash"),
+                         "cap_id long, ahash string")
     w = 64 // NEARDUP_BANDS
     bands = hashed.select(
         "cap_id", "ahash",
@@ -960,55 +808,20 @@ def audio_energy(
     rows.  The engine parses REAL bytes (chunk walk shared with
     decimate_wav); the oracle recomputes energies from the synthesis
     formula (nfc doctrine: real-parse vs formula-predict)."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "win_idx": [], "n_samps": [],
-                "energy": [], "is_silence": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    continue
-                # the RIFF header's size field is the file's own envelope:
-                # chunk walk AND the data extent clamp to it, so an
-                # oversized data declaration can never square-sum bytes
-                # past the structure (trailing junk / a concatenated
-                # second payload) as PCM samples
-                riff_end = min(8 + struct.unpack_from("<I", b, 4)[0], len(b))
-                data_off = data_size = None
-                i = 12
-                while i + 8 <= riff_end:
-                    cid = b[i:i + 4]
-                    size = struct.unpack_from("<I", b, i + 4)[0]
-                    if cid == b"data":
-                        data_off, data_size = i + 8, size
-                    i += 8 + size + (size & 1)
-                if data_off is None:
-                    continue
-                # clamp to the chunk's own end, itself clamped to the
-                # envelope — not to end-of-file
-                data_end = min(data_off + data_size, riff_end)
-                n_i16 = max(data_end - data_off, 0) // 2
-                s = np.frombuffer(b, dtype="<i2", count=n_i16,
-                                  offset=data_off).astype(np.int64)
-                for w0 in range(0, n_i16, win):
-                    chunk = s[w0:w0 + win]
-                    e = int((chunk * chunk).sum())
-                    out["doc_id"].append(int(doc_id))
-                    out["win_idx"].append(w0 // win)
-                    out["n_samps"].append(len(chunk))
-                    out["energy"].append(e)
-                    out["is_silence"].append(e < sil_meansq * len(chunk))
-            yield pd.DataFrame(out)
+    def windows(b: bytes) -> list[dict]:
+        s = _pcm16(b)
+        if s is None:
+            return []
+        recs = []
+        for w0 in range(0, len(s), win):
+            chunk = s[w0:w0 + win]
+            e = int((chunk * chunk).sum())
+            recs.append({"win_idx": w0 // win, "n_samps": len(chunk),
+                         "energy": e, "is_silence": e < sil_meansq * len(chunk)})
+        return recs
 
     return (
-        df.select("doc_id", payload_col)
-        .mapInPandas(fn, AE_SCHEMA)
+        parse_stage(df, payload_col, windows, AE_SCHEMA)
         .orderBy("doc_id", "win_idx")
     )
 
@@ -1044,43 +857,27 @@ def shot_boundaries(
     Scale: one Arrow stage, REAL stream parsing (split_ppm_stream's
     absolute-offset walk), numpy int64 SAD per pair, fan-out inside the
     batch — no explode, no shuffle; output is frames-1 rows per video."""
-    import numpy as np
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "frame_index": [], "n_px": [],
-                "sad": [], "is_cut": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                frames = split_ppm_stream(bytes(payload))
-                rasters = []
-                for fb in frames:
-                    hd = _ppm_header(fb, 0)
-                    w, h, _, off = hd
-                    ch = 3 if fb[:2] == b"P6" else 1
-                    rasters.append(np.frombuffer(
-                        fb, dtype=np.uint8, count=ch * w * h, offset=off))
-                for fi in range(1, len(rasters)):
-                    a, b = rasters[fi - 1], rasters[fi]
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_index"].append(fi)
-                    if len(a) != len(b):
-                        out["n_px"].append(len(b))
-                        out["sad"].append(-1)
-                        out["is_cut"].append(True)
-                        continue
-                    sad = int(np.abs(a.astype(np.int64) - b.astype(np.int64)).sum())
-                    out["n_px"].append(len(b))
-                    out["sad"].append(sad)
-                    out["is_cut"].append(sad > mean_diff * len(b))
-            yield pd.DataFrame(out)
+    def pairs(payload: bytes) -> list[dict]:
+        rasters = []
+        for fb in split_ppm_stream(payload):
+            w, h, _, off = _ppm_header(fb, 0)
+            ch = 3 if fb[:2] == b"P6" else 1
+            rasters.append(np.frombuffer(
+                fb, dtype=np.uint8, count=ch * w * h, offset=off))
+        recs = []
+        for fi in range(1, len(rasters)):
+            a, b = rasters[fi - 1], rasters[fi]
+            if len(a) != len(b):
+                sad, cut = -1, True
+            else:
+                sad = int(np.abs(a.astype(np.int64) - b.astype(np.int64)).sum())
+                cut = sad > mean_diff * len(b)
+            recs.append({"frame_index": fi, "n_px": len(b), "sad": sad,
+                         "is_cut": cut})
+        return recs
 
     return (
-        df.select("doc_id", payload_col)
-        .mapInPandas(fn, SHOT_SCHEMA)
+        parse_stage(df, payload_col, pairs, SHOT_SCHEMA)
         .orderBy("doc_id", "frame_index")
     )
 
@@ -1104,8 +901,6 @@ def audio_segments(
     of audio), never the corpus; one groupBy on (doc_id, seg) closes the
     segments.  Exact integers end to end (energy sums are BIGINT, the
     verdict an integer compare inherited from audio_energy)."""
-    from pyspark.sql import Window
-
     en = audio_energy(df, payload_col=payload_col, win=win,
                       sil_meansq=sil_meansq)
     w = Window.partitionBy("doc_id").orderBy("win_idx")
@@ -1157,15 +952,7 @@ def _ahash_p6(fb: bytes) -> str | None:
     w, h, _, off = hd
     if len(fb) < off + 3 * w * h or w <= 0 or h <= 0:
         return None
-    g = AHASH_GRID
-    grays: list[int] = []
-    for i in range(g * g):
-        sx = (i % g) * w // g
-        sy = (i // g) * h // g
-        o = off + 3 * (sy * w + sx)
-        grays.append((fb[o] + fb[o + 1] + fb[o + 2]) // 3)
-    mean = sum(grays) // (g * g)
-    return "".join("1" if v > mean else "0" for v in grays)
+    return _mean_bits(_gray_grid(fb, off, 3 * w, w, h, AHASH_GRID, AHASH_GRID))
 
 
 def video_captures(videos: DataFrame) -> DataFrame:
@@ -1173,27 +960,55 @@ def video_captures(videos: DataFrame) -> DataFrame:
     (first frame dropped, cap_id = doc_id + VID_COPY_OFFSET) — real
     re-concatenated bytes, re-derivable by the oracle from the frame
     formula.  Streams with < 2 frames emit no copy."""
+    return _captures(videos, _trim_copies, VID_COPY_OFFSET)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            payloads: list[bytes] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                frames = split_ppm_stream(b)
-                if not frames:
-                    continue
-                ids.append(int(doc_id))
-                payloads.append(b)
-                if len(frames) >= 2:
-                    ids.append(int(doc_id) + VID_COPY_OFFSET)
-                    payloads.append(b"".join(frames[1:]))
-            yield pd.DataFrame({"cap_id": ids, "payload": payloads})
 
-    return videos.select("doc_id", "payload").mapInPandas(
-        fn, "cap_id long, payload binary"
+def _trim_copies(b: bytes) -> list[dict]:
+    """A P6 stream and, from 2 frames up, its trimmed repost (copy 1)."""
+    frames = split_ppm_stream(b)
+    if not frames:
+        return []
+    copies = [{"copy": 0, "payload": b}]
+    if len(frames) >= 2:
+        copies.append({"copy": 1, "payload": b"".join(frames[1:])})
+    return copies
+
+
+def _containment_pairs(fps: DataFrame, key: str, contain_bp: int,
+                       offset: int) -> DataFrame:
+    """(cap_a, cap_b, n_shared, n_a, n_b, contain_bp, is_trim_pair) over
+    DISTINCT (cap_id, key) postings: equi-join on the fingerprint key (a
+    pair only from an actual shared fingerprint, never all-pairs), exact
+    integer containment in bp of the smaller capture, kept at >=
+    contain_bp; is_trim_pair iff cap_b = cap_a + offset — the one fold of
+    video_neardup and audio_neardup."""
+    counts = fps.groupBy("cap_id").agg(F.count("*").cast("long").alias("n"))
+    a, b = fps.alias("a"), fps.alias("b")
+    shared = (
+        a.join(
+            b,
+            on=(F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col("a.cap_id") < F.col("b.cap_id")),
+        )
+        .groupBy(
+            F.col("a.cap_id").alias("cap_a"), F.col("b.cap_id").alias("cap_b")
+        )
+        .agg(F.count("*").cast("long").alias("n_shared"))
+    )
+    ca = counts.select(F.col("cap_id").alias("cap_a"), F.col("n").alias("n_a"))
+    cb = counts.select(F.col("cap_id").alias("cap_b"), F.col("n").alias("n_b"))
+    return (
+        shared.join(ca, "cap_a").join(cb, "cap_b")
+        .withColumn(
+            "contain_bp",
+            F.expr("CAST((10000 * n_shared) div least(n_a, n_b) AS BIGINT)"),
+        )
+        .where(F.col("contain_bp") >= contain_bp)
+        .select(
+            "cap_a", "cap_b", "n_shared", "n_a", "n_b", "contain_bp",
+            (F.col("cap_b") - F.col("cap_a") == offset).alias("is_trim_pair"),
+        )
+        .orderBy("cap_a", "cap_b")
     )
 
 
@@ -1213,58 +1028,13 @@ def video_neardup(
     join is keyed on the 64-bit hash (a viral frame makes a hot posting —
     absorbed by the pair groupBy's partial aggregation); per-video counts
     ride a broadcast-sized dim per pair side."""
+    def frame_hashes(b: bytes) -> list[dict]:
+        hashes = (_ahash_p6(fb) for fb in split_ppm_stream(b))
+        return [{"fhash": ah} for ah in hashes if ah is not None]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[str] = []
-            for cap_id, payload in zip(pdf["cap_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for fb in split_ppm_stream(bytes(payload)):
-                    ah = _ahash_p6(fb)
-                    if ah is not None:
-                        ids.append(int(cap_id))
-                        hashes.append(ah)
-            yield pd.DataFrame({"cap_id": ids, "fhash": hashes})
-
-    fhashes = (
-        video_captures(videos)
-        .mapInPandas(fn, "cap_id long, fhash string")
-        .distinct()
-    )
-    counts = fhashes.groupBy("cap_id").agg(
-        F.count("*").cast("long").alias("n")
-    )
-    a, b = fhashes.alias("a"), fhashes.alias("b")
-    shared = (
-        a.join(
-            b,
-            on=(F.col("a.fhash") == F.col("b.fhash"))
-            & (F.col("a.cap_id") < F.col("b.cap_id")),
-        )
-        .groupBy(
-            F.col("a.cap_id").alias("cap_a"), F.col("b.cap_id").alias("cap_b")
-        )
-        .agg(F.count("*").cast("long").alias("n_shared"))
-    )
-    ca = counts.select(F.col("cap_id").alias("cap_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("cap_id").alias("cap_b"), F.col("n").alias("n_b"))
-    return (
-        shared.join(ca, "cap_a").join(cb, "cap_b")
-        .withColumn(
-            "contain_bp",
-            F.expr("CAST((10000 * n_shared) div least(n_a, n_b) AS BIGINT)"),
-        )
-        .where(F.col("contain_bp") >= contain_bp)
-        .select(
-            "cap_a", "cap_b", "n_shared", "n_a", "n_b", "contain_bp",
-            (F.col("cap_b") - F.col("cap_a") == VID_COPY_OFFSET).alias(
-                "is_trim_pair"
-            ),
-        )
-        .orderBy("cap_a", "cap_b")
-    )
+    fhashes = parse_stage(video_captures(videos), "payload", frame_hashes,
+                          "cap_id long, fhash string").distinct()
+    return _containment_pairs(fhashes, "fhash", contain_bp, VID_COPY_OFFSET)
 
 
 # ---------------------------------------------------------------------------
@@ -1290,16 +1060,10 @@ def audio_tone_payload(doc_id: int) -> bytes:
     with period exactly AE_WIN samples, collapsing every full window to one
     fingerprint — useless for discriminating captures; the quadratic term
     makes every window's energy distinct and doc-specific.)"""
-    import numpy as np
-
     n = AUD_TONE_N + doc_id % 100
     j = np.arange(n, dtype=np.int64)
     samples = ((j * j * 7 + doc_id * 13) % 4096 - 2048).astype("<i2")
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, AUD_TONE_RATE, AUD_TONE_RATE * 2, 2, 16)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_wav(1, AUD_TONE_RATE, 16, samples.tobytes())
 
 
 def audio_captures(df: DataFrame) -> DataFrame:
@@ -1307,36 +1071,23 @@ def audio_captures(df: DataFrame) -> DataFrame:
     head-trimmed repost (first AE_WIN samples dropped — REAL re-wrapped
     RIFF bytes, cap_id = doc_id + AUD_COPY_OFFSET).  Docs shorter than one
     window emit no copy (never happens for the tone formula's n >= 200)."""
-    import numpy as np  # noqa: F401 (audio_tone_payload uses it)
+    tones = synthesize(df.where(F.col("doc_id") % 3 == 1), audio_tone_payload)
+    return _captures(tones, _tone_copies, AUD_COPY_OFFSET)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            payloads: list[bytes] = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 3 != 1:
-                    continue
-                full = audio_tone_payload(d)
-                ids.append(d)
-                payloads.append(full)
-                n = AUD_TONE_N + d % 100
-                if n > AE_WIN:
-                    # re-wrap the tail samples as a fresh RIFF (a repost is
-                    # a new file, not a spliced one)
-                    data_off = full.index(b"data") + 8
-                    tail = full[data_off + 2 * AE_WIN:]
-                    fmt = struct.pack("<HHIIHH", 1, 1, AUD_TONE_RATE,
-                                      AUD_TONE_RATE * 2, 2, 16)
-                    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt))
-                            + fmt + b"data" + struct.pack("<I", len(tail))
-                            + tail)
-                    ids.append(d + AUD_COPY_OFFSET)
-                    payloads.append(b"RIFF" + struct.pack("<I", len(body))
-                                    + body)
-            yield pd.DataFrame({"cap_id": ids, "payload": payloads})
 
-    return df.select("doc_id").mapInPandas(fn, "cap_id long, payload binary")
+def _tone_copies(full: bytes) -> list[dict]:
+    """A tone WAV and its repost (copy 1): the samples after the first
+    AE_WIN re-wrapped as a fresh RIFF (a repost is a new file, not a
+    spliced one) — no copy when nothing is left."""
+    data_off, data_end = _wav_layout(full)[3:]
+    if data_off is None:
+        return []
+    copies = [{"copy": 0, "payload": full}]
+    if data_end - data_off > 2 * AE_WIN:
+        tail = full[data_off + 2 * AE_WIN:data_end]
+        copies.append({"copy": 1,
+                       "payload": _riff_wav(1, AUD_TONE_RATE, 16, tail)})
+    return copies
 
 
 def audio_neardup(
@@ -1360,36 +1111,7 @@ def audio_neardup(
     fps = (
         en.select(F.col("doc_id").alias("cap_id"), "energy").distinct()
     )
-    counts = fps.groupBy("cap_id").agg(F.count("*").cast("long").alias("n"))
-    a, b = fps.alias("a"), fps.alias("b")
-    shared = (
-        a.join(
-            b,
-            on=(F.col("a.energy") == F.col("b.energy"))
-            & (F.col("a.cap_id") < F.col("b.cap_id")),
-        )
-        .groupBy(
-            F.col("a.cap_id").alias("cap_a"), F.col("b.cap_id").alias("cap_b")
-        )
-        .agg(F.count("*").cast("long").alias("n_shared"))
-    )
-    ca = counts.select(F.col("cap_id").alias("cap_a"), F.col("n").alias("n_a"))
-    cb = counts.select(F.col("cap_id").alias("cap_b"), F.col("n").alias("n_b"))
-    return (
-        shared.join(ca, "cap_a").join(cb, "cap_b")
-        .withColumn(
-            "contain_bp",
-            F.expr("CAST((10000 * n_shared) div least(n_a, n_b) AS BIGINT)"),
-        )
-        .where(F.col("contain_bp") >= contain_bp)
-        .select(
-            "cap_a", "cap_b", "n_shared", "n_a", "n_b", "contain_bp",
-            (F.col("cap_b") - F.col("cap_a") == AUD_COPY_OFFSET).alias(
-                "is_trim_pair"
-            ),
-        )
-        .orderBy("cap_a", "cap_b")
-    )
+    return _containment_pairs(fps, "energy", contain_bp, AUD_COPY_OFFSET)
 
 
 MIME_LIE_MOD = 7  # doc_id % 7 == 0 declares the WRONG type (the server lie)
@@ -1458,33 +1180,7 @@ def image_dhash(media: DataFrame) -> DataFrame:
 
     Scale: identical to aHash — in-scan Arrow hashing (72 samples per
     image regardless of resolution), one window shuffle for group size."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[str] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                dh = _dhash_of(bytes(payload))
-                if dh is None:
-                    continue
-                ids.append(int(doc_id))
-                hashes.append(dh)
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
-
-    from pyspark.sql import Window
-
-    hashed = media.select("doc_id", "payload").mapInPandas(
-        fn, "doc_id long, dhash string"
-    )
-    return (
-        hashed.withColumn(
-            "n_same",
-            F.count("*").over(Window.partitionBy("dhash")).cast("long"),
-        )
-        .orderBy("doc_id")
-    )
+    return _hash_groups(media, _dhash_of, "dhash")
 
 
 # --- web-image header dimensions (PNG / JPEG / GIF), no decode -------------
@@ -1498,9 +1194,6 @@ def make_png(width: int, height: int) -> bytes:
     CRC) + one literal IDAT stub + IEND.  The IDAT bytes are not a valid
     zlib stream (decode is stubbed repo-wide); every CHUNK is structurally
     valid, which is all a header parser may rely on."""
-    import struct
-    import zlib
-
     def chunk(tag: bytes, body: bytes) -> bytes:
         return (struct.pack(">I", len(body)) + tag + body
                 + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
@@ -1515,22 +1208,24 @@ def make_jpeg(width: int, height: int, com_pad: int = 0) -> bytes:
     length (com_pad filler bytes — exercises the marker walk's
     data-dependent offsets), SOF0 for 3 components, EOI.  No entropy-coded
     scan — dimensions live entirely in SOF0."""
-    import struct
+    return _jpeg(width, height, com_pad, b"")
 
+
+def _jpeg(width: int, height: int, com_pad: int, app1: bytes) -> bytes:
+    """The one JPEG segment writer: SOI, JFIF APP0, `app1` (b"" for none),
+    a COM segment of com_pad filler bytes, SOF0 for 3 components, EOI."""
     app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
         + struct.pack(">HH", 1, 1) + b"\x00\x00"
     com = b"\xff\xfe" + struct.pack(">H", 2 + com_pad) + b"x" * com_pad
     sof = b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" \
         + struct.pack(">HH", height, width) \
         + b"\x01\x22\x00\x02\x11\x01\x03\x11\x01"
-    return b"\xff\xd8" + app0 + com + sof + b"\xff\xd9"
+    return b"\xff\xd8" + app0 + app1 + com + sof + b"\xff\xd9"
 
 
 def make_gif(width: int, height: int) -> bytes:
     """GIF89a header + logical screen descriptor (little-endian u16 dims,
     no global color table) + trailer."""
-    import struct
-
     return (b"GIF89a" + struct.pack("<HH", width, height)
             + b"\x00\x00\x00" + b"\x3b")
 
@@ -1554,16 +1249,7 @@ def synthetic_web_image_payload(doc_id: int) -> bytes:
 def synthetic_web_images(df: DataFrame) -> DataFrame:
     """(doc_id, ...) -> (doc_id, payload binary) of deterministic real
     PNG/JPEG/GIF header bytes (generator plumbing, like synthetic_media)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [synthetic_web_image_payload(int(d))
-                            for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return synthesize(df, synthetic_web_image_payload)
 
 
 def _u16be(pos: str) -> str:
@@ -1681,8 +1367,6 @@ def _phash_table() -> list[list[int]]:
     here and shared verbatim by the Spark kernel and (as an embedded
     literal) the DuckDB oracle, so the transform is exact integer
     arithmetic in both engines — no float DCT, no platform drift."""
-    import math
-
     return [
         [round(math.cos(math.pi * (2 * x + 1) * u / (2 * PHASH_GRID))
                * (1 << PHASH_SHIFT)) for x in range(PHASH_GRID)]
@@ -1705,8 +1389,6 @@ def _phash_of(b: bytes) -> str | None:
     g = _bmp_gray_sample(b, PHASH_GRID, PHASH_GRID)
     if g is None:
         return None
-    import numpy as np
-
     G = np.array(g, dtype=np.int64).reshape(PHASH_GRID, PHASH_GRID)
     C = np.array(PHASH_C, dtype=np.int64)
     T = (C @ G @ C.T).flatten().tolist()
@@ -1728,33 +1410,7 @@ def image_phash(media: DataFrame) -> DataFrame:
     Scale: in-scan Arrow hashing — 1024 samples + one 8x32 x 32x32 x 32x8
     integer matmul per image regardless of resolution; one window shuffle
     for group size.  Same contract as image_ahash/image_dhash."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            hashes: list[str] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                ph = _phash_of(bytes(payload))
-                if ph is None:
-                    continue
-                ids.append(int(doc_id))
-                hashes.append(ph)
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    from pyspark.sql import Window
-
-    hashed = media.select("doc_id", "payload").mapInPandas(
-        fn, "doc_id long, phash string"
-    )
-    return (
-        hashed.withColumn(
-            "n_same",
-            F.count("*").over(Window.partitionBy("phash")).cast("long"),
-        )
-        .orderBy("doc_id")
-    )
+    return _hash_groups(media, _phash_of, "phash")
 
 
 # --- spectral peaks: integer-DFT audio fingerprint primitive ---------------
@@ -1771,8 +1427,6 @@ def _spec_tables() -> tuple[list[list[int]], list[list[int]]]:
     """SPEC_BINS x SPEC_WIN cos/sin tables in 2^7 fixed point, rounded
     ONCE and shared verbatim by the Python kernel and (as embedded
     literals) the DuckDB oracle — the pHash doctrine for a transform."""
-    import math
-
     c = [[round(math.cos(2 * math.pi * k * n / SPEC_WIN) * (1 << SPEC_SHIFT))
           for n in range(SPEC_WIN)] for k in range(1, SPEC_BINS + 1)]
     s = [[round(math.sin(2 * math.pi * k * n / SPEC_WIN) * (1 << SPEC_SHIFT))
@@ -1801,54 +1455,27 @@ def audio_spectral_peaks(
 
     Scale: one Arrow stage — per window a 32x64 integer matvec (two, for
     re and im), no explode, no shuffle; output rows = total_samples/64."""
-    import numpy as np
-
     C = np.array(SPEC_C, dtype=np.int64)
     S = np.array(SPEC_S, dtype=np.int64)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [], "win_idx": [], "peak_bin": [], "peak_mag2": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    continue
-                riff_end = min(8 + struct.unpack_from("<I", b, 4)[0], len(b))
-                data_off = data_size = None
-                i = 12
-                while i + 8 <= riff_end:
-                    cid = b[i:i + 4]
-                    size = struct.unpack_from("<I", b, i + 4)[0]
-                    if cid == b"data":
-                        data_off, data_size = i + 8, size
-                    i += 8 + size + (size & 1)
-                if data_off is None:
-                    continue
-                data_end = min(data_off + data_size, riff_end)
-                n_i16 = max(data_end - data_off, 0) // 2
-                s = np.frombuffer(b, dtype="<i2", count=n_i16,
-                                  offset=data_off).astype(np.int64)
-                for w0 in range(0, (n_i16 // SPEC_WIN) * SPEC_WIN, SPEC_WIN):
-                    x = s[w0:w0 + SPEC_WIN]
-                    re = C @ x
-                    im = S @ x
-                    mag2 = re * re + im * im
-                    k = int(np.argmax(mag2))  # first max = lowest bin
-                    out["doc_id"].append(int(doc_id))
-                    out["win_idx"].append(w0 // SPEC_WIN)
-                    out["peak_bin"].append(k + 1)
-                    out["peak_mag2"].append(int(mag2[k]))
-            yield pd.DataFrame(out)
+    def peaks(b: bytes) -> list[dict]:
+        s = _pcm16(b)
+        if s is None:
+            return []
+        recs = []
+        for w0 in range(0, (len(s) // SPEC_WIN) * SPEC_WIN, SPEC_WIN):
+            x = s[w0:w0 + SPEC_WIN]
+            re = C @ x
+            im = S @ x
+            mag2 = re * re + im * im
+            k = int(np.argmax(mag2))  # first max = lowest bin
+            recs.append({"win_idx": w0 // SPEC_WIN, "peak_bin": k + 1,
+                         "peak_mag2": int(mag2[k])})
+        return recs
 
     return (
-        df.select("doc_id", payload_col)
-        .mapInPandas(
-            fn, "doc_id long, win_idx int, peak_bin int, peak_mag2 long"
-        )
+        parse_stage(df, payload_col, peaks,
+                    "doc_id long, win_idx int, peak_bin int, peak_mag2 long")
         .orderBy("doc_id", "win_idx")
     )
 
@@ -1888,8 +1515,6 @@ def make_jpeg_exif(
     TIFF header in `byte_order` + IFD0 with Make (ASCII, out-of-line) and
     Orientation (SHORT, inline) in ascending tag order), a COM pad
     segment, SOF0, EOI."""
-    import struct
-
     e = "<" if byte_order == "II" else ">"
     make_b = make.encode() + b"\x00"
     # TIFF: header(8) + count(2) + 2 entries(24) + next-IFD(4) = 38
@@ -1904,13 +1529,7 @@ def make_jpeg_exif(
             + make_b)
     app1 = b"\xff\xe1" + struct.pack(">H", 2 + 6 + len(tiff)) \
         + b"Exif\x00\x00" + tiff
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    com = b"\xff\xfe" + struct.pack(">H", 2 + com_pad) + b"x" * com_pad
-    sof = b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" \
-        + struct.pack(">HH", height, width) \
-        + b"\x01\x22\x00\x02\x11\x01\x03\x11\x01"
-    return b"\xff\xd8" + app0 + app1 + com + sof + b"\xff\xd9"
+    return _jpeg(width, height, com_pad, app1)
 
 
 def synthetic_exif_payload(doc_id: int) -> bytes:
@@ -1932,15 +1551,7 @@ def synthetic_exif_payload(doc_id: int) -> bytes:
 
 
 def synthetic_exif_images(df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [synthetic_exif_payload(int(d))
-                            for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return synthesize(df, synthetic_exif_payload)
 
 
 def exif_meta(
@@ -2064,8 +1675,6 @@ def synthetic_mixed_payload(doc_id: int) -> bytes:
     """doc_id -> one of four real container families (%4: html, pdf, png,
     wav) or garbage (%DISPATCH_CORRUPT_MOD) — every structural knob
     doc_id arithmetic the dispatch oracle re-derives."""
-    from pdf_parser_spark.operators.pdflayout import make_pdf
-
     if doc_id % DISPATCH_CORRUPT_MOD == 0:
         return b"\x00\x01\x02"
     k = doc_id % 4
@@ -2081,15 +1690,7 @@ def synthetic_mixed_payload(doc_id: int) -> bytes:
 
 
 def synthetic_mixed_media(df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [synthetic_mixed_payload(int(d))
-                            for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
+    return synthesize(df, synthetic_mixed_payload)
 
 
 def ingest_dispatch(media: DataFrame) -> DataFrame:
@@ -2145,8 +1746,6 @@ def _ingest_dispatch_lazy(
                              r"<title>([^<]*)</title>", 1),
         ).alias("detail"),
     )
-    from pdf_parser_spark.operators.pdflayout import pdf_text
-
     pdfd = pdf_text(base.where(F.col("kind") == "pdf")).select(
         "doc_id", F.lit("pdf").alias("kind"),
         F.concat(F.lit("pages="), "n_pages",

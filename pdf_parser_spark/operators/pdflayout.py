@@ -13,10 +13,13 @@ extraction pipeline's stage).
 
 The module has one of each piece: one PDF writer (`_write_pdf` over
 numbered object bodies, `_stream` for content streams) behind every
-`make_*` synthesizer, one synthesis stage (`_synthesize`) behind every
-`synthetic_*` face, and one per-document parse stage (`_parse_stage`)
-behind every `pdf_*` face — each face differs only in the payload
-function or the `core.pdflayout` parser it plugs in.  No face fuses
+`make_*` synthesizer; the synthesis stage (`bytestage.synthesize`) behind
+every `synthetic_*` face and the per-document parse stage
+(`bytestage.parse_stage`) behind every `pdf_*` face are the Arrow stage
+pair `operators/multimodal.py` uses too — each face differs only in the
+payload function or the `core.pdflayout` parser it plugs in, and orders
+its own output.  A null payload parses as b"" (zero pages: zero rows, or
+the zero-page verdict of the per-document audits).  No face fuses
 several parsers over one frame: every caller runs one face per media
 frame, so a fused kernel would only add work.
 
@@ -30,9 +33,7 @@ an xref off-by-one all mismatch.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +42,7 @@ from pdf_parser_spark.core.pdflayout import (
     page_char_counts, parse_layout, parse_links, parse_outline, parse_tables,
     table_strategy,
 )
+from pdf_parser_spark.operators.bytestage import parse_stage, synthesize
 
 PDF_CORRUPT_MOD = 13   # doc_id % 13 == 0 -> no parseable xref: zero rows
 _NO_XREF = b"%PDF-1.4\nno xref"  # the corrupt payload of every face but one
@@ -165,54 +167,14 @@ def synthetic_pdf_payload(doc_id: int) -> bytes:
     return make_pdf(doc_id)
 
 
-def _synthesize(df: DataFrame, payload_fn) -> DataFrame:
-    """(doc_id, payload) with payload_fn(doc_id) -> bytes — the one
-    synthesis stage: one Arrow batch of doc ids in, their PDFs out."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "payload": [payload_fn(int(d)) for d in pdf["doc_id"]],
-            })
-
-    return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
-
-
 def _no_xref_or(make):
     """payload_fn: the corrupt _NO_XREF bytes for doc_id % PDF_CORRUPT_MOD
     == 0, make(doc_id) otherwise."""
     return lambda d: _NO_XREF if d % PDF_CORRUPT_MOD == 0 else make(d)
 
 
-def _parse_stage(media: DataFrame, payload_col: str, parse, schema: str,
-                 order: list[str]) -> DataFrame:
-    """The one per-document parse stage: ONE Arrow stage over (doc_id,
-    payload) in which parse(bytes) -> records runs per document, each
-    record becoming a row keyed by its doc_id; the columns after doc_id
-    are the schema's own.  Corrupt documents yield whatever their parser
-    makes of them — zero rows for the row parsers (fail-soft, the
-    scanned-doc doctrine)."""
-    cols = [c.split()[0] for c in schema.split(",")]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                for rec in parse(bytes(payload)):
-                    out["doc_id"].append(int(doc_id))
-                    for c in cols[1:]:
-                        out[c].append(rec[c])
-            yield pd.DataFrame(out)
-
-    return (
-        media.select("doc_id", payload_col)
-        .mapInPandas(fn, schema)
-        .orderBy(*order)
-    )
-
-
 def synthetic_pdfs(df: DataFrame) -> DataFrame:
-    return _synthesize(df, synthetic_pdf_payload)
+    return synthesize(df, synthetic_pdf_payload)
 
 
 LAYOUT_SCHEMA = (
@@ -228,8 +190,8 @@ def pdf_layout(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     inflate -> text runs -> line/block segmentation -> heading flags,
     all inside `core.pdflayout.parse_layout`; corrupt documents yield
     zero rows (fail-soft, the scanned-doc doctrine)."""
-    return _parse_stage(media, payload_col, parse_layout, LAYOUT_SCHEMA,
-                        ["doc_id", "page_no", "block_id", "line_id"])
+    return parse_stage(media, payload_col, parse_layout, LAYOUT_SCHEMA
+                       ).orderBy("doc_id", "page_no", "block_id", "line_id")
 
 
 def pdf_text(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -353,7 +315,7 @@ def make_table_pdf(doc_id: int) -> bytes:
 
 
 def synthetic_table_pdfs(df: DataFrame) -> DataFrame:
-    return _synthesize(df, _no_xref_or(make_table_pdf))
+    return synthesize(df, _no_xref_or(make_table_pdf))
 
 
 TABLES_SCHEMA = (
@@ -371,8 +333,8 @@ def pdf_tables(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     3-level nesting is exactly what the reference's table-collapse
     operators (core/tables.py T1+) consume.  Same one-Arrow-stage shape
     as pdf_layout; corrupt documents yield zero rows."""
-    return _parse_stage(media, payload_col, parse_tables, TABLES_SCHEMA,
-                        ["doc_id", "page_no", "table_id", "row", "col"])
+    return parse_stage(media, payload_col, parse_tables, TABLES_SCHEMA
+                       ).orderBy("doc_id", "page_no", "table_id", "row", "col")
 
 
 # --- scanned-document rejection from raw bytes (reference S3) ------------
@@ -411,7 +373,7 @@ def assemble_pdf(pages: list[bytes]) -> bytes:
 
 
 def synthetic_scan_pdfs(df: DataFrame) -> DataFrame:
-    return _synthesize(df, _no_xref_or(make_scan_pdf))
+    return synthesize(df, _no_xref_or(make_scan_pdf))
 
 
 def _scan_verdict(data: bytes) -> list[dict]:
@@ -449,10 +411,10 @@ def pdf_scanned_audit(media: DataFrame,
     per-doc fold is bounded by page count and happens inside the kernel,
     so there is no groupBy, no join, no shuffle at all before the
     presentation sort."""
-    return _parse_stage(
+    return parse_stage(
         media, payload_col, _scan_verdict,
         "doc_id long, n_pages long, n_sparse_pages long, sparse_bp long,"
-        " scanned boolean", ["doc_id"])
+        " scanned boolean").orderBy("doc_id")
 
 
 # --- outline-bearing PDFs: synthesis + the outline Arrow stage -----------
@@ -493,7 +455,7 @@ def make_outline_pdf(doc_id: int) -> bytes:
 def synthetic_outline_pdfs(df: DataFrame) -> DataFrame:
     """%13 corrupt; %5==2 docs have NO outline (plain make_pdf — the
     heuristics-fallback population); everything else carries one."""
-    return _synthesize(df, _no_xref_or(
+    return synthesize(df, _no_xref_or(
         lambda d: make_pdf(d) if d % 5 == 2 else make_outline_pdf(d)))
 
 
@@ -505,9 +467,9 @@ def pdf_outline(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     routes now exist in this engine, which is precisely how a production
     extractor chooses.  Same one-Arrow-stage shape; outline-less and
     corrupt documents yield zero rows."""
-    return _parse_stage(media, payload_col, parse_outline,
-                        "doc_id long, ord int, level int, title string",
-                        ["doc_id", "ord"])
+    return parse_stage(media, payload_col, parse_outline,
+                       "doc_id long, ord int, level int, title string"
+                       ).orderBy("doc_id", "ord")
 
 
 # --- link-annotation PDFs: synthesis + the outlink Arrow stage -----------
@@ -538,7 +500,7 @@ def make_link_pdf(doc_id: int) -> bytes:
 def synthetic_link_pdfs(df: DataFrame) -> DataFrame:
     """%13 corrupt; %7==2 docs carry NO annotations (plain make_pdf);
     else the annotated page."""
-    return _synthesize(df, _no_xref_or(
+    return synthesize(df, _no_xref_or(
         lambda d: make_pdf(d) if d % 7 == 2 else make_link_pdf(d)))
 
 
@@ -549,9 +511,9 @@ def pdf_links(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     channels or every link inside the web's PDFs is invisible).  Same
     one-Arrow-stage shape; non-link annots, non-URI actions, and corrupt
     or annotation-free documents contribute nothing."""
-    return _parse_stage(media, payload_col, parse_links,
-                        "doc_id long, page_no int, ord int, uri string",
-                        ["doc_id", "page_no", "ord"])
+    return parse_stage(media, payload_col, parse_links,
+                       "doc_id long, page_no int, ord int, uri string"
+                       ).orderBy("doc_id", "page_no", "ord")
 
 
 def pdf_table_strategy_audit(media: DataFrame,
@@ -565,6 +527,6 @@ def pdf_table_strategy_audit(media: DataFrame,
     drift is a table-extraction regression you can SEE before any cell
     diff.  One Arrow stage, one record per document — no shuffle before
     the presentation sort."""
-    return _parse_stage(
+    return parse_stage(
         media, payload_col, lambda data: [{"strategy": table_strategy(data)}],
-        "doc_id long, strategy string", ["doc_id"])
+        "doc_id long, strategy string").orderBy("doc_id")

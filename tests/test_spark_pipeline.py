@@ -444,28 +444,41 @@ def test_multimodal_decoders_unit():
     assert out["media_type"] == "unknown" and out["byte_len"] == 0
 
 
-def test_multimodal_resize_and_frames(spark):
-    from pdf_parser_spark.operators.multimodal import resize_images, sample_frames
+_NULL_GUARD_FACES = [
+    ("pdflayout", f) for f in (
+        "pdf_layout", "pdf_text", "pdf_tables", "pdf_scanned_audit",
+        "pdf_outline", "pdf_links", "pdf_table_strategy_audit")
+] + [
+    ("multimodal", f) for f in (
+        "media_features", "transform_media", "sample_ppm_frames",
+        "audio_energy", "audio_segments", "shot_boundaries",
+        "audio_spectral_peaks", "image_ahash", "image_dhash", "image_phash",
+        "image_overlay_captures", "image_neardup", "video_captures",
+        "video_neardup")
+]
 
+
+@pytest.mark.parametrize("module,face", _NULL_GUARD_FACES)
+def test_byte_faces_read_null_payload_as_empty(spark, module, face):
+    """Registry-family guard over every Arrow-backed face of both byte
+    families: a null payload never raises, and its rows are exactly the
+    rows of an empty payload (the shared parse stage reads null as b"").
+    The first output column is the document key (doc_id / cap_id /
+    cap_a)."""
+    import importlib
+
+    mod = importlib.import_module(f"pdf_parser_spark.operators.{module}")
     df = spark.createDataFrame(
-        [(1, b"x" * 2500), (2, b"y" * 9000), (3, None)],
-        "doc_id long, payload binary",
-    )
-    resized = {r["doc_id"]: r for r in resize_images(df, 64, 64).collect()}
-    assert set(resized) == {1, 2, 3}
-    assert all(r["width"] == 64 and r["height"] == 64 for r in resized.values())
-    assert resized[1]["payload"] != resized[2]["payload"]  # content-addressed
-    # deterministic across runs
-    assert resized[1]["payload"] == resize_images(df, 64, 64).collect()[0]["payload"] or True
+        [(1, None), (2, b"")], "doc_id long, payload binary")
+    out = getattr(mod, face)(df)
+    rows = out.collect()
+    key = out.columns[0]
 
-    frames = sample_frames(df, every_ms=1000, max_frames=4).collect()
-    by_doc: dict[int, list] = {}
-    for r in frames:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert len(by_doc[1]) == 2   # 2500 bytes -> 2 frames
-    assert len(by_doc[2]) == 4   # 9000 bytes -> capped at max_frames
-    assert len(by_doc[3]) == 1   # empty payload -> 1 frame minimum
-    assert [r["frame_index"] for r in sorted(by_doc[2], key=lambda r: r["frame_index"])] == [0, 1, 2, 3]
+    def rows_of(d):
+        return sorted((tuple(r)[1:] for r in rows if r[key] == d), key=repr)
+
+    assert {r[key] for r in rows} <= {1, 2}
+    assert rows_of(1) == rows_of(2)
 
 
 def test_streaming_sessionize_matches_batch(spark):
@@ -1939,7 +1952,7 @@ def test_audio_energy_oversized_data_chunk_clamps_to_riff_envelope(spark):
     OVERSIZED length must not square-sum bytes beyond the RIFF envelope
     (trailing junk or a concatenated second payload) as PCM samples — the
     extent clamps to min(declared, envelope end), not to end-of-file.
-    Same rule in decimate_wav."""
+    Same rule in decimate_wav and media_features' duration."""
     import struct
 
     import numpy as np
@@ -1972,6 +1985,11 @@ def test_audio_energy_oversized_data_chunk_clamps_to_riff_envelope(spark):
     assert a == b == [(0, 10, 10 * 1000 * 1000)]
     # decimate_wav: same clamp — corrupt input decimates to the same bytes
     assert M.decimate_wav(corrupt) == M.decimate_wav(clean)
+    # media_features: the same clamp — duration comes from the clamped data
+    # extent (10 samples @ 8 kHz = 1 ms), not the declared 84 bytes (5 ms)
+    durations = {r["doc_id"]: r["duration_ms"]
+                 for r in M.media_features(df).collect()}
+    assert durations == {0: 1, 1: 1}
 
 
 def test_shot_boundaries_sad_and_cuts(spark):
@@ -2099,6 +2117,13 @@ def test_ppm_stream_frame_sampling(spark):
             assert r["data_sum"] == expect
     # the whole stream for doc 5 re-splits to its n_frames frames
     assert len(split_ppm_stream(synthetic_video_payload(5))) == 3 + 5 % 4
+    # the fan-out cap: every frame requested, max_frames=2 kept per doc
+    capped = sample_ppm_frames(synthetic_video(docs), every=1,
+                               max_frames=2).collect()
+    per_doc: dict = {}
+    for r in capped:
+        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + 1
+    assert per_doc == {d: 2 for d in range(8)}
 
 
 def test_streaming_change_feed_state_across_batches(spark, tmp_path):
