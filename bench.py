@@ -586,15 +586,20 @@ def main() -> None:
     # after.  r2's driver bench recorded m_transform=31s / q5=7.2s that
     # reproduce at 0.6s / 1.0s on a quiet host — with these fields the
     # artifact itself shows whether a number was measured under steal.
+    # The control runs one process per Spark core.  value_control_normalized
+    # is docs/s per control chunk/s: a cross-round comparison that does not
+    # depend on the host's load.
     load_start = os.getloadavg()[0]
-    hc_before = host_control(8, iters=300_000)
+    hc_before = host_control(CPUS, iters=300_000)
     elapsed, n, qtimes = run_once(f"local[{CPUS}]", N_DOCS)
-    hc_after = host_control(8, iters=300_000)
+    hc_after = host_control(CPUS, iters=300_000)
     docs_per_sec = n / elapsed
     print(json.dumps({
         "metric": "extraction_docs_per_sec",
         "value": round(docs_per_sec, 2),
         "unit": "docs/sec",
+        "docs_per_sec_per_core": round(docs_per_sec / CPUS, 2),
+        "value_control_normalized": round(docs_per_sec / ((hc_before + hc_after) / 2), 3),
         "queries": {**qtimes, "extraction_pipeline": round(elapsed, 3)},
         "sf": _sf_from_dir(SF_DIR),
         "n_docs": n,

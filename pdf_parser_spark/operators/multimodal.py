@@ -411,17 +411,17 @@ def _transform(payload: bytes) -> dict:
                 "data_sum": int(raster.sum()), "out_len": len(out),
                 "payload": out}
     if payload[:4] == b"RIFF":
-        meta = _decode_wav(payload)
         out = decimate_wav(payload, 2)
-        if meta is None or out is None:
+        if out is None:
             return base
+        channels, rate, bits = _wav_layout(payload)[:3]
         # the layout we emit is canonical: data chunk starts at byte 44
         data = np.frombuffer(out, np.uint8, offset=44)
         return {**base, "media_type": "audio/wav", "out_w": -1,
                 "out_h": -1,
-                "out_rate": meta["sample_rate"] // 2,
-                "n_units": int(len(data) //
-                               (meta["n_channels"] * 2)),
+                "out_rate": rate // 2,
+                # frames, as decimate_wav frames them: any PCM width
+                "n_units": len(data) // (channels * (bits // 8)),
                 "data_sum": int(data.sum()), "out_len": len(out),
                 "payload": out}
     return base

@@ -2087,6 +2087,17 @@ def test_transform_media_spark_stage(spark):
         assert r["data_sum"] >= 0 and r["payload"] is not None
 
 
+def test_transform_wav_units_count_frames_at_any_pcm_width():
+    """n_units is decimate_wav's frame count: a 24-bit stereo WAV of 100
+    frames decimates to 50 frames of 6 bytes (16-bit framing said 75)."""
+    from pdf_parser_spark.operators.multimodal import _riff_wav, _transform
+
+    data = bytes(range(256)) * 2 + bytes(88)  # 600 bytes = 100 x (2 ch x 3 B)
+    r = _transform(_riff_wav(2, 8000, 24, data))
+    assert (r["media_type"], r["out_rate"], r["n_units"]) == ("audio/wav", 4000, 50)
+    assert r["out_len"] == 44 + 50 * 6
+
+
 def test_ppm_stream_frame_sampling(spark):
     from pdf_parser_spark.operators.multimodal import (
         _ppm_header, make_ppm_seeded, sample_ppm_frames, split_ppm_stream,

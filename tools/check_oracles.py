@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 from collections import Counter
 
 import duckdb
@@ -44,6 +45,55 @@ def row_key(row: dict, cols: list[str]):
     return tuple(normalize(row[c]) for c in cols)
 
 
+def check_face(spark, con, cache_manager, oracles, name, fn, sf_dir) -> int:
+    """Run one face on Spark and its oracle on DuckDB, print its verdict
+    line(s); returns how many failures it counted (a LEAK is one more)."""
+    failures = 0
+    spark.catalog.clearCache()
+    try:
+        sdf = fn(spark, sf_dir)
+        srows = [r.asDict(recursive=True) for r in sdf.collect()]
+        scols = sorted(sdf.columns)
+    except Exception as exc:
+        print(f"FAIL  {name}: spark error: {exc}")
+        return failures + 1
+    if not cache_manager.isEmpty():
+        print(f"LEAK  {name}")
+        failures += 1
+    if name not in oracles:
+        print(f"ROWS  {name}: {len(srows)} rows (no oracle — rows-only check)")
+        if len(srows) == 0:
+            print(f"      WARNING: zero rows")
+        return failures
+    try:
+        ddf = con.execute(oracles[name]).fetchdf()
+    except Exception as exc:
+        print(f"FAIL  {name}: duckdb error: {exc}")
+        return failures + 1
+    dcols = sorted(ddf.columns)
+    if scols != dcols:
+        print(f"FAIL  {name}: columns differ spark={scols} duckdb={dcols}")
+        return failures + 1
+    drows = ddf.to_dict("records")
+    if len(srows) != len(drows):
+        print(f"FAIL  {name}: rowcount spark={len(srows)} duckdb={len(drows)}")
+        return failures + 1
+    s_ms = Counter(row_key(r, scols) for r in srows)
+    d_ms = Counter(row_key(r, dcols) for r in drows)
+    if s_ms != d_ms:
+        only_s = list((s_ms - d_ms).items())[:3]
+        only_d = list((d_ms - s_ms).items())[:3]
+        print(f"FAIL  {name}: value mismatch ({sum((s_ms - d_ms).values())} rows differ)")
+        print(f"      cols: {scols}")
+        for k, n in only_s:
+            print(f"      spark-only  x{n}: {k}")
+        for k, n in only_d:
+            print(f"      duckdb-only x{n}: {k}")
+        return failures + 1
+    print(f"OK    {name}: {len(srows)} rows match")
+    return failures
+
+
 def main() -> int:
     sf_dir = (sys.argv[1] if len(sys.argv) > 1
               else os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"))
@@ -67,59 +117,21 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     failures = 0
+    walls = {}
+    t_sweep = time.perf_counter()
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        spark.catalog.clearCache()
-        try:
-            sdf = fn(spark, sf_dir)
-            srows = [r.asDict(recursive=True) for r in sdf.collect()]
-            scols = sorted(sdf.columns)
-        except Exception as exc:
-            print(f"FAIL  {name}: spark error: {exc}")
-            failures += 1
-            continue
-        if not cache_manager.isEmpty():
-            print(f"LEAK  {name}")
-            failures += 1
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle — rows-only check)")
-            if len(srows) == 0:
-                print(f"      WARNING: zero rows")
-            continue
-        try:
-            ddf = con.execute(oracles[name]).fetchdf()
-        except Exception as exc:
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            failures += 1
-            continue
-        dcols = sorted(ddf.columns)
-        if scols != dcols:
-            print(f"FAIL  {name}: columns differ spark={scols} duckdb={dcols}")
-            failures += 1
-            continue
-        drows = ddf.to_dict("records")
-        if len(srows) != len(drows):
-            print(f"FAIL  {name}: rowcount spark={len(srows)} duckdb={len(drows)}")
-            failures += 1
-            continue
-        s_ms = Counter(row_key(r, scols) for r in srows)
-        d_ms = Counter(row_key(r, dcols) for r in drows)
-        if s_ms != d_ms:
-            only_s = list((s_ms - d_ms).items())[:3]
-            only_d = list((d_ms - s_ms).items())[:3]
-            print(f"FAIL  {name}: value mismatch ({sum((s_ms - d_ms).values())} rows differ)")
-            print(f"      cols: {scols}")
-            for k, n in only_s:
-                print(f"      spark-only  x{n}: {k}")
-            for k, n in only_d:
-                print(f"      duckdb-only x{n}: {k}")
-            failures += 1
-            continue
-        print(f"OK    {name}: {len(srows)} rows match")
+        t_face = time.perf_counter()
+        failures += check_face(spark, con, cache_manager, oracles, name, fn, sf_dir)
+        walls[name] = time.perf_counter() - t_face
+    sweep_s = time.perf_counter() - t_sweep
 
     spark.stop()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
+    slowest = sorted(walls.items(), key=lambda kv: -kv[1])[:5]
+    print(f"sweep wall {sweep_s:.1f} s over {len(walls)} faces; slowest: "
+          + ", ".join(f"{n} {w:.1f} s" for n, w in slowest))
     return 1 if failures else 0
 
 
