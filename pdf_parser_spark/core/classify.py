@@ -3,6 +3,10 @@
 Semantics of reference detect.py and pdf_extract.py:253-266.  All are pure
 predicates over the ordered page list of ONE document — in Spark they run
 inside the extraction Arrow batch, never as separate shuffles.
+
+The report-type markers go through the one required-literal gate of
+core/litgate.py: each page is uppercased once, and a marker runs only when
+every one of its literal groups occurs in it.
 """
 
 from __future__ import annotations
@@ -10,30 +14,31 @@ from __future__ import annotations
 import re
 from typing import Sequence
 
+from pdf_parser_spark.core import litgate
+
 # --- report-type scoring (ref detect.py:10-24, 111-129) ---
 
+# each marker with its required-literal groups (core/litgate.py)
 SEC_MARKERS = (
-    re.compile(r"FORM\s+10-[KQ]", re.IGNORECASE),
-    re.compile(r"SECURITIES\s+AND\s+EXCHANGE\s+COMMISSION", re.IGNORECASE),
-    re.compile(r"Central\s+Index\s+Key", re.IGNORECASE),
+    litgate.rule(r"FORM\s+10-[KQ]", (("10-",), ("FORM",)), re.IGNORECASE),
+    litgate.rule(r"SECURITIES\s+AND\s+EXCHANGE\s+COMMISSION",
+                 (("EXCHANGE",), ("COMMISSION",)), re.IGNORECASE),
+    litgate.rule(r"Central\s+Index\s+Key", (("CENTRAL",), ("INDEX",)), re.IGNORECASE),
 )
 
 IFRS_MARKERS = (
-    re.compile(r"(?:EUR|NOK|DKK|SEK|GBP)['’]?000", re.IGNORECASE),
-    re.compile(r"\bIFRS\b"),
-    re.compile(r"(?:CVR|Org\.?\s*(?:nr|no|number))[.\s:]+[\d\s]+", re.IGNORECASE),
-    re.compile(r"Statement\s+of\s+Profit\s+or\s+Loss", re.IGNORECASE),
-    re.compile(r"Statement\s+of\s+Financial\s+Position", re.IGNORECASE),
-    re.compile(r"Oslo\s+B.rs|Oslo\s+Stock\s+Exchange|Euronext", re.IGNORECASE),
+    litgate.rule(r"(?:EUR|NOK|DKK|SEK|GBP)['’]?000",
+                 (("000",), ("EUR", "NOK", "DKK", "SEK", "GBP")), re.IGNORECASE),
+    litgate.rule(r"\bIFRS\b", (("IFRS",),)),
+    litgate.rule(r"(?:CVR|Org\.?\s*(?:nr|no|number))[.\s:]+[\d\s]+",
+                 (("CVR", "ORG"),), re.IGNORECASE),
+    litgate.rule(r"Statement\s+of\s+Profit\s+or\s+Loss",
+                 (("PROFIT",), ("STATEMENT",)), re.IGNORECASE),
+    litgate.rule(r"Statement\s+of\s+Financial\s+Position",
+                 (("POSITION",), ("STATEMENT",)), re.IGNORECASE),
+    litgate.rule(r"Oslo\s+B.rs|Oslo\s+Stock\s+Exchange|Euronext",
+                 (("OSLO", "EURONEXT"),), re.IGNORECASE),
 )
-
-
-# required-literal prefilters per marker: every regex match string must
-# contain the listed literal(s) (uppercased page scan), so a page without
-# them can skip the regex entirely.  None = no cheap literal exists.
-_SEC_LITS = (("FORM", "10-"), ("EXCHANGE",), ("CENTRAL",))
-_IFRS_LITS = (("000",), ("IFRS",), None, ("STATEMENT",), ("STATEMENT",),
-              None)
 
 
 def classify_report_type(page_texts: Sequence[str], scan_pages: int = 10) -> str:
@@ -41,26 +46,20 @@ def classify_report_type(page_texts: Sequence[str], scan_pages: int = 10) -> str
     pages; ties default to 'sec' (ref detect.py:111-129).
 
     Perf (hit sets unchanged): a pattern already in its hit set is never
-    re-searched on later pages, and each remaining pattern first checks its
-    required literal(s) against one uppercased copy of the page."""
+    re-searched on later pages, and each remaining pattern runs only when
+    the page passes its required-literal gate."""
     sec_hits: set[int] = set()
     ifrs_hits: set[int] = set()
     n_sec, n_ifrs = len(SEC_MARKERS), len(IFRS_MARKERS)
     for text in page_texts[:scan_pages]:
         if len(sec_hits) == n_sec and len(ifrs_hits) == n_ifrs:
             break
-        up = text.upper()
-        for i, pat in enumerate(SEC_MARKERS):
-            if i in sec_hits:
-                continue
-            lits = _SEC_LITS[i]
-            if all(l in up for l in lits) and pat.search(text):
+        key = litgate.page_key(text)
+        for i, r in enumerate(SEC_MARKERS):
+            if i not in sec_hits and litgate.search(r, text, key):
                 sec_hits.add(i)
-        for i, pat in enumerate(IFRS_MARKERS):
-            if i in ifrs_hits:
-                continue
-            lits = _IFRS_LITS[i]
-            if (lits is None or all(l in up for l in lits)) and pat.search(text):
+        for i, r in enumerate(IFRS_MARKERS):
+            if i not in ifrs_hits and litgate.search(r, text, key):
                 ifrs_hits.add(i)
     return "ifrs" if len(ifrs_hits) > len(sec_hits) else "sec"
 

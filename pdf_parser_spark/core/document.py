@@ -185,7 +185,7 @@ def _extract_sec(
     if segment.COVER_PAGE in sections:
         cover_text = sections[segment.COVER_PAGE].text
         cover_fields = extract_cover_fields(cover_text)
-        processed[segment.COVER_PAGE] = cover_fields_markdown(cover_text)
+        processed[segment.COVER_PAGE] = cover_fields_markdown(cover_text, cover_fields)
     if pre_text:
         have = {label for label, _ in cover_fields}
         if "Company" not in have or "Ticker" not in have:

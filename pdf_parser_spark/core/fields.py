@@ -1,71 +1,120 @@
 """Cover-page field extraction + scale-hint search (E1-E3 in SURVEY.md §2.6).
 
 Semantics of reference programmatic.py:13-232 and pipeline.py:391-422.
+
+The cover-field patterns go through the one required-literal gate of
+core/litgate.py: the cover text is uppercased once, and a pattern runs only
+when every one of its literal groups occurs in it.
 """
 
 from __future__ import annotations
 
 import re
 
+from pdf_parser_spark.core import litgate
+
 _TICKER_STOPWORDS = ("THE", "LLC", "INC", "NYSE", "EACH", "NAME")
+
+# cover-field patterns, each with its required-literal groups (core/litgate.py)
+_I, _M = re.IGNORECASE, re.MULTILINE
+_FORM = litgate.rule(r"FORM\s+(10-[QK](?:/A)?)", (("10-",), ("FORM",)), _I)
+_REGISTRANT = litgate.rule(
+    r"^[ \t]*(.+)\n\s*\((?:Exact|exact)\s+name\s+of\s+(?:R|r)egistrant",
+    (("EGISTRANT",), ("NAME",)), _M)
+_NOT_A_NAME = re.compile(r"Commission|File\s+Number|\d+-\d+", _I)
+_PERIOD = litgate.rule(
+    r"(?:(?:quarterly|annual)\s+period\s+ended|(?:fiscal\s+)?year\s+ended|period\s+of\s+report)[:\s]+(\w+\s+\d{1,2},?\s+\d{4})",
+    (("ENDED", "REPORT"), ("PERIOD", "YEAR")), _I)
+_FILE_NUMBER = litgate.rule(
+    r"Commission\s+File\s+Number[:\s]+([\d-]+)", (("COMMISSION",), ("NUMBER",)), _I)
+_CIK = litgate.rule(r"(?:Central\s+Index\s+Key|CIK)[:\s]+(\d+)", (("CIK", "CENTRAL"),), _I)
+_SHARES = litgate.rule(
+    r"(\d[\d,]+)\s+shares\s+of\s+common\s+stock", (("SHARES",), ("COMMON",)), _I)
+_TICKER_HEADER = litgate.rule(
+    r"Title\s+of\s+(?:Each|each)\s+(?:Class|class)\s+(?:Trading\s+)?[Ss]ymbol",
+    (("SYMBOL",), ("TITLE",)), _I)
+_EXCHANGE_LINE = re.compile(r"^\s*(?:Name\s+of\s+)?(?:Each\s+)?Exchange", _I)
+_TICKER_IN_LINE = re.compile(
+    r"(?:par\s+value(?:\s+per\s+share)?|per\s+share|stock|warrant[s]?|unit[s]?|right[s]?|debenture[s]?|shares)\s+([A-Z]{1,5})\s"
+)
+_TRADING_SYMBOL = litgate.rule(
+    r"Trading\s+Symbol\(?s?\)?[:\s]+([A-Za-z]{1,5})\b", (("SYMBOL",), ("TRADING",)), _I)
+_EXCHANGE = litgate.rule(
+    r"(?:Name\s+of\s+.*exchange|registered)[:\s]*((?:NYSE|NASDAQ|New\s+York\s+Stock\s+Exchange)[^\n]*)",
+    (("NYSE", "NASDAQ", "STOCK"), ("EXCHANGE", "REGISTERED")), _I)
+_STATE = litgate.rule(
+    r"^(.+)\n\s*\((?:State|state)\s+or\s+other\s+jurisdiction\s+of\s+incorporat",
+    (("JURISDICTION",),), _M)
+_ADDRESS = litgate.rule(
+    r"\((?:Address|address)\s+of\s+principal\s+executive\s+offic",
+    (("EXECUTIVE",), ("PRINCIPAL",)))
+_ADDRESS_STOP = re.compile(
+    r"(?:Commission|File\s+Number|Form\s+10|UNITED\s+STATES|SECURITIES)", _I)
+_ADDRESS_SKIP = re.compile(r"incorporation\b|Identification\s+N[ou]", _I)
+_PHONE = litgate.rule(
+    r"(?:telephone\s+number|phone)[^)]*?(\(?\d{3}\)?[\s.-]\d{3}[\s.-]\d{4})",
+    (("PHONE",),), _I)
+_PRESS_LISTING = litgate.rule(
+    r"([A-Z][\w &.,'-]+?)\s*\((?:NYSE|NASDAQ|Nasdaq|TSX|LSE)[:\s]+([A-Z]{1,5})\)",
+    (("NYSE", "NASDAQ", "TSX", "LSE"),))
+_PRESS_TODAY = litgate.rule(
+    r"((?:The\s+)?[A-Z][\w\s&.,'-]+?(?:Company|Inc\.|Corp(?:oration)?\.?|Ltd\.?|N\.V\.|plc|Group|LP))\s+today\s+(?:reported|announced)",
+    (("TODAY",),))
+_LISTING_TICKER = litgate.rule(
+    r"(?:NYSE|NASDAQ|Nasdaq|TSX|LSE)[:\s]+([A-Z]{1,5})\b",
+    (("NYSE", "NASDAQ", "TSX", "LSE"),))
+_ENDED = litgate.rule(r"ended\s+(\w+\s+\d{1,2},?\s+\d{4})", (("ENDED",),), _I)
 
 
 def extract_cover_fields(text: str) -> list[tuple[str, str]]:
     """Regex projections of SEC cover metadata -> ordered (label, value) pairs
-    (ref programmatic.py:13-219)."""
+    (ref programmatic.py:13-219).  Each text-level pattern runs only when the
+    text passes its required-literal gate (core/litgate.py)."""
     fields: list[tuple[str, str]] = []
+    key = litgate.page_key(text)
 
-    m = re.search(r"FORM\s+(10-[QK](?:/A)?)", text, re.IGNORECASE)
+    def search(r: litgate.Rule) -> re.Match[str] | None:
+        return litgate.search(r, text, key)
+
+    m = search(_FORM)
     if m:
         fields.append(("Filing Type", m.group(1).upper()))
 
-    m = re.search(
-        r"^[ \t]*(.+)\n\s*\((?:Exact|exact)\s+name\s+of\s+(?:R|r)egistrant",
-        text, re.MULTILINE,
-    )
+    m = search(_REGISTRANT)
     if m:
         name = m.group(1).strip()
-        if not re.match(r"Commission|File\s+Number|\d+-\d+", name, re.IGNORECASE):
+        if not _NOT_A_NAME.match(name):
             fields.append(("Company", name))
 
-    m = re.search(
-        r"(?:(?:quarterly|annual)\s+period\s+ended|(?:fiscal\s+)?year\s+ended|period\s+of\s+report)[:\s]+(\w+\s+\d{1,2},?\s+\d{4})",
-        text, re.IGNORECASE,
-    )
+    m = search(_PERIOD)
     if m:
         fields.append(("Period", m.group(1).strip()))
 
-    m = re.search(r"Commission\s+File\s+Number[:\s]+([\d-]+)", text, re.IGNORECASE)
+    m = search(_FILE_NUMBER)
     if m:
         fields.append(("Commission File Number", m.group(1).strip()))
 
-    m = re.search(r"(?:Central\s+Index\s+Key|CIK)[:\s]+(\d+)", text, re.IGNORECASE)
+    m = search(_CIK)
     if m:
         fields.append(("CIK", m.group(1).strip()))
 
-    m = re.search(r"(\d[\d,]+)\s+shares\s+of\s+common\s+stock", text, re.IGNORECASE)
+    m = search(_SHARES)
     if m:
         fields.append(("Shares Outstanding", m.group(1).strip()))
 
     # SEC 12(b) registration table walk for the ticker
     ticker_found = False
-    header = re.search(
-        r"Title\s+of\s+(?:Each|each)\s+(?:Class|class)\s+(?:Trading\s+)?[Ss]ymbol",
-        text, re.IGNORECASE,
-    )
+    header = search(_TICKER_HEADER)
     if header:
         for line in text[header.end():].splitlines()[:10]:
             s = line.strip()
             if not s or "registered" in s.lower():
                 continue
-            if re.match(r"^\s*(?:Name\s+of\s+)?(?:Each\s+)?Exchange", s, re.IGNORECASE):
+            if _EXCHANGE_LINE.match(s):
                 continue
             if s.lower().startswith("indicate"):
                 break
-            tm = re.search(
-                r"(?:par\s+value(?:\s+per\s+share)?|per\s+share|stock|warrant[s]?|unit[s]?|right[s]?|debenture[s]?|shares)\s+([A-Z]{1,5})\s",
-                s,
-            )
+            tm = _TICKER_IN_LINE.search(s)
             if tm:
                 tok = tm.group(1)
                 if tok not in _TICKER_STOPWORDS:
@@ -73,40 +122,31 @@ def extract_cover_fields(text: str) -> list[tuple[str, str]]:
                     ticker_found = True
                     break
     if not ticker_found:
-        m = re.search(r"Trading\s+Symbol\(?s?\)?[:\s]+([A-Za-z]{1,5})\b", text, re.IGNORECASE)
+        m = search(_TRADING_SYMBOL)
         if m and m.group(1).upper() not in ("NAME", "THE", "OF", "EACH", "N", "A"):
             fields.append(("Ticker", m.group(1).strip().upper()))
 
-    m = re.search(
-        r"(?:Name\s+of\s+.*exchange|registered)[:\s]*((?:NYSE|NASDAQ|New\s+York\s+Stock\s+Exchange)[^\n]*)",
-        text, re.IGNORECASE,
-    )
+    m = search(_EXCHANGE)
     if m:
         fields.append(("Exchange", m.group(1).strip().rstrip(".")))
 
-    m = re.search(
-        r"^(.+)\n\s*\((?:State|state)\s+or\s+other\s+jurisdiction\s+of\s+incorporat",
-        text, re.MULTILINE,
-    )
+    m = search(_STATE)
     if m:
         state = m.group(1).strip()
         if len(state) < 60:
             fields.append(("State of Incorporation", state))
 
     # multi-line address assembly above "(Address of principal executive offices"
-    m = re.search(r"\((?:Address|address)\s+of\s+principal\s+executive\s+offic", text)
+    m = search(_ADDRESS)
     if m:
         before = [l.strip() for l in text[: m.start()].splitlines() if l.strip()]
         addr: list[str] = []
         for line in reversed(before[-3:]):
-            if re.match(
-                r"(?:Commission|File\s+Number|Form\s+10|UNITED\s+STATES|SECURITIES)",
-                line, re.IGNORECASE,
-            ):
+            if _ADDRESS_STOP.match(line):
                 break
-            if len(line) > 120 or re.match(r"^\(", line):
+            if len(line) > 120 or line.startswith("("):
                 break
-            if re.search(r"incorporation\b|Identification\s+N[ou]", line, re.IGNORECASE):
+            if _ADDRESS_SKIP.search(line):
                 continue
             addr.insert(0, line)
         if addr:
@@ -114,49 +154,44 @@ def extract_cover_fields(text: str) -> list[tuple[str, str]]:
             if len(address) < 200:
                 fields.append(("Address", address))
 
-    m = re.search(
-        r"(?:telephone\s+number|phone)[^)]*?(\(?\d{3}\)?[\s.-]\d{3}[\s.-]\d{4})",
-        text, re.IGNORECASE,
-    )
+    m = search(_PHONE)
     if m:
         fields.append(("Phone", m.group(1).strip()))
 
     # press-release fallbacks (ref programmatic.py:172-218)
     labels = {label for label, _ in fields}
     if "Company" not in labels:
-        m = re.search(
-            r"([A-Z][\w &.,'-]+?)\s*\((?:NYSE|NASDAQ|Nasdaq|TSX|LSE)[:\s]+([A-Z]{1,5})\)",
-            text,
-        )
+        m = search(_PRESS_LISTING)
         if m:
             fields.append(("Company", m.group(1).strip().rstrip(",")))
             if "Ticker" not in labels:
                 fields.append(("Ticker", m.group(2).strip()))
                 ticker_found = True
         else:
-            m = re.search(
-                r"((?:The\s+)?[A-Z][\w\s&.,'-]+?(?:Company|Inc\.|Corp(?:oration)?\.?|Ltd\.?|N\.V\.|plc|Group|LP))\s+today\s+(?:reported|announced)",
-                text,
-            )
+            m = search(_PRESS_TODAY)
             if m:
                 fields.append(("Company", m.group(1).strip().rstrip(",")))
 
     if "Ticker" not in labels and not ticker_found:
-        m = re.search(r"(?:NYSE|NASDAQ|Nasdaq|TSX|LSE)[:\s]+([A-Z]{1,5})\b", text)
+        m = search(_LISTING_TICKER)
         if m and m.group(1) not in _TICKER_STOPWORDS:
             fields.append(("Ticker", m.group(1).strip()))
 
     if "Period" not in labels:
-        m = re.search(r"ended\s+(\w+\s+\d{1,2},?\s+\d{4})", text, re.IGNORECASE)
+        m = search(_ENDED)
         if m:
             fields.append(("Period", m.group(1).strip()))
 
     return fields
 
 
-def cover_fields_markdown(text: str) -> str:
-    """Field/Value markdown table, raw text fallback (ref programmatic.py:222-232)."""
-    fields = extract_cover_fields(text)
+def cover_fields_markdown(
+    text: str, fields: list[tuple[str, str]] | None = None
+) -> str:
+    """Field/Value markdown table, raw text fallback (ref programmatic.py:222-232).
+    `fields` is extract_cover_fields(text) when the caller already has it."""
+    if fields is None:
+        fields = extract_cover_fields(text)
     if not fields:
         return text
     lines = ["| Field | Value |", "|-------|-------|"]

@@ -6,6 +6,7 @@ north_rule's per-url span output.
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import NamedTuple
 
@@ -48,6 +49,12 @@ def doc_stem(source_name: str) -> str:
     return base or source_name
 
 
+@functools.lru_cache(maxsize=None)
+def _title_heading(title: str) -> re.Pattern[str]:
+    """A leading copy of the section's own heading, stripped from its body."""
+    return re.compile(r"\s*#{0,4}\s*" + re.escape(title) + r"\s*\n*", re.IGNORECASE)
+
+
 def assemble_markdown(
     source_name: str,
     processed: dict[str, str],
@@ -87,8 +94,8 @@ def assemble_markdown(
             continue
         title = titles[key]
         push(f"## {title}\n", key)
-        dup = re.compile(r"^\s*#{0,4}\s*" + re.escape(title) + r"\s*\n*", re.IGNORECASE)
-        push(dup.sub("", content, count=1).lstrip("\n"), key)
+        dup = _title_heading(title).match(content)
+        push((content[dup.end():] if dup else content).lstrip("\n"), key)
         push("", key)
 
     if validation_markdown:

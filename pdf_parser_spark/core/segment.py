@@ -4,6 +4,11 @@ Semantics of reference section_split.py and ifrs_section_split.py.  This is the
 reference's "range partitioning" analog — but because one document is one Spark
 row, the whole splitter is a per-row pure function (no shuffle; a naive
 explode-pages/window design was rejected — SURVEY.md §2.3).
+
+Every page-level heading regex (the 13 SEC keys, the TOC heading, the 5 IFRS
+keys) goes through the one required-literal gate of core/litgate.py: each
+page is uppercased once, and a pattern runs only when every one of its
+literal groups occurs in it, so outputs are those of the ungated loop.
 """
 
 from __future__ import annotations
@@ -11,6 +16,7 @@ from __future__ import annotations
 import re
 from typing import Sequence
 
+from pdf_parser_spark.core import litgate
 from pdf_parser_spark.core.model import Page, Section, Table
 
 # --- SEC section keys ------------------------------------------------------
@@ -48,55 +54,66 @@ SECTION_TITLES = {
 }
 
 # Ordered heading patterns (ref section_split.py:45-143) — order matters for
-# boundary detection.
-SECTION_PATTERNS: list[tuple[str, re.Pattern[str]]] = [
-    (INCOME_STATEMENT, re.compile(
+# boundary detection — each with its required-literal groups (core/litgate.py).
+SECTION_PATTERNS: list[tuple[str, litgate.Rule]] = [
+    (INCOME_STATEMENT, litgate.rule(
         r"(?:CONDENSED\s+)?CONSOLIDATED\s+STATEMENTS?\s+OF\s+(?:INCOME|OPERATIONS|EARNINGS)"
         r"(?:\s+AND\s+COMPREHENSIVE\s+(?:INCOME|LOSS)(?:\s*\(LOSS\))?)?",
+        (("CONSOLIDATED",), ("STATEMENT",), ("INCOME", "OPERATIONS", "EARNINGS")),
         re.IGNORECASE)),
-    (COMPREHENSIVE_INCOME, re.compile(
+    (COMPREHENSIVE_INCOME, litgate.rule(
         r"(?:CONDENSED\s+)?CONSOLIDATED\s+STATEMENTS?\s+OF\s+COMPREHENSIVE\s+(?:INCOME|LOSS)(?:\s*\(LOSS\))?",
+        (("CONSOLIDATED",), ("COMPREHENSIVE",), ("STATEMENT",)),
         re.IGNORECASE)),
-    (BALANCE_SHEET, re.compile(
+    (BALANCE_SHEET, litgate.rule(
         r"(?:CONDENSED\s+)?CONSOLIDATED\s+(?:BALANCE\s+SHEETS?|STATEMENTS?\s+OF\s+FINANCIAL\s+CONDITION)",
+        (("CONSOLIDATED",), ("SHEET", "CONDITION")),
         re.IGNORECASE)),
-    (CASH_FLOW, re.compile(
+    (CASH_FLOW, litgate.rule(
         r"(?:CONDENSED\s+)?CONSOLIDATED\s+STATEMENTS?\s+OF\s+CASH\s+FLOWS?",
+        (("CONSOLIDATED",), ("CASH",), ("FLOW",)),
         re.IGNORECASE)),
-    (STOCKHOLDERS_EQUITY, re.compile(
+    (STOCKHOLDERS_EQUITY, litgate.rule(
         r"(?:CONDENSED\s+)?CONSOLIDATED\s+STATEMENTS?\s+OF\s+"
         r"(?:(?:STOCKHOLDERS|SHAREHOLDERS|CHANGES\s+IN\s+(?:STOCKHOLDERS|SHAREHOLDERS))['’]?\s*(?:EQUITY|DEFICIT)"
         r"|CHANGES\s+IN\s+EQUITY)",
+        (("CONSOLIDATED",), ("EQUITY", "DEFICIT"), ("STATEMENT",)),
         re.IGNORECASE)),
-    (NOTES, re.compile(
+    (NOTES, litgate.rule(
         r"NOTES\s+TO\s+(?:THE\s+)?(?:CONDENSED\s+)?(?:CONSOLIDATED\s+)?(?:CONDENSED\s+)?(?:INTERIM\s+)?FINANCIAL\s+STATEMENTS",
+        (("NOTES",), ("FINANCIAL",)),
         re.IGNORECASE)),
-    (MDA, re.compile(
+    (MDA, litgate.rule(
         r"(?:Item\s+(?:2|7)[.\s]*)?MANAGEMENT['’]?S\s+DISCUSSION\s+AND\s+ANALYSIS"
         r"(?:\s+OF\s+FINANCIAL\s+CONDITION\s+AND\s+RESULTS\s+OF\s+OPERATIONS)?",
+        (("MANAGEMENT",), ("DISCUSSION",)),
         re.IGNORECASE)),
-    (MARKET_RISK, re.compile(
+    (MARKET_RISK, litgate.rule(
         r"QUANTITATIVE\s+AND\s+QUALITATIVE\s+DISCLOSURES?\s+ABOUT\s+MARKET\s+RISK",
+        (("QUANTITATIVE",),),
         re.IGNORECASE)),
-    (CONTROLS, re.compile(
-        r"(?:Item\s+4[.\s]*)?CONTROLS\s+AND\s+PROCEDURES", re.IGNORECASE)),
-    (LEGAL_PROCEEDINGS, re.compile(
-        r"Item\s+(?:1|3)[.\s]+LEGAL\s+PROCEEDINGS", re.IGNORECASE)),
-    (RISK_FACTORS, re.compile(r"Item\s+1A[.\s]+RISK\s+FACTORS", re.IGNORECASE)),
-    (EXHIBITS, re.compile(r"Item\s+(?:6|15|16)[.\s]+EXHIBITS", re.IGNORECASE)),
-    (SIGNATURES, re.compile(r"^SIGNATURES?\s*$", re.IGNORECASE | re.MULTILINE)),
+    (CONTROLS, litgate.rule(
+        r"(?:Item\s+4[.\s]*)?CONTROLS\s+AND\s+PROCEDURES",
+        (("CONTROLS",), ("PROCEDURES",)),
+        re.IGNORECASE)),
+    (LEGAL_PROCEEDINGS, litgate.rule(
+        r"Item\s+(?:1|3)[.\s]+LEGAL\s+PROCEEDINGS",
+        (("LEGAL",), ("ITEM",)),
+        re.IGNORECASE)),
+    (RISK_FACTORS, litgate.rule(
+        r"Item\s+1A[.\s]+RISK\s+FACTORS",
+        (("FACTORS",), ("RISK",), ("ITEM",)),
+        re.IGNORECASE)),
+    (EXHIBITS, litgate.rule(
+        r"Item\s+(?:6|15|16)[.\s]+EXHIBITS",
+        (("EXHIBITS",), ("ITEM",)),
+        re.IGNORECASE)),
+    (SIGNATURES, litgate.rule(
+        r"^SIGNATURES?\s*$",
+        (("SIGNATURE",),),
+        re.IGNORECASE | re.MULTILINE)),
 ]
-
-_PATTERN_BY_KEY = dict(SECTION_PATTERNS)
-
-# Superset prefilter: every SECTION_PATTERNS regex REQUIRES one of these
-# literals (CONSOLIDATED for the five statements, NOTES, MANAGEMENT,
-# QUANTITATIVE, CONTROLS, Item for the Item-prefixed keys, SIGNATURE), so a
-# page with no hint can match no pattern — one C-regex scan replaces 13.
-_SECTION_HINT = re.compile(
-    r"CONSOLIDATED|NOTES|MANAGEMENT|QUANTITATIVE|CONTROLS|ITEM|SIGNATURE",
-    re.IGNORECASE,
-)
+_RULE_BY_KEY = dict(SECTION_PATTERNS)
 
 # Per-key page caps (ref section_split.py:428-435)
 _MAX_PAGES = {
@@ -110,7 +127,8 @@ _MAX_PAGES = {
 
 # --- TOC detection (ref section_split.py:155-299) ---------------------------
 
-_TOC_HEADING = re.compile(r"TABLE\s+OF\s+CONTENTS", re.IGNORECASE)
+_TOC_HEADING = litgate.rule(
+    r"TABLE\s+OF\s+CONTENTS", (("CONTENTS",), ("TABLE",)), re.IGNORECASE)
 _TRAILING_PAGE_NUM = re.compile(r"\s+\d{1,3}\s*$")
 _LEADING_PAGE_NUM = re.compile(r"^\s*\d{1,3}\s+[A-Z]")
 _DOTTED_LEADER = re.compile(r"\.{3,}\s*\d{1,3}\s*$")
@@ -144,8 +162,13 @@ def _has_toc_entries(text: str) -> bool:
     return _count_reaches(lines, _LEADING_PAGE_NUM, 5)
 
 
+def _admitted(key: str | None) -> list[tuple[str, re.Pattern[str]]]:
+    """SECTION_PATTERNS in order, minus those the page's gate rules out."""
+    return [(k, r.pattern) for k, r in SECTION_PATTERNS if litgate.admits(key, r.groups)]
+
+
 def _toc_verdict(
-    text: str, assume_hint: bool = False
+    text: str, key: str | None, admitted: list[tuple[str, re.Pattern[str]]]
 ) -> tuple[bool, frozenset[str] | None]:
     """(is_toc, fallback_hits) — the is_toc half is exactly the reference
     predicate (ref section_split.py:245-299); fallback_hits is the set of
@@ -153,12 +176,14 @@ def _toc_verdict(
     branch scanned to completion (a non-TOC page scans all patterns
     anyway), letting _find_starts skip finditer on the patterns that
     provably cannot match.  None when the fallback never completed a full
-    scan (heading branch decided, or the >=4-hit early exit fired)."""
-    has_heading = bool(_TOC_HEADING.search(text))
+    scan (heading branch decided, or the >=4-hit early exit fired).
+    `key`/`admitted` are the page's gate key and _admitted(key): a pattern
+    the gate rules out cannot hit, so the fallback searches only the rest."""
+    has_heading = litgate.search(_TOC_HEADING, text, key) is not None
     if has_heading and _has_toc_entries(text):
         lines = text.strip().splitlines()
         header_area = any(
-            _TOC_HEADING.search(ln) and len(ln.strip()) < 60 for ln in lines[:3]
+            _TOC_HEADING.pattern.search(ln) and len(ln.strip()) < 60 for ln in lines[:3]
         )
         has_financial = bool(_TOC_FINANCIAL.search(text))
         if header_area and has_financial:
@@ -169,11 +194,8 @@ def _toc_verdict(
             return True, None
         return True, None  # header-area TOC w/o financial data, or buried TOC
     # fallback: a page matching >=4 section patterns is likely a TOC
-    if not assume_hint and not _SECTION_HINT.search(text):
-        return False, frozenset()  # no pattern can match (hint is a
-        # required-literal superset)
     hits: list[str] = []
-    for k, pat in SECTION_PATTERNS:
+    for k, pat in admitted:
         if pat.search(text):
             hits.append(k)
             if len(hits) >= 4:
@@ -184,7 +206,8 @@ def _toc_verdict(
 def is_toc_page(text: str) -> bool:
     """Rich TOC predicate with running-header and financial-data rescue
     (ref section_split.py:245-299)."""
-    return _toc_verdict(text)[0]
+    key = litgate.page_key(text)
+    return _toc_verdict(text, key, _admitted(key))[0]
 
 
 # --- heading validation (ref section_split.py:163-223) ----------------------
@@ -240,21 +263,23 @@ def _find_starts(pages: Sequence[Page]) -> list[tuple[str, int]]:
     found: list[tuple[str, int]] = []
     seen: set[str] = set()
     for page in pages:
-        if not _SECTION_HINT.search(page.text):
-            continue  # no heading pattern can match; skips TOC check too
-            # (a TOC page always carries section hints, so nothing is lost)
-        is_toc, hits = _toc_verdict(page.text, assume_hint=True)
+        key = litgate.page_key(page.text)
+        admitted = _admitted(key)
+        if all(k in seen for k, _ in admitted):
+            continue  # nothing left to find here; skips the TOC check too
+            # (it only decides whether this page's matches count)
+        is_toc, hits = _toc_verdict(page.text, key, admitted)
         if is_toc:
             continue  # the reference's "partition pruning" analog
-        for key, pattern in SECTION_PATTERNS:
-            if key in seen:
+        for k, pattern in admitted:
+            if k in seen:
                 continue
-            if hits is not None and key not in hits:
+            if hits is not None and k not in hits:
                 continue  # search already proved no match; finditer is a no-op
             for m in pattern.finditer(page.text):
                 if is_heading_match(page.text, m):
-                    found.append((key, page.page_number))
-                    seen.add(key)
+                    found.append((k, page.page_number))
+                    seen.add(k)
                     break
     found.sort(key=lambda kv: kv[1])
     return found
@@ -305,11 +330,14 @@ def split_sec_sections(pages: Sequence[Page]) -> dict[str, Section]:
         mda_pg = starts[mda_i][1]
         nxt_pg = starts[mda_i + 1][1] if mda_i + 1 < len(starts) else last_page + 1
         if nxt_pg - mda_pg <= 1:
-            pat = _PATTERN_BY_KEY[MDA]
+            pat, groups = _RULE_BY_KEY[MDA]
             done = False
             for page in pages:
                 if done or page.page_number <= mda_pg:
                     continue
+                key = litgate.page_key(page.text)
+                if not litgate.admits(key, groups):
+                    continue  # no MDA match here: finditer would find nothing
                 if is_toc_page(page.text):
                     continue
                 for m in pat.finditer(page.text):
@@ -346,12 +374,12 @@ def split_sec_sections(pages: Sequence[Page]) -> dict[str, Section]:
             if page.page_number == start_pg and i > 0:
                 prev_pg = starts[i - 1][1]
                 if prev_pg <= start_pg:
-                    _, from_hdr = _split_at_header(text, _PATTERN_BY_KEY[key])
+                    _, from_hdr = _split_at_header(text, _RULE_BY_KEY[key].pattern)
                     if from_hdr:
                         text = from_hdr
             # shared end page: trim text to stop before the NEXT header
             if next_key and next_pg == page.page_number and next_pg == end_pg:
-                before, _ = _split_at_header(text, _PATTERN_BY_KEY[next_key])
+                before, _ = _split_at_header(text, _RULE_BY_KEY[next_key].pattern)
                 if before.strip():
                     text = before
             texts.append(text)
@@ -380,22 +408,24 @@ IFRS_SECTION_TITLES = {
 
 _IFRS_PREFIX = r"(?:(?:Interim\s+)?(?:Condensed\s+)?(?:Consolidated\s+)?)"
 
-IFRS_SECTION_PATTERNS: list[tuple[str, re.Pattern[str]]] = [
-    (IFRS_INCOME_STATEMENT, re.compile(
-        _IFRS_PREFIX + r"Statement\s+of\s+Profit\s+or\s+Loss", re.IGNORECASE)),
-    (IFRS_BALANCE_SHEET, re.compile(
+IFRS_SECTION_PATTERNS: list[tuple[str, litgate.Rule]] = [
+    (IFRS_INCOME_STATEMENT, litgate.rule(
+        _IFRS_PREFIX + r"Statement\s+of\s+Profit\s+or\s+Loss",
+        (("PROFIT",), ("STATEMENT",)), re.IGNORECASE)),
+    (IFRS_BALANCE_SHEET, litgate.rule(
         _IFRS_PREFIX + r"(?:Balance\s+Sheet|Statement\s+of\s+Financial\s+Position)",
-        re.IGNORECASE)),
-    (IFRS_EQUITY_CHANGES, re.compile(
-        _IFRS_PREFIX + r"Statement\s+of\s+Changes\s+in\s+Equity", re.IGNORECASE)),
-    (IFRS_CASH_FLOW, re.compile(
-        _IFRS_PREFIX + r"Statement\s+of\s+Cash\s+Flows?", re.IGNORECASE)),
-    (IFRS_NOTES, re.compile(
+        (("SHEET", "POSITION"),), re.IGNORECASE)),
+    (IFRS_EQUITY_CHANGES, litgate.rule(
+        _IFRS_PREFIX + r"Statement\s+of\s+Changes\s+in\s+Equity",
+        (("EQUITY",), ("CHANGES",)), re.IGNORECASE)),
+    (IFRS_CASH_FLOW, litgate.rule(
+        _IFRS_PREFIX + r"Statement\s+of\s+Cash\s+Flows?",
+        (("CASH",), ("FLOW",)), re.IGNORECASE)),
+    (IFRS_NOTES, litgate.rule(
         r"Notes\s+to\s+(?:the\s+)?(?:Condensed\s+)?(?:Consolidated\s+)?Financial\s+Statements",
-        re.IGNORECASE)),
+        (("NOTES",), ("FINANCIAL",)), re.IGNORECASE)),
 ]
-
-_IFRS_PATTERN_BY_KEY = dict(IFRS_SECTION_PATTERNS)
+_IFRS_RULE_BY_KEY = dict(IFRS_SECTION_PATTERNS)
 _PARENT_COMPANY = re.compile(r"Parent\s+Company", re.IGNORECASE)
 
 
@@ -420,10 +450,11 @@ def split_ifrs_sections(pages: Sequence[Page]) -> dict[str, Section]:
     for page in pages:
         if _is_divider(page) or _is_parent_company(page):
             continue
-        for key, pattern in IFRS_SECTION_PATTERNS:
+        page_key = litgate.page_key(page.text)
+        for key, r in IFRS_SECTION_PATTERNS:
             if key in seen:
                 continue
-            if pattern.search(page.text):
+            if litgate.search(r, page.text, page_key):
                 starts.append((key, page.page_number))
                 seen.add(key)
     starts.sort(key=lambda kv: kv[1])
@@ -451,11 +482,11 @@ def split_ifrs_sections(pages: Sequence[Page]) -> dict[str, Section]:
             if _is_divider(page) and page.page_number != start_pg:
                 continue
             if page.page_number == start_pg and i > 0 and starts[i - 1][1] == start_pg:
-                _, from_hdr = _split_at_header(text, _IFRS_PATTERN_BY_KEY[key])
+                _, from_hdr = _split_at_header(text, _IFRS_RULE_BY_KEY[key].pattern)
                 if from_hdr:
                     text = from_hdr
             if next_key and next_pg == page.page_number and next_pg == end_pg:
-                before, _ = _split_at_header(text, _IFRS_PATTERN_BY_KEY[next_key])
+                before, _ = _split_at_header(text, _IFRS_RULE_BY_KEY[next_key].pattern)
                 if before.strip():
                     text = before
             texts.append(text)

@@ -420,3 +420,108 @@ def test_fast_dom_equals_htmlparser():
     ]
     for s in snippets:
         assert pages_via(H._fast_dom, s) == pages_via(H._reference_dom, s), repr(s)
+
+
+# --- required-literal gate (core/litgate.py) ---
+
+def _gate_modules():
+    """Import every module that registers gated patterns; the rule list."""
+    from pdf_parser_spark.core import classify, fields, litgate, segment  # noqa: F401
+
+    return litgate.RULES
+
+
+def test_gate_exception_set_matches_unicode():
+    """(a) The characters that case-match a literal character under re.I but
+    do not uppercase to it are exactly the hardcoded UNGATED_CHARS, and a
+    page holding one of them is not gated."""
+    import re
+    import string
+    import sys
+
+    from pdf_parser_spark.core import litgate
+
+    literal_chars = string.ascii_lowercase + string.digits + "-"
+    cls = re.compile("[" + re.escape(literal_chars) + "]", re.IGNORECASE)
+    derived = set()
+    for cp in range(sys.maxunicode + 1):
+        ch = chr(cp)
+        if not cls.fullmatch(ch):
+            continue
+        partner = next(
+            p for p in literal_chars if re.fullmatch(re.escape(p), ch, re.IGNORECASE)
+        )
+        if ch.upper() != partner.upper():
+            derived.add(ch)
+    assert derived == set(litgate.UNGATED_CHARS)
+    for ch in derived:
+        assert litgate.page_key(f"RIS{ch} FACTORS") is None
+    nbsp_curly = "Management\u2019s\u00a0Discussion"
+    assert litgate.page_key(nbsp_curly) == nbsp_curly.upper()
+    for r in _gate_modules():
+        for group in r.groups:
+            assert group
+            for lit in group:
+                assert re.fullmatch(r"[A-Z0-9-]+", lit), (r.pattern.pattern, lit)
+
+
+def test_gate_admits_every_match_in_corpus():
+    """(b) Over every page of two generated corpora (html and text paths),
+    a gated pattern that matches a page always passes the page's gate."""
+    from pdf_parser_spark.core import litgate
+    from pdf_parser_spark.core.document import pages_from_html, pages_from_text
+    from pdf_parser_spark.sources.corpus import generate_corpus
+
+    rules = _gate_modules()
+    texts: set[str] = set()
+    for seed in (42, 7):
+        for row in generate_corpus(2000, seed):
+            for pages in (pages_from_html(row["html"]), pages_from_text(row["text"])):
+                texts.update(p.text for p in pages)
+    hits = 0
+    for text in texts:
+        key = litgate.page_key(text)
+        for r in rules:
+            if r.pattern.search(text):
+                hits += 1
+                assert litgate.admits(key, r.groups), (r.pattern.pattern, text[:200])
+    assert hits
+
+
+def _ungated(monkeypatch):
+    from pdf_parser_spark.core import litgate
+
+    monkeypatch.setattr(litgate, "page_key", lambda text: None)
+
+
+def test_gate_same_output_as_ungated_loop(monkeypatch):
+    """(c) Pages with a Kelvin sign, a dotted capital I, a curly apostrophe
+    or an NBSP in a heading give the same sections, report type and cover
+    fields as the ungated loop over the patterns."""
+    sec_pages = [
+        _page(1, "UNITED STATES\nSECURITIES AND EXCHANGE COMMISSION\nFORM 10-\u212a\n"
+                 "Acme Corp\n(Exact name of registrant as specified in its charter)\n"
+                 "Central \u0130ndex Key: 0000123"),
+        _page(2, "Item 1A. RIS\u212a FACTORS\nWe face risks."),
+        _page(3, "\u0130TEM 7. MANAGEMENT\u2019S DISCUSSION AND ANALYSIS\nRevenue grew."),
+        _page(4, "CONSOLIDATED\u00a0BALANCE\u00a0SHEETS\nTotal assets $ 5"),
+        _page(5, "\u0130TEM 3. LEGAL PROCEEDINGS\nNone."),
+    ]
+    ifrs_pages = ["Consolidated Statement of Prof\u0130t or Loss\nRevenue 10",
+                  "Statement of F\u0130nancial Pos\u0130tion\nAssets 5"]
+    cover = sec_pages[0].text
+
+    def run():
+        return (split_sec_sections(sec_pages),
+                classify_report_type([p.text for p in sec_pages]),
+                classify_report_type(ifrs_pages),
+                extract_cover_fields(cover))
+
+    gated = run()
+    with monkeypatch.context() as m:
+        _ungated(m)
+        ungated = run()
+    assert set(ungated[0]) >= {"risk_factors", "mda", "balance_sheet", "legal_proceedings"}
+    assert ungated[2] == "ifrs"
+    assert ("CIK", "0000123") in ungated[3]
+    assert gated == ungated

@@ -6,6 +6,9 @@ sides).  The session cache is cleared before each face; a face that leaves
 an entry in it (a persisted frame nobody unpersists) prints LEAK and counts
 as a failure.
 
+The last line gives the sweep wall and the five slowest faces, each split
+into its Spark time (plan, run, collect) and its DuckDB oracle time.
+
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
 
@@ -45,11 +48,14 @@ def row_key(row: dict, cols: list[str]):
     return tuple(normalize(row[c]) for c in cols)
 
 
-def check_face(spark, con, cache_manager, oracles, name, fn, sf_dir) -> int:
+def check_face(spark, con, cache_manager, oracles, name, fn, sf_dir,
+               split: dict[str, float]) -> int:
     """Run one face on Spark and its oracle on DuckDB, print its verdict
-    line(s); returns how many failures it counted (a LEAK is one more)."""
+    line(s); returns how many failures it counted (a LEAK is one more).
+    `split` receives the face's Spark and DuckDB seconds."""
     failures = 0
     spark.catalog.clearCache()
+    t0 = time.perf_counter()
     try:
         sdf = fn(spark, sf_dir)
         srows = [r.asDict(recursive=True) for r in sdf.collect()]
@@ -57,6 +63,8 @@ def check_face(spark, con, cache_manager, oracles, name, fn, sf_dir) -> int:
     except Exception as exc:
         print(f"FAIL  {name}: spark error: {exc}")
         return failures + 1
+    finally:
+        split["spark"] = time.perf_counter() - t0
     if not cache_manager.isEmpty():
         print(f"LEAK  {name}")
         failures += 1
@@ -65,11 +73,14 @@ def check_face(spark, con, cache_manager, oracles, name, fn, sf_dir) -> int:
         if len(srows) == 0:
             print(f"      WARNING: zero rows")
         return failures
+    t0 = time.perf_counter()
     try:
         ddf = con.execute(oracles[name]).fetchdf()
     except Exception as exc:
         print(f"FAIL  {name}: duckdb error: {exc}")
         return failures + 1
+    finally:
+        split["duckdb"] = time.perf_counter() - t0
     dcols = sorted(ddf.columns)
     if scols != dcols:
         print(f"FAIL  {name}: columns differ spark={scols} duckdb={dcols}")
@@ -118,12 +129,15 @@ def main() -> int:
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     failures = 0
     walls = {}
+    splits: dict[str, dict[str, float]] = {}
     t_sweep = time.perf_counter()
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t_face = time.perf_counter()
-        failures += check_face(spark, con, cache_manager, oracles, name, fn, sf_dir)
+        splits[name] = {"spark": 0.0, "duckdb": 0.0}
+        failures += check_face(spark, con, cache_manager, oracles, name, fn, sf_dir,
+                               splits[name])
         walls[name] = time.perf_counter() - t_face
     sweep_s = time.perf_counter() - t_sweep
 
@@ -131,7 +145,8 @@ def main() -> int:
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     slowest = sorted(walls.items(), key=lambda kv: -kv[1])[:5]
     print(f"sweep wall {sweep_s:.1f} s over {len(walls)} faces; slowest: "
-          + ", ".join(f"{n} {w:.1f} s" for n, w in slowest))
+          + ", ".join(f"{n} {w:.1f} s (spark {splits[n]['spark']:.1f} s, "
+                      f"duckdb {splits[n]['duckdb']:.1f} s)" for n, w in slowest))
     return 1 if failures else 0
 
 
